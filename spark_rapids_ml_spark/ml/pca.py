@@ -116,6 +116,15 @@ def _sum_partials(partials: DataFrame, n_cols: int) -> tuple[int, np.ndarray, np
     return n, colsum, gram
 
 
+def _probe_n_cols(df: DataFrame, input_col: str) -> int:
+    """Vector width from the first row (one or two Spark jobs); raises
+    on empty input."""
+    first = df.select(input_col).first()
+    if first is None:
+        raise ValueError("empty input")
+    return len(first[0])
+
+
 def compute_column_means(df: DataFrame, input_col: str) -> tuple[np.ndarray, int]:
     """Distributed column mean in one colsum-only linear scan — the
     analogue of Statistics.colStats → mean (RapidsRowMatrix.scala:
@@ -124,7 +133,10 @@ def compute_column_means(df: DataFrame, input_col: str) -> tuple[np.ndarray, int
 
     Returns (mean: d ndarray, n_rows: int).
     """
+    return _column_means(df, input_col, _probe_n_cols(df, input_col))
 
+
+def _column_means(df: DataFrame, input_col: str, n_cols: int) -> tuple[np.ndarray, int]:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         n = 0
         s = None
@@ -140,10 +152,6 @@ def compute_column_means(df: DataFrame, input_col: str) -> tuple[np.ndarray, int
                 {"packed": [np.concatenate(([float(n)], s)).tolist()]}
             )
 
-    first = df.select(input_col).first()
-    if first is None:
-        raise ValueError("empty input")
-    n_cols = len(first[0])
     partials = df.select(input_col).mapInPandas(
         run, StructType([StructField("packed", ArrayType(DoubleType()))])
     )
@@ -184,7 +192,11 @@ def compute_covariance_spr(df: DataFrame, input_col: str, mean_centering: bool =
 
     Returns (cov: d×d ndarray, mean: d ndarray, n_rows: int).
     """
-    mean, n_rows = compute_column_means(df, input_col)
+    return _covariance_spr(df, input_col, mean_centering, _probe_n_cols(df, input_col))
+
+
+def _covariance_spr(df: DataFrame, input_col: str, mean_centering: bool, n_cols: int):
+    mean, n_rows = _column_means(df, input_col, n_cols)
     if n_rows < 2:
         raise ValueError("need at least 2 rows")
     d = len(mean)
@@ -239,10 +251,10 @@ def compute_covariance(df: DataFrame, input_col: str, mean_centering: bool = Tru
 
     Returns (cov: n×n ndarray, mean: n ndarray, n_rows: int).
     """
-    first = df.select(input_col).first()
-    if first is None:
-        raise ValueError("empty input")
-    n_cols = len(first[0])
+    return _covariance(df, input_col, mean_centering, _probe_n_cols(df, input_col))
+
+
+def _covariance(df: DataFrame, input_col: str, mean_centering: bool, n_cols: int):
     if n_cols > MAX_COLS:
         raise ValueError(f"n_cols {n_cols} exceeds bound {MAX_COLS}")
 
@@ -303,13 +315,12 @@ class PCA:
         from spark_rapids_ml_spark.plans.profiling import span
 
         self.transform_schema(df.schema)  # fail fast, zero jobs
-        first = df.select(self.input_col).first()
-        n_features = len(first[0])
+        n_features = _probe_n_cols(df, self.input_col)
         if self.k > n_features:  # RapidsPCA.scala:117-119
             raise ValueError(f"k={self.k} > numFeatures={n_features}")
-        cov_fn = compute_covariance if self.backend == "moments" else compute_covariance_spr
+        cov_fn = _covariance if self.backend == "moments" else _covariance_spr
         with span(df.sparkSession, f"pca.fit.covariance[{self.backend}]"):
-            cov, mean, n_rows = cov_fn(df, self.input_col, self.mean_centering)
+            cov, mean, n_rows = cov_fn(df, self.input_col, self.mean_centering, n_features)
         # symmetric eigendecomposition — eigh is the numpy analogue of
         # the reference's raft eigDC on the PSD covariance
         eigvals, eigvecs = np.linalg.eigh(cov)

@@ -10,6 +10,20 @@ Local tests run on ``local[N]`` but every knob is chosen for the
   batch boundary, RapidsRowMatrix.scala:177-199).
 - Shuffle partitions sized for the local run; at cluster scale AQE
   coalesces from a deliberately-high initial number instead.
+- Python workers start from ``spark_rapids_ml_spark.worker_daemon``
+  (``spark.python.daemon.module``), not ``pyspark.daemon``. Below
+  CPython 3.13, ``pyspark.worker_util.setup_spark_files`` makes every
+  task re-read the central directory of ``pyspark.zip`` (1,328 files,
+  once per zipimporter over it): about 0.2 s per task, even on a reused
+  worker. The daemon re-reads an archive only when its
+  ``(st_mtime_ns, st_size)`` changed since its last read, then runs
+  ``pyspark.daemon.manager()``; forked workers inherit the rule. It is
+  active when a UDF sees ``zipimport.zipimporter.invalidate_caches``
+  as ``spark_rapids_ml_spark.worker_daemon.invalidate_caches``
+  (``tests/test_worker_daemon.py``). The package's parent directory is
+  put on the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``,
+  merged with a caller's value), so the daemon starts whatever the
+  driver's working directory.
 """
 
 from __future__ import annotations
@@ -39,6 +53,8 @@ def clamped_shuffle(spark: SparkSession, n: int):
         spark.conf.set(key, prev)
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding the spark_rapids_ml_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -62,6 +78,8 @@ def get_spark(
         # --- Arrow for all Python UDF traffic ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # Python workers fork from the stat-gated daemon (module docstring)
+        .config("spark.python.daemon.module", "spark_rapids_ml_spark.worker_daemon")
         # broadcast anything under 32 MB (dimension tables)
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # timestamps: keep parquet int96-free, stable TZ
@@ -74,6 +92,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(filter(None, [_PACKAGE_PARENT, conf.get(key)]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
