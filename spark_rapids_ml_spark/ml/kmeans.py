@@ -1,4 +1,4 @@
-"""Distributed Lloyd's k-means over an array<float|double> column.
+"""Distributed Lloyd's k-means over an array<numeric> or Vector column.
 
 Per iteration: broadcast the k×d centroid matrix into an Arrow
 mapInPandas stage; each batch assigns its rows to the nearest centroid
@@ -23,6 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
+from spark_rapids_ml_spark.ml.schema import (
+    ParamsPersistence,
+    as_matrix,
+    load_model,
+    save_model,
+    vector_column,
+)
+
 # per-partition, per-cluster partial: [count, sum_0 .. sum_{d-1}]
 # (count packed into the array so ONE explode+agg merges everything)
 _ASSIGN_SCHEMA = StructType(
@@ -33,11 +41,9 @@ _ASSIGN_SCHEMA = StructType(
 )
 
 
-def _as_matrix(series: pd.Series) -> np.ndarray:
-    return np.vstack(series.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
+class KMeans(ParamsPersistence):
+    _PARAMS = ("k", "feature_col", "id_col", "max_iter", "tol")
 
-
-class KMeans:
     def __init__(
         self,
         k: int,
@@ -53,10 +59,8 @@ class KMeans:
         self.tol = tol
 
     def fit(self, df: DataFrame) -> "KMeansModel":
-        from spark_rapids_ml_spark.ml.schema import validate_vector_col
-
-        validate_vector_col(df.schema, self.feature_col)  # fail fast, zero jobs
         feat = self.feature_col
+        vec = vector_column(df.schema, feat)  # fail fast, zero jobs
         # Cache the projected training data for the duration of the
         # fit: every Lloyd iteration is a full pass, and without the
         # cache each pass re-reads and re-decodes the source (parquet
@@ -67,16 +71,16 @@ class KMeans:
         # separate uncached read of the source. Freed in the finally,
         # so no storage outlives the fit.
         data = df.select(
-            self.id_col, F.col(feat).cast("array<double>").alias("v")
+            self.id_col, vec.cast("array<double>").alias("v")
         ).persist()
         try:
             # deterministic init: rows with the k smallest ids. The cast
             # to double is exact (float32 widens losslessly), so seeds
             # are bit-identical to reading the raw feature column.
             seed_rows = data.orderBy(self.id_col).limit(self.k).collect()
-            centroids = np.vstack(
-                [np.asarray(r["v"], dtype=np.float64) for r in seed_rows]
-            )
+            if not seed_rows:
+                raise ValueError("empty input")
+            centroids = as_matrix(pd.Series([r["v"] for r in seed_rows]))
             centroids = self._lloyd(data.select("v"), centroids)
         finally:
             data.unpersist()
@@ -94,7 +98,7 @@ class KMeans:
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    x = _as_matrix(pdf["v"])
+                    x = as_matrix(pdf["v"])
                     # pairwise squared distances via the Gram trick
                     d2 = (
                         (x * x).sum(axis=1)[:, None]
@@ -141,32 +145,6 @@ class KMeans:
                 break
         return centroids
 
-    # -------- estimator persistence (params-only metadata, mirrors
-    # DefaultParamsWriter; see ml/schema.py) --------
-
-    _CLASS = "spark_rapids_ml_spark.ml.kmeans.KMeans"
-
-    def save(self, path: str) -> None:
-        from spark_rapids_ml_spark.ml.schema import save_params
-
-        save_params(
-            path,
-            self._CLASS,
-            {
-                "k": self.k,
-                "feature_col": self.feature_col,
-                "id_col": self.id_col,
-                "max_iter": self.max_iter,
-                "tol": self.tol,
-            },
-        )
-
-    @classmethod
-    def load(cls, path: str) -> "KMeans":
-        from spark_rapids_ml_spark.ml.schema import load_params
-
-        return cls(**load_params(path, cls._CLASS))
-
 
 class KMeansModel:
     def __init__(self, centroids: np.ndarray, feature_col: str):
@@ -175,32 +153,16 @@ class KMeansModel:
 
     def save(self, spark, path: str) -> None:
         """Persistence layout mirrors PCAModel (metadata.json + data/)."""
-        import json
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "metadata.json"), "w") as f:
-            json.dump(
-                {
-                    "class": "spark_rapids_ml_spark.ml.kmeans.KMeansModel",
-                    "feature_col": self.feature_col,
-                    "k": int(self.centroids.shape[0]),
-                    "dim": int(self.centroids.shape[1]),
-                },
-                f,
-            )
-        spark.createDataFrame(
-            [{"centroids": self.centroids.ravel().tolist()}]
-        ).repartition(1).write.mode("overwrite").parquet(os.path.join(path, "data"))
+        meta = {
+            "feature_col": self.feature_col,
+            "k": int(self.centroids.shape[0]),
+            "dim": int(self.centroids.shape[1]),
+        }
+        save_model(spark, path, self, meta, {"centroids": self.centroids.ravel().tolist()})
 
     @classmethod
     def load(cls, spark, path: str) -> "KMeansModel":
-        import json
-        import os
-
-        with open(os.path.join(path, "metadata.json")) as f:
-            meta = json.load(f)
-        row = spark.read.parquet(os.path.join(path, "data")).head()
+        meta, row = load_model(spark, path, cls)
         c = np.array(row["centroids"]).reshape(meta["k"], meta["dim"])
         return cls(c, meta["feature_col"])
 
@@ -220,6 +182,6 @@ class KMeansModel:
 
         @F.pandas_udf(LongType())
         def assign(series: pd.Series) -> pd.Series:
-            return pd.Series(model.assign_batch(_as_matrix(series)))
+            return pd.Series(model.assign_batch(as_matrix(series)))
 
-        return df.withColumn(output_col, assign(F.col(self.feature_col)))
+        return df.withColumn(output_col, assign(vector_column(df.schema, self.feature_col)))

@@ -16,61 +16,41 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
-from spark_rapids_ml_spark.ml.pca import _partials, _sum_partials
+from spark_rapids_ml_spark.ml.pca import _partials, _probe_n_cols, _sum_partials
+from spark_rapids_ml_spark.ml.schema import (
+    ParamsPersistence,
+    as_matrix,
+    load_model,
+    save_model,
+    validate_numeric_col,
+    vector_column,
+)
 
 
-class LinearRegression:
-    """fit(df, feature_col=array<numeric>, label_col=numeric) → model
+class LinearRegression(ParamsPersistence):
+    """fit(df, feature_col=array<numeric> or Vector, label_col=numeric) → model
     with .coefficients (per feature) and .intercept."""
+
+    _PARAMS = ("feature_col", "label_col", "fit_intercept")
 
     def __init__(self, feature_col: str = "features", label_col: str = "label", fit_intercept: bool = True):
         self.feature_col = feature_col
         self.label_col = label_col
         self.fit_intercept = fit_intercept
 
-    # -------- estimator persistence (params-only metadata, mirrors
-    # DefaultParamsWriter; see ml/schema.py) --------
-
-    _CLASS = "spark_rapids_ml_spark.ml.linreg.LinearRegression"
-
-    def save(self, path: str) -> None:
-        from spark_rapids_ml_spark.ml.schema import save_params
-
-        save_params(
-            path,
-            self._CLASS,
-            {
-                "feature_col": self.feature_col,
-                "label_col": self.label_col,
-                "fit_intercept": self.fit_intercept,
-            },
-        )
-
-    @classmethod
-    def load(cls, path: str) -> "LinearRegression":
-        from spark_rapids_ml_spark.ml.schema import load_params
-
-        return cls(**load_params(path, cls._CLASS))
-
     def fit(self, df: DataFrame) -> "LinearRegressionModel":
-        from pyspark.sql import functions as F
-
-        from spark_rapids_ml_spark.ml.schema import (
-            validate_numeric_col,
-            validate_vector_col,
-        )
-
-        validate_vector_col(df.schema, self.feature_col)  # fail fast, zero jobs
+        vec = vector_column(df.schema, self.feature_col)  # fail fast, zero jobs
         validate_numeric_col(df.schema, self.label_col)
         z = df.select(
             F.concat(
-                F.col(self.feature_col).cast("array<double>"),
+                vec.cast("array<double>"),
                 F.array(F.col(self.label_col).cast("double")),
             ).alias("z")
         )
-        first = z.first()
-        d = len(first[0]) - 1  # features
+        d = _probe_n_cols(z, "z") - 1  # features
         n, colsum, gram = _sum_partials(_partials(z, "z"), d + 1)
         sx = colsum[:d]
         sy = colsum[d]
@@ -107,43 +87,20 @@ class LinearRegressionModel:
 
     def save(self, spark, path: str) -> None:
         """Persistence layout mirrors PCAModel (metadata.json + data/)."""
-        import json
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "metadata.json"), "w") as f:
-            json.dump(
-                {
-                    "class": "spark_rapids_ml_spark.ml.linreg.LinearRegressionModel",
-                    "feature_col": self.feature_col,
-                    "intercept": self.intercept,
-                },
-                f,
-            )
-        spark.createDataFrame(
-            [{"coefficients": self.coefficients.tolist()}]
-        ).repartition(1).write.mode("overwrite").parquet(os.path.join(path, "data"))
+        meta = {"feature_col": self.feature_col, "intercept": self.intercept}
+        save_model(spark, path, self, meta, {"coefficients": self.coefficients.tolist()})
 
     @classmethod
     def load(cls, spark, path: str) -> "LinearRegressionModel":
-        import json
-        import os
-
-        with open(os.path.join(path, "metadata.json")) as f:
-            meta = json.load(f)
-        row = spark.read.parquet(os.path.join(path, "data")).head()
+        meta, row = load_model(spark, path, cls)
         return cls(np.array(row["coefficients"]), meta["intercept"], meta["feature_col"])
 
     def transform(self, df: DataFrame, output_col: str = "prediction") -> DataFrame:
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import DoubleType
-
         beta = self.coefficients.copy()
         b0 = self.intercept
 
         @F.pandas_udf(DoubleType())
         def predict(series: pd.Series) -> pd.Series:
-            x = np.vstack(series.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-            return pd.Series(x @ beta + b0)
+            return pd.Series(as_matrix(series) @ beta + b0)
 
-        return df.withColumn(output_col, predict(F.col(self.feature_col)))
+        return df.withColumn(output_col, predict(vector_column(df.schema, self.feature_col)))

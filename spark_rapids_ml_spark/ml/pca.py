@@ -10,6 +10,7 @@ module re-expresses that contract Spark-first:
 | reference                                      | here |
 |------------------------------------------------|------|
 | RDD[Vector] + per-partition densify + JNI GEMM (RapidsRowMatrix.scala:177-199) | mapInPandas: Arrow batch → numpy ``X.T @ X`` partial Gram |
+| dense or sparse Vector input, identical results (RapidsRowMatrix.scala:186, PCASuite.scala:155-190) | ``schema.vector_column``: a VectorUDT column becomes ``array<double>`` via ``vector_to_array`` before the Arrow stage; ``array<numeric>`` is read as is |
 | Statistics.colStats mean + broadcast (RapidsRowMatrix.scala:152-166) | first pass: partial (n, colsum) → driver mean, captured in closure |
 | reduce(_+_) of n×n partials (RapidsRowMatrix.scala:201) | posexplode partials → groupBy(idx).sum — Catalyst partial+final agg |
 | RAFT eigDC + reverse + sqrt + signFlip (rapidsml_jni.cu:302-356) | numpy.linalg.eigh + [::-1] + max-|x|-positive sign flip |
@@ -25,8 +26,6 @@ n_cols ≤ 65535 bound (RapidsRowMatrix.scala:147,203-205).
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -35,33 +34,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from spark_rapids_ml_spark.ml.schema import (
+    ParamsPersistence,
+    as_matrix,
+    load_model,
+    save_model,
+    transform_schema,
+    vector_column,
+)
+
 MAX_COLS = 65535  # RapidsRowMatrix.scala:147 — O(n²) driver matrix bound
-
-def _to_vec(v) -> np.ndarray:
-    """array<numeric> or ml.linalg Dense/SparseVector → float64 ndarray.
-    Sparse inputs densify per batch, exactly as the reference does
-    (RapidsRowMatrix.scala:186); dense and sparse rows must produce
-    identical results (PCASuite.scala:155-190). Inside Arrow batches a
-    VectorUDT arrives as its raw struct dict ({type,size,indices,values})."""
-    if hasattr(v, "toArray"):  # driver-side Dense/SparseVector
-        return v.toArray().astype(np.float64, copy=False)
-    if isinstance(v, dict):  # VectorUDT through Arrow
-        if v.get("type") == 1 or v.get("indices") is None:  # dense
-            return np.asarray(v["values"], dtype=np.float64)
-        out = np.zeros(int(v["size"]))
-        out[np.asarray(v["indices"], dtype=np.int64)] = v["values"]
-        return out
-    return np.asarray(v, dtype=np.float64)
-
-
-def _as_matrix(series) -> np.ndarray:
-    """Stack an Arrow list/vector column into a dense float64 matrix —
-    the densify step (RapidsRowMatrix.scala:186) done by Arrow+numpy.
-    A VectorUDT column reaches scalar pandas_udfs as a pd.DataFrame of
-    its struct fields; normalize that back to per-row dicts first."""
-    if isinstance(series, pd.DataFrame):
-        series = pd.Series(series.to_dict("records"))
-    return np.vstack(series.map(_to_vec).to_numpy())
 
 
 def _partials(df: DataFrame, input_col: str) -> DataFrame:
@@ -75,7 +57,7 @@ def _partials(df: DataFrame, input_col: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = _as_matrix(pdf[input_col])
+            x = as_matrix(pdf[input_col])
             n += x.shape[0]
             cs = x.sum(axis=0)
             gr = x.T @ x  # the per-batch GEMM (reference: cuBLAS dgemm)
@@ -85,7 +67,7 @@ def _partials(df: DataFrame, input_col: str) -> DataFrame:
             packed = np.concatenate(([float(n)], s, g.ravel()))
             yield pd.DataFrame({"packed": [packed.tolist()]})
 
-    return df.select(input_col).mapInPandas(
+    return df.select(vector_column(df.schema, input_col)).mapInPandas(
         run, StructType([StructField("packed", ArrayType(DoubleType()))])
     )
 
@@ -143,7 +125,7 @@ def _column_means(df: DataFrame, input_col: str, n_cols: int) -> tuple[np.ndarra
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = _as_matrix(pdf[input_col])
+            x = as_matrix(pdf[input_col])
             n += x.shape[0]
             cs = x.sum(axis=0)
             s = cs if s is None else s + cs
@@ -152,7 +134,7 @@ def _column_means(df: DataFrame, input_col: str, n_cols: int) -> tuple[np.ndarra
                 {"packed": [np.concatenate(([float(n)], s)).tolist()]}
             )
 
-    partials = df.select(input_col).mapInPandas(
+    partials = df.select(vector_column(df.schema, input_col)).mapInPandas(
         run, StructType([StructField("packed", ArrayType(DoubleType()))])
     )
     flat = _reduce_flat(partials, 1 + n_cols)
@@ -210,13 +192,13 @@ def _covariance_spr(df: DataFrame, input_col: str, mean_centering: bool, n_cols:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xc = _as_matrix(pdf[input_col]) - center
+            xc = as_matrix(pdf[input_col]) - center
             g = (xc.T @ xc)[lj, li]  # pack upper triangle, spr order
             acc = g if acc is None else acc + g
         if acc is not None:
             yield pd.DataFrame({"packed": [acc.tolist()]})
 
-    partials = df.select(input_col).mapInPandas(
+    partials = df.select(vector_column(df.schema, input_col)).mapInPandas(
         run, StructType([StructField("packed", ArrayType(DoubleType()))])
     )
     packed = _reduce_flat(partials, d * (d + 1) // 2)
@@ -270,7 +252,7 @@ def _covariance(df: DataFrame, input_col: str, mean_centering: bool, n_cols: int
     return cov, mean, n_rows
 
 
-class PCA:
+class PCA(ParamsPersistence):
     """Estimator: fit(df) → PCAModel.
 
     Params mirror the reference's param surface (RapidsPCA.scala:30-106):
@@ -283,6 +265,9 @@ class PCA:
     """
 
     BACKENDS = ("moments", "spr")
+    # estimator persistence (RapidsPCA.scala:134-140; round-tripped by
+    # PCASuite.scala:192-206)
+    _PARAMS = ("k", "input_col", "output_col", "mean_centering", "backend")
 
     def __init__(
         self,
@@ -305,8 +290,6 @@ class PCA:
     def transform_schema(self, schema) -> "StructType":
         """Driver-side schema check before any job launches —
         validateAndTransformSchema parity (RapidsPCA.scala:127-129)."""
-        from spark_rapids_ml_spark.ml.schema import transform_schema
-
         return transform_schema(schema, self.input_col, self.output_col)
 
     def fit(self, df: DataFrame) -> "PCAModel":
@@ -340,32 +323,6 @@ class PCA:
             n_rows=n_rows,
         )
 
-    # -------- estimator persistence (RapidsPCA.scala:134-140;
-    # round-tripped by PCASuite.scala:192-206) --------
-
-    _CLASS = "spark_rapids_ml_spark.ml.pca.PCA"
-
-    def save(self, path: str) -> None:
-        from spark_rapids_ml_spark.ml.schema import save_params
-
-        save_params(
-            path,
-            self._CLASS,
-            {
-                "k": self.k,
-                "input_col": self.input_col,
-                "output_col": self.output_col,
-                "mean_centering": self.mean_centering,
-                "backend": self.backend,
-            },
-        )
-
-    @classmethod
-    def load(cls, path: str) -> "PCA":
-        from spark_rapids_ml_spark.ml.schema import load_params
-
-        return cls(**load_params(path, cls._CLASS))
-
 
 class PCAModel:
     """Fitted model: principal components + explained variance.
@@ -398,28 +355,25 @@ class PCAModel:
         self.n_rows = n_rows
 
     def transform(self, df: DataFrame) -> DataFrame:
-        from spark_rapids_ml_spark.ml.schema import transform_schema
-
         transform_schema(df.schema, self.input_col, self.output_col)
         pc = self.pc.copy()
-        input_col = self.input_col
 
         @F.pandas_udf(ArrayType(DoubleType()))
         def project(series: pd.Series) -> pd.Series:
-            x = _as_matrix(series)
+            x = as_matrix(series)
             y = x @ pc  # batched GEMM transform (ref: gemm_b, rapidsml_jni.cu:224-300)
             return pd.Series(list(y))
 
         # parity with reference/Spark MLlib: projection does NOT
         # re-center (RapidsPCA.scala:187-189 multiplies the raw vector)
-        return df.withColumn(self.output_col, project(F.col(input_col)))
+        return df.withColumn(
+            self.output_col, project(vector_column(df.schema, self.input_col))
+        )
 
     # ---------------- persistence (RapidsPCA.scala:218-254 layout) ----
 
     def save(self, spark: SparkSession, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
         meta = {
-            "class": "spark_rapids_ml_spark.ml.pca.PCAModel",
             "k": self.k,
             "input_col": self.input_col,
             "output_col": self.output_col,
@@ -427,23 +381,17 @@ class PCAModel:
             "n_features": int(self.pc.shape[0]),
             "n_rows": self.n_rows,
         }
-        with open(os.path.join(path, "metadata.json"), "w") as f:
-            json.dump(meta, f)
-        row = {
+        data = {
             "pc": self.pc.ravel().tolist(),
             "explained_variance": self.explained_variance.tolist(),
             "explained_variance_ratio": self.explained_variance_ratio.tolist(),
             "mean": self.mean.tolist(),
         }
-        spark.createDataFrame([row]).repartition(1).write.mode("overwrite").parquet(
-            os.path.join(path, "data")
-        )
+        save_model(spark, path, self, meta, data)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "PCAModel":
-        with open(os.path.join(path, "metadata.json")) as f:
-            meta = json.load(f)
-        row = spark.read.parquet(os.path.join(path, "data")).head()
+        meta, row = load_model(spark, path, cls)
         n, k = meta["n_features"], meta["k"]
         return cls(
             pc=np.array(row["pc"]).reshape(n, k),

@@ -61,18 +61,38 @@ class _CoreModelWriter(MLWriter):
 
 
 class _CoreModelReader(MLReader):
-    def __init__(self, cls_, core_cls):
+    def __init__(self, cls_):
         super().__init__()
         self._cls = cls_
-        self._core_cls = core_cls
 
     def load(self, path: str):
         metadata = DefaultParamsReader.loadMetadata(path, self.sc)
-        core = self._core_cls.load(self.sparkSession, os.path.join(path, "core"))
+        core = self._cls._core_cls.load(self.sparkSession, os.path.join(path, "core"))
         model = self._cls(core)
         model._resetUid(metadata["uid"])
         DefaultParamsReader.getAndSetParams(model, metadata)
         return model
+
+
+class _CoreModel(Model, MLWritable, MLReadable):
+    """A fitted facade over one core model (``_core_cls``): transform
+    delegates to it, and persistence is the writer/reader pair above."""
+
+    _core_cls: type
+
+    def __init__(self, core=None):
+        super().__init__()
+        self._core = core
+
+    def _transform(self, dataset):
+        return self._core.transform(dataset)
+
+    def write(self) -> MLWriter:
+        return _CoreModelWriter(self)
+
+    @classmethod
+    def read(cls) -> MLReader:
+        return _CoreModelReader(cls)
 
 
 class _PCAParams(HasInputCol, HasOutputCol):
@@ -138,12 +158,10 @@ class SparkPCA(Estimator, _PCAParams, DefaultParamsWritable, DefaultParamsReadab
         return self._copyValues(model)
 
 
-class SparkPCAModel(Model, _PCAParams, MLWritable, MLReadable):
+class SparkPCAModel(_CoreModel, _PCAParams):
     """Fitted Pipeline-composable model wrapping the core PCAModel."""
 
-    def __init__(self, core: CorePCAModel | None = None):
-        super().__init__()
-        self._core = core
+    _core_cls = CorePCAModel
 
     @property
     def pc(self):
@@ -152,16 +170,6 @@ class SparkPCAModel(Model, _PCAParams, MLWritable, MLReadable):
     @property
     def explainedVariance(self):
         return self._core.explained_variance_ratio
-
-    def _transform(self, dataset):
-        return self._core.transform(dataset)
-
-    def write(self) -> MLWriter:
-        return _CoreModelWriter(self)
-
-    @classmethod
-    def read(cls) -> MLReader:
-        return _CoreModelReader(cls, CorePCAModel)
 
     def save_model(self, spark, path: str) -> None:
         self._core.save(spark, path)
@@ -205,10 +213,8 @@ class SparkStandardScaler(
         return self._copyValues(model)
 
 
-class SparkStandardScalerModel(Model, _ScalerParams, MLWritable, MLReadable):
-    def __init__(self, core: CoreStandardScalerModel | None = None):
-        super().__init__()
-        self._core = core
+class SparkStandardScalerModel(_CoreModel, _ScalerParams):
+    _core_cls = CoreStandardScalerModel
 
     @property
     def mean(self):
@@ -217,16 +223,6 @@ class SparkStandardScalerModel(Model, _ScalerParams, MLWritable, MLReadable):
     @property
     def std(self):
         return self._core.std
-
-    def _transform(self, dataset):
-        return self._core.transform(dataset)
-
-    def write(self) -> MLWriter:
-        return _CoreModelWriter(self)
-
-    @classmethod
-    def read(cls) -> MLReader:
-        return _CoreModelReader(cls, CoreStandardScalerModel)
 
 
 # ---------------------------------------------------------------- k-means
@@ -317,10 +313,8 @@ class SparkKMeans(Estimator, _KMeansParams, DefaultParamsWritable, DefaultParams
         return self._copyValues(model)
 
 
-class SparkKMeansModel(Model, _KMeansParams, MLWritable, MLReadable):
-    def __init__(self, core: CoreKMeansModel | None = None):
-        super().__init__()
-        self._core = core
+class SparkKMeansModel(_CoreModel, _KMeansParams):
+    _core_cls = CoreKMeansModel
 
     @property
     def clusterCenters(self):
@@ -328,10 +322,3 @@ class SparkKMeansModel(Model, _KMeansParams, MLWritable, MLReadable):
 
     def _transform(self, dataset):
         return self._core.transform(dataset, self.getOutputCol())
-
-    def write(self) -> MLWriter:
-        return _CoreModelWriter(self)
-
-    @classmethod
-    def read(cls) -> MLReader:
-        return _CoreModelReader(cls, CoreKMeansModel)

@@ -1,4 +1,4 @@
-"""Feature scalers over an array<numeric> column: StandardScaler
+"""Feature scalers over an array<numeric> or Vector column: StandardScaler
 (z-score) and MinMaxScaler — the MLlib-core feature transformers a
 user of the reference's ML-pipeline conventions expects next to PCA
 (same Estimator/Model/persistence shape, RapidsPCA.scala:30-255).
@@ -23,7 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from spark_rapids_ml_spark.ml.schema import load_params, save_params, validate_vector_col
+from spark_rapids_ml_spark.ml.schema import (
+    ParamsPersistence,
+    as_matrix,
+    load_model,
+    save_model,
+    vector_column,
+)
 
 _PACKED = StructType([StructField("packed", ArrayType(DoubleType()))])
 
@@ -38,7 +44,7 @@ def _column_stats(df: DataFrame, input_col: str) -> tuple[int, np.ndarray, np.nd
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.vstack(pdf[input_col].map(lambda v: np.asarray(v, np.float64)))
+            x = as_matrix(pdf[input_col])
             n += x.shape[0]
             cs, css = x.sum(axis=0), (x * x).sum(axis=0)
             cmn, cmx = x.min(axis=0), x.max(axis=0)
@@ -51,7 +57,7 @@ def _column_stats(df: DataFrame, input_col: str) -> tuple[int, np.ndarray, np.nd
                 {"packed": [np.concatenate(([float(n)], s, ss, mn, mx)).tolist()]}
             )
 
-    rows = df.select(input_col).mapInPandas(run, _PACKED).collect()
+    rows = df.select(vector_column(df.schema, input_col)).mapInPandas(run, _PACKED).collect()
     if not rows:
         raise ValueError("empty input")
     acc = None
@@ -71,18 +77,17 @@ def _column_stats(df: DataFrame, input_col: str) -> tuple[int, np.ndarray, np.nd
     return n_total, acc[0], acc[1], acc[2], acc[3]
 
 
-class StandardScaler:
+class StandardScaler(ParamsPersistence):
     """z-score scaling: (x - mean) / stddev_samp, constant columns map
     to 0 (stddev 0 guarded)."""
 
-    _CLASS = "spark_rapids_ml_spark.ml.scaler.StandardScaler"
+    _PARAMS = ("input_col", "output_col")
 
     def __init__(self, input_col: str = "features", output_col: str = "scaled"):
         self.input_col = input_col
         self.output_col = output_col
 
     def fit(self, df: DataFrame) -> "StandardScalerModel":
-        validate_vector_col(df.schema, self.input_col)
         n, s, ss, _mn, _mx = _column_stats(df, self.input_col)
         if n < 2:
             raise ValueError("need at least 2 rows")
@@ -92,13 +97,6 @@ class StandardScaler:
         var = (ss - n * mean * mean) / (n - 1)
         std = np.sqrt(np.maximum(var, 0.0))
         return StandardScalerModel(mean, std, self.input_col, self.output_col)
-
-    def save(self, path: str) -> None:
-        save_params(path, self._CLASS, {"input_col": self.input_col, "output_col": self.output_col})
-
-    @classmethod
-    def load(cls, path: str) -> "StandardScaler":
-        return cls(**load_params(path, cls._CLASS))
 
 
 class StandardScalerModel:
@@ -114,66 +112,38 @@ class StandardScalerModel:
 
         @F.pandas_udf(ArrayType(DoubleType()))
         def scale(series: pd.Series) -> pd.Series:
-            x = np.vstack(series.map(lambda v: np.asarray(v, np.float64)))
+            x = as_matrix(series)
             z = (x - mean) / safe
             z[:, std == 0] = 0.0
             return pd.Series(list(z))
 
-        return df.withColumn(self.output_col, scale(F.col(self.input_col)))
+        return df.withColumn(self.output_col, scale(vector_column(df.schema, self.input_col)))
 
     def save(self, spark, path: str) -> None:
-        import json
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "metadata.json"), "w") as f:
-            json.dump(
-                {
-                    "class": "spark_rapids_ml_spark.ml.scaler.StandardScalerModel",
-                    "input_col": self.input_col,
-                    "output_col": self.output_col,
-                    "dim": int(len(self.mean)),
-                },
-                f,
-            )
-        spark.createDataFrame(
-            [{"mean": self.mean.tolist(), "std": self.std.tolist()}]
-        ).repartition(1).write.mode("overwrite").parquet(os.path.join(path, "data"))
+        meta = {"input_col": self.input_col, "output_col": self.output_col, "dim": len(self.mean)}
+        save_model(spark, path, self, meta, {"mean": self.mean.tolist(), "std": self.std.tolist()})
 
     @classmethod
     def load(cls, spark, path: str) -> "StandardScalerModel":
-        import json
-        import os
-
-        with open(os.path.join(path, "metadata.json")) as f:
-            meta = json.load(f)
-        row = spark.read.parquet(os.path.join(path, "data")).head()
+        meta, row = load_model(spark, path, cls)
         return cls(
             np.array(row["mean"]), np.array(row["std"]), meta["input_col"], meta["output_col"]
         )
 
 
-class MinMaxScaler:
+class MinMaxScaler(ParamsPersistence):
     """Rescale each column to [0, 1] by its observed range; constant
     columns map to 0.5 (Spark MLlib's convention)."""
 
-    _CLASS = "spark_rapids_ml_spark.ml.scaler.MinMaxScaler"
+    _PARAMS = ("input_col", "output_col")
 
     def __init__(self, input_col: str = "features", output_col: str = "scaled"):
         self.input_col = input_col
         self.output_col = output_col
 
     def fit(self, df: DataFrame) -> "MinMaxScalerModel":
-        validate_vector_col(df.schema, self.input_col)
         _n, _s, _ss, mn, mx = _column_stats(df, self.input_col)
         return MinMaxScalerModel(mn, mx, self.input_col, self.output_col)
-
-    def save(self, path: str) -> None:
-        save_params(path, self._CLASS, {"input_col": self.input_col, "output_col": self.output_col})
-
-    @classmethod
-    def load(cls, path: str) -> "MinMaxScaler":
-        return cls(**load_params(path, cls._CLASS))
 
 
 class MinMaxScalerModel:
@@ -190,40 +160,20 @@ class MinMaxScalerModel:
 
         @F.pandas_udf(ArrayType(DoubleType()))
         def scale(series: pd.Series) -> pd.Series:
-            x = np.vstack(series.map(lambda v: np.asarray(v, np.float64)))
+            x = as_matrix(series)
             z = (x - mn) / safe
             z[:, rng == 0] = 0.5
             return pd.Series(list(z))
 
-        return df.withColumn(self.output_col, scale(F.col(self.input_col)))
+        return df.withColumn(self.output_col, scale(vector_column(df.schema, self.input_col)))
 
     def save(self, spark, path: str) -> None:
-        import json
-        import os
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "metadata.json"), "w") as f:
-            json.dump(
-                {
-                    "class": "spark_rapids_ml_spark.ml.scaler.MinMaxScalerModel",
-                    "input_col": self.input_col,
-                    "output_col": self.output_col,
-                    "dim": int(len(self.mn)),
-                },
-                f,
-            )
-        spark.createDataFrame(
-            [{"mn": self.mn.tolist(), "mx": self.mx.tolist()}]
-        ).repartition(1).write.mode("overwrite").parquet(os.path.join(path, "data"))
+        meta = {"input_col": self.input_col, "output_col": self.output_col, "dim": len(self.mn)}
+        save_model(spark, path, self, meta, {"mn": self.mn.tolist(), "mx": self.mx.tolist()})
 
     @classmethod
     def load(cls, spark, path: str) -> "MinMaxScalerModel":
-        import json
-        import os
-
-        with open(os.path.join(path, "metadata.json")) as f:
-            meta = json.load(f)
-        row = spark.read.parquet(os.path.join(path, "data")).head()
+        meta, row = load_model(spark, path, cls)
         return cls(
             np.array(row["mn"]), np.array(row["mx"]), meta["input_col"], meta["output_col"]
         )

@@ -4,11 +4,21 @@ k-means) — numpy is the oracle, mirroring the PCA test strategy.
 
 from __future__ import annotations
 
+import json
+import re
+
 import numpy as np
 import pytest
 
-from spark_rapids_ml_spark.ml.kmeans import KMeans
-from spark_rapids_ml_spark.ml.linreg import LinearRegression
+from spark_rapids_ml_spark.ml.kmeans import KMeans, KMeansModel
+from spark_rapids_ml_spark.ml.linreg import LinearRegression, LinearRegressionModel
+from spark_rapids_ml_spark.ml.pca import PCA, PCAModel
+from spark_rapids_ml_spark.ml.scaler import (
+    MinMaxScaler,
+    MinMaxScalerModel,
+    StandardScaler,
+    StandardScalerModel,
+)
 
 
 @pytest.fixture(scope="module")
@@ -133,9 +143,21 @@ def test_kmeans_matches_numpy_replay(spark):
 # estimator AND model, DefaultReadWriteTest style) -------------
 
 
-def test_estimator_roundtrip_all_three(tmp_path):
-    from spark_rapids_ml_spark.ml.pca import PCA
+def _models() -> list:
+    """One model of each of the five classes, built directly (no fit) so
+    every persisted field is a known literal."""
+    return [
+        PCAModel(pc=np.eye(3)[:, :2], explained_variance=np.array([2.0, 1.0]),
+                 explained_variance_ratio=np.array([0.5, 0.25]), mean=np.zeros(3),
+                 input_col="f", output_col="o", k=2, mean_centering=True, n_rows=10),
+        KMeansModel(np.arange(6.0).reshape(2, 3), "f"),
+        LinearRegressionModel(np.array([1.0, 2.0]), 0.5, "f"),
+        StandardScalerModel(np.zeros(3), np.ones(3), "f", "o"),
+        MinMaxScalerModel(np.zeros(3), np.ones(3), "f", "o"),
+    ]
 
+
+def test_estimator_roundtrip_all_three(spark, tmp_path):
     est = PCA(k=3, input_col="emb", output_col="proj", backend="spr",
               mean_centering=False)
     est.save(str(tmp_path / "pca_est"))
@@ -157,6 +179,74 @@ def test_estimator_roundtrip_all_three(tmp_path):
     # wrong-class load must refuse
     with pytest.raises(ValueError, match="expected"):
         KMeans.load(str(tmp_path / "pca_est"))
+    # ... and so must every model load, naming both classes
+    models = _models()
+    for m in models:
+        m.save(spark, str(tmp_path / type(m).__name__))
+    for saved, other in zip(models, models[1:] + models[:1]):
+        tags = [f"{type(o).__module__}.{type(o).__name__}" for o in (other, saved)]
+        with pytest.raises(ValueError, match=re.escape("expected {}, found {}".format(*tags))):
+            type(other).load(spark, str(tmp_path / type(saved).__name__))
+
+
+_M = "spark_rapids_ml_spark.ml."
+# (saved object, metadata.json as earlier versions wrote it, data/ columns)
+_PINNED = [
+    (PCA(k=2, input_col="f", output_col="o", mean_centering=False, backend="spr"),
+     {"class": _M + "pca.PCA", "params": {"k": 2, "input_col": "f", "output_col": "o",
+                                          "mean_centering": False, "backend": "spr"}}, None),
+    (KMeans(k=3, feature_col="f", id_col="i", max_iter=4, tol=0.5),
+     {"class": _M + "kmeans.KMeans", "params": {"k": 3, "feature_col": "f", "id_col": "i",
+                                                "max_iter": 4, "tol": 0.5}}, None),
+    (LinearRegression(feature_col="f", label_col="y", fit_intercept=False),
+     {"class": _M + "linreg.LinearRegression",
+      "params": {"feature_col": "f", "label_col": "y", "fit_intercept": False}}, None),
+    (StandardScaler(input_col="f", output_col="o"),
+     {"class": _M + "scaler.StandardScaler", "params": {"input_col": "f", "output_col": "o"}},
+     None),
+    (MinMaxScaler(input_col="f", output_col="o"),
+     {"class": _M + "scaler.MinMaxScaler", "params": {"input_col": "f", "output_col": "o"}},
+     None),
+] + list(zip(_models(), [
+    {"class": _M + "pca.PCAModel", "k": 2, "input_col": "f", "output_col": "o",
+     "mean_centering": True, "n_features": 3, "n_rows": 10},
+    {"class": _M + "kmeans.KMeansModel", "feature_col": "f", "k": 2, "dim": 3},
+    {"class": _M + "linreg.LinearRegressionModel", "feature_col": "f", "intercept": 0.5},
+    {"class": _M + "scaler.StandardScalerModel", "input_col": "f", "output_col": "o", "dim": 3},
+    {"class": _M + "scaler.MinMaxScalerModel", "input_col": "f", "output_col": "o", "dim": 3},
+], [
+    ["explained_variance", "explained_variance_ratio", "mean", "pc"],
+    ["centroids"],
+    ["coefficients"],
+    ["mean", "std"],
+    ["mn", "mx"],
+]))
+
+
+@pytest.mark.parametrize("obj, meta, columns", _PINNED,
+                         ids=[type(p[0]).__name__ for p in _PINNED])
+def test_persistence_format_is_pinned(spark, tmp_path, obj, meta, columns):
+    """Saved directories keep the exact layout earlier versions wrote
+    (metadata.json bytes; data/ parquet column names), so they still load."""
+    path = str(tmp_path / "saved")
+    if columns is None:
+        obj.save(path)
+    else:
+        obj.save(spark, path)
+        assert spark.read.parquet(f"{path}/data").columns == columns
+    with open(f"{path}/metadata.json") as f:
+        assert f.read() == json.dumps(meta)
+
+
+@pytest.mark.parametrize(
+    "make",
+    [lambda: PCA(k=2), lambda: KMeans(k=2), LinearRegression, StandardScaler, MinMaxScaler],
+    ids=["PCA", "KMeans", "LinearRegression", "StandardScaler", "MinMaxScaler"],
+)
+def test_fit_empty_input_all_estimators(reg_data, make):
+    _, _, df = reg_data
+    with pytest.raises(ValueError, match="empty input"):
+        make().fit(df.limit(0))
 
 
 def test_estimator_load_fit_parity(spark, reg_data, tmp_path):

@@ -230,3 +230,42 @@ def test_pca_facade_input_type_parity(spark, typed_input_dfs, input_type, via_pi
     expected = (x - mu) @ base.pc + mu @ base.pc  # = x @ pc
     for i in (0, 74, 149):
         np.testing.assert_allclose(got[i], expected[i], atol=1e-6)
+
+
+@pytest.mark.parametrize("input_type", ["dense", "sparse"])
+@pytest.mark.parametrize(
+    "estimator", ["KMeans", "LinearRegression", "StandardScaler", "MinMaxScaler"]
+)
+def test_core_estimator_input_type_parity(spark, typed_input_dfs, estimator, input_type):
+    """Every core estimator, not only PCA, must read a VectorUDT column
+    (dense or sparse rows) into the same fitted state and transform
+    output as the equivalent array<double> column."""
+    from pyspark.sql import functions as F
+
+    from spark_rapids_ml_spark.ml.kmeans import KMeans
+    from spark_rapids_ml_spark.ml.linreg import LinearRegression
+    from spark_rapids_ml_spark.ml.scaler import MinMaxScaler, StandardScaler
+
+    make, state, out_col = {
+        "KMeans": (lambda: KMeans(k=3, max_iter=3), lambda m: [m.centroids], "cluster"),
+        "LinearRegression": (
+            LinearRegression, lambda m: [m.coefficients, m.intercept], "prediction"
+        ),
+        "StandardScaler": (StandardScaler, lambda m: [m.mean, m.std], "scaled"),
+        "MinMaxScaler": (MinMaxScaler, lambda m: [m.mn, m.mx], "scaled"),
+    }[estimator]
+
+    def run(df):
+        df = df.withColumn("label", F.col("id").cast("double"))
+        model = make().fit(df)
+        rows = model.transform(df).select("id", out_col).collect()
+        return state(model), {r["id"]: np.asarray(r[out_col], dtype=float) for r in rows}
+
+    _x, dfs = typed_input_dfs
+    base_state, base_out = run(dfs["array"])
+    got_state, got_out = run(dfs[input_type])
+    for got, base in zip(got_state, base_state):
+        np.testing.assert_allclose(got, base, atol=1e-9)
+    assert got_out.keys() == base_out.keys() and len(base_out) == 150
+    for i, base in base_out.items():
+        np.testing.assert_allclose(got_out[i], base, atol=1e-6)

@@ -34,8 +34,7 @@ def main() -> None:
             continue
         dt = time.perf_counter() - t0
         status = "OK " if ok else "FAIL"
-        # the wall= suffix makes every sweep log a per-query time
-        # profile (tools/sweep_profile.py aggregates them)
+        # the wall= suffix makes every sweep log a per-query time profile
         print(f"{status} {name}: {details} wall={dt:.1f}s", flush=True)
         bad += 0 if ok else 1
     sys.exit(1 if bad else 0)
