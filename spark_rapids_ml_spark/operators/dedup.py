@@ -1308,24 +1308,15 @@ def dedup_clusters_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket local merge (no Exchange on either side — pinned in
     tests/test_plans.py::test_materialized_clusters_join_no_exchange).
     """
-    import os
-    import shutil
+    from spark_rapids_ml_spark.sources.catalog import reset_managed_table
 
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     db = f"dedupdb_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     c_tbl, d_tbl = f"{db}.clusters_b", f"{db}.documents_b"
-    # the in-memory catalog is per-session: clear any stale managed-
-    # table directory left by a previous session before saveAsTable
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
     for tbl in (c_tbl, d_tbl):
         if not spark.catalog.tableExists(tbl):
-            shutil.rmtree(
-                os.path.join(warehouse, f"{db}.db", tbl.split(".")[1]),
-                ignore_errors=True,
-            )
+            reset_managed_table(spark, tbl)
 
     clusters = dedup_duplicate_clusters(spark, sf_dir)
     (

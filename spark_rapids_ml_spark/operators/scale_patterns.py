@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.functions.localframe import local_df
-from spark_rapids_ml_spark.sources.catalog import load
+from spark_rapids_ml_spark.sources.catalog import load, reset_managed_table, warehouse_dir
 
 N_SALTS = 16
 
@@ -87,21 +87,13 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-fact join into a local merge per bucket. The plan assertion
     lives in tests/test_plans.py::test_bucketed_join_has_no_exchange.
     """
-    import shutil
-
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     db = f"bucketdb_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     o_tbl, l_tbl = f"{db}.orders_b", f"{db}.lineitem_b"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
     for tbl, src, key in ((o_tbl, "orders", "o_orderkey"), (l_tbl, "lineitem", "l_orderkey")):
         if not spark.catalog.tableExists(tbl):
-            # the in-memory catalog is per-session; clear any stale
-            # managed-table directory left by a previous session
-            loc = os.path.join(warehouse, f"{db}.db", tbl.split(".")[1])
-            shutil.rmtree(loc, ignore_errors=True)
+            reset_managed_table(spark, tbl)
             load(spark, sf_dir, src).write.bucketBy(8, key).sortBy(key).saveAsTable(tbl)
     o = spark.table(o_tbl).where(F.col("o_totalprice") > 150000)
     l = spark.table(l_tbl)
@@ -274,11 +266,8 @@ def zorder_write_path(spark: SparkSession, sf_dir: str) -> str:
     frame into _Z_BUCKETS disjoint-range partitions and write one
     parquet file per partition. Returns the output directory (under the
     session warehouse, rewritten each call)."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    out = os.path.join(warehouse, f"zorder_ranged_{tag}")
+    out = os.path.join(warehouse_dir(spark), f"zorder_ranged_{tag}")
     zorder_ranged_writer(_zorder_frame(spark, sf_dir)).write.mode(
         "overwrite"
     ).parquet(out)

@@ -1,21 +1,47 @@
 """Similarity search over the embedding column (array<float>, 64-d).
 
-Four tiers, mirroring how an ANN system scales:
+Every tier is a declared query checked against its DuckDB oracle; the
+recall gates of the approximate tiers against brute force live in
+tests/test_quality.py.
 
-- sim_bruteforce_topk   exact cosine top-k (the recall baseline)
-- sim_lsh_bucketed_topk random-hyperplane LSH buckets (sub-linear
-                        candidate sets; Rademacher planes are integer
-                        literals so the bucketing is FP-exact in both
-                        engines)
-- sim_ivf_topk          real IVF: cells learned by ml/kmeans.py
-                        (training re-run as unrolled SQL CTEs in the
-                        oracle), probe the nprobe nearest cells
-- sim_quantized_topk    int8 scalar quantization (8x memory), coarse
-                        scan on dequantized dots, exact re-rank
+- sim_bruteforce_topk (+ filtered)  exact cosine top-k, the recall baseline
+- sim_lsh_bucketed_topk / _persisted_probe  random-hyperplane LSH buckets
+  (Rademacher planes are integer literals, so bucketing is FP-exact in
+  both engines)
+- the IVF family: sim_ivf_topk, sim_ivf_persisted_probe,
+  sim_filtered_ivf_topk, sim_quantized_topk, sim_pq_adc_topk, the
+  IVF-PQ / IVF-SQ hybrids, the dense tower of
+  retrieval_rrf_filtered_fusion and the streaming ANN probes
 
-All vector math is JVM-side higher-order functions (zip_with /
-aggregate) — no Python UDF in the hot path. tests/test_similarity.py
-checks recall of the approximate tiers against brute force.
+The IVF family is one skeleton, the IndexIVF + quantizer decomposition
+of Jegou et al. (TPAMI 2011) and Faiss. Its steps:
+
+  _corpus            the cached, gate-widened (vec_id, emb) projection
+  _corpus_head       one aggregate job: corpus count, predicate-match
+                     count and the head rows (queries, PQ codebook)
+  _coarse_quantizer  learned k-means cells (_ivf_fit) + the probe list
+  _probe_index       pruned scan of a persisted cell index, with an
+                     optional predicate, scored against unit queries
+  _unit_queries      unit query vectors, no cache barrier
+  _shortlist         each query's n best candidates by a coarse score
+  _rerank_topk       exact cosine re-rank of a shortlist
+  _topk              the exact top-k tail (cosine desc, vec_id)
+
+and the tiers compose them as:
+
+  sim_ivf_topk              corpus, head, quantizer, unit queries, top-k
+  sim_ivf_persisted_probe   probe_index, top-k (stream _probe_cell_index too)
+  sim_filtered_ivf_topk     _filtered_probe (head with the match count +
+                            probe_index with the predicate), top-k; the
+                            RRF filtered dense tower is the same at depth
+  sim_quantized_topk        corpus, head, shortlist, re-rank
+  sim_pq_adc_topk           corpus, head, shortlist, re-rank
+  IVF-PQ / IVF-SQ hybrids   corpus, head, quantizer, shortlist, re-rank
+
+Arithmetic lives only in the kernels the steps call: dot_expr,
+_pq_dist_nano, _sq_stats/_sq_recon_expr, _pq_encode_df and
+KMeansModel.assign_batch. Vector math is JVM-side higher-order
+functions or Arrow-batched numpy kernels, never a row-at-a-time UDF.
 
 Scale notes (100 TB): brute force is O(Q·N) and exists as oracle and
 for small Q re-ranking; LSH/IVF prune candidates by equi-joining on
@@ -26,14 +52,16 @@ executor sees one slice of the index — same plan shape, 1000x data.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.functions.localframe import local_df
-from spark_rapids_ml_spark.sources.catalog import load, load_wide
+from spark_rapids_ml_spark.sources.catalog import load, load_wide, reset_managed_table
 
 N_QUERIES = 20  # vec_id < 20 are the query vectors in declared queries
 TOP_K = 5
@@ -161,8 +189,6 @@ def ivf_probe(q: DataFrame, cent_rows: DataFrame, n_probe: int) -> DataFrame:
     DuckDB probe ranks the identically-rounded value, so a precision
     change here must change every tier's oracle in lockstep. ``q``
     must carry (qid, qemb); extra columns are ignored."""
-    from pyspark.sql import Window
-
     return (
         q.crossJoin(F.broadcast(cent_rows))
         .select("qid", "cl", F.round(cosine_expr("qemb", "cemb"), 6).alias("csim"))
@@ -174,37 +200,6 @@ def ivf_probe(q: DataFrame, cent_rows: DataFrame, n_probe: int) -> DataFrame:
         )
         .where(F.col("prk") <= n_probe)
         .select("qid", F.col("cl").alias("pcell"))
-    )
-
-
-def _corpus_head(ed: DataFrame, cap: int) -> tuple[int, list]:
-    """(corpus row count, [(vec_id, emb), ...] for vec_id < cap,
-    sorted by vec_id) — in ONE aggregate job over the corpus.
-
-    The similarity tiers need the corpus count (adaptive k/nprobe/
-    shortlist), the query vectors (vec_id < N_QUERIES) and — for PQ —
-    the sampled codebook rows (vec_id in [PQ_ANCHOR_LO,
-    PQ_ANCHOR_LO+PQ_CODES)). Previously each was its own driver
-    round-trip (count job + filtered collect jobs + cluster scans
-    under every broadcast build); fusing them into one pass and
-    shipping the slice back through local_df (LocalTableScan) removes
-    3-5 jobs per tier. collect_list skips the NULLs the when() emits
-    for non-head rows, so driver state is bounded at ``cap`` rows."""
-    row = ed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_list(
-            F.when(F.col("vec_id") < cap, F.struct("vec_id", "emb"))
-        ).alias("head"),
-    ).collect()[0]  # bounded: cap (<= 36) rows of d doubles
-    head = sorted((r["vec_id"], list(r["emb"])) for r in row["head"])
-    return row["n"], head
-
-
-def _head_query_df(spark: SparkSession, head: list, cols: str) -> DataFrame:
-    """The query slice (vec_id < N_QUERIES) of a _corpus_head result as
-    a LocalTableScan frame; ``cols`` names the two columns (DDL)."""
-    return local_df(
-        spark, [(vid, emb) for vid, emb in head if vid < N_QUERIES], cols
     )
 
 
@@ -264,6 +259,183 @@ def with_unit_vector(
     ).drop("_norm")
 
 
+# ---- the IVF skeleton: the steps every IVF/PQ/SQ tier composes ----
+
+
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached (vec_id, emb<double>) corpus projection: one cache
+    serves a tier's head aggregate, k-means passes, codec/encoder pass
+    and re-rank side instead of each re-scanning the parquet.
+
+    Gate-widened BEFORE the cache (default 4 MiB floor): at the bench
+    SF the gate is off and this is exactly load() — an r14 A/B with a
+    lower floor measured 32-way tiny-batch dispatch ~2x SLOWER at 2k
+    vectors. At sf1+ (8 MiB single-row-group corpus) the scan pins
+    every cached pass (Lloyd iterations, assignment, coarse scan) to
+    ONE core — the sf1 8-vs-32-core ratio sat at ~1.0 (serial) — and
+    the exchange is paid once at cache materialization (guide §2.5)."""
+    from spark_rapids_ml_spark.operators.dedup import _cache
+
+    return _cache(
+        load_wide(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+        )
+    )
+
+
+def _corpus_head(
+    ed: DataFrame, cap: int, match: DataFrame | None = None
+) -> tuple[int, int, list]:
+    """(n, m, head) in ONE aggregate job over the corpus: the row count
+    n, the count m of rows whose vec_id is in ``match`` (a vec_id
+    frame; m = n without one) and [(vec_id, emb), ...] for vec_id <
+    cap, sorted by vec_id.
+
+    The tiers need the count (adaptive k/nprobe/shortlist), the query
+    vectors (vec_id < N_QUERIES), the PQ codebook sample (vec_id in
+    [PQ_ANCHOR_LO, PQ_ANCHOR_LO+PQ_CODES)) and, filtered, the match
+    count; one pass that ships the head back through local_df
+    (LocalTableScan) replaces a count job, filtered collects and
+    cluster scans under every broadcast build. ``match`` is
+    left-joined, so with unique ids n is unchanged and COUNT(_m)
+    counts the matches. collect_list skips the NULLs the when() emits
+    for non-head rows, so driver state is bounded at ``cap`` rows."""
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.collect_list(
+            F.when(F.col("vec_id") < cap, F.struct("vec_id", "emb"))
+        ).alias("head"),
+    ]
+    if match is not None:
+        ed = ed.join(match.select("vec_id", F.lit(1).alias("_m")), "vec_id", "left")
+        aggs.append(F.count("_m").alias("m"))
+    row = ed.agg(*aggs).collect()[0]  # bounded: cap (<= 36) rows of d doubles
+    head = sorted((r["vec_id"], list(r["emb"])) for r in row["head"])
+    return row["n"], row["m"] if match is not None else row["n"], head
+
+
+def _head_query_df(spark: SparkSession, head: list) -> DataFrame:
+    """The query slice (vec_id < N_QUERIES) of a _corpus_head result as
+    a (qid, qemb) LocalTableScan frame."""
+    return local_df(
+        spark,
+        [(vid, emb) for vid, emb in head if vid < N_QUERIES],
+        "qid bigint, qemb array<double>",
+    )
+
+
+def _ivf_fit(train: DataFrame, n_train: int):
+    """The learned coarse quantizer: k-means (ml/kmeans.py) over the
+    (vec_id, emb) frame ``train`` with the adaptive cell count
+    ivf_n_cells(n_train). tol=0.0 runs exactly IVF_ITERS Lloyd passes,
+    the iterations the oracles unroll (_sql_kmeans_cells)."""
+    from spark_rapids_ml_spark.ml.kmeans import KMeans
+
+    return KMeans(
+        k=ivf_n_cells(n_train),
+        feature_col="emb",
+        id_col="vec_id",
+        max_iter=IVF_ITERS,
+        tol=0.0,
+    ).fit(train)
+
+
+def _coarse_quantizer(
+    spark: SparkSession, ed: DataFrame, n_corpus: int, q: DataFrame
+) -> tuple:
+    """(model, probe): cells learned over the corpus ``ed`` and the
+    (qid, pcell) list of the ivf_nprobe nearest cells per query of
+    ``q`` (qid, qemb). With LocalTableScan queries and centroids the
+    probe's broadcast build runs no cluster job."""
+    model = _ivf_fit(ed, n_corpus)
+    n_probe = ivf_nprobe(len(model.centroids))
+    return model, ivf_probe(q, ivf_centroid_rows(spark, model), n_probe)
+
+
+def _unit_queries(q: DataFrame) -> DataFrame:
+    """(qid, qunit) of a bounded (qid, qemb) query frame. No cache
+    barrier: the O(d^2) collapse it prevents costs ~Q·d^2 flops on a
+    query slice, while caching it costs a materialization job; values
+    are identical either way (same expressions)."""
+    return with_unit_vector(q, "qemb", "qunit", barrier=False).select("qid", "qunit")
+
+
+def _cell_scores(qu: DataFrame, probe: DataFrame, cells: DataFrame) -> DataFrame:
+    """(qid, vec_id, cosine): each unit query dotted with the unit
+    vectors of its probed cells — ``cells`` carries (vec_id, unit,
+    cell), the probe list (qid, pcell) is broadcast."""
+    return (
+        qu.join(F.broadcast(probe), "qid")
+        .join(
+            cells.select("vec_id", "unit", "cell"),
+            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
+        )
+        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
+    )
+
+
+def _probe_index(
+    q: DataFrame, probe: DataFrame, index: list, pred: Column | None = None
+) -> DataFrame:
+    """Probe a cell-partitioned index: collect the probed cell ids,
+    scan only their partitions of each frame in ``index`` (one per
+    partition-discovery root; a versioned index unions base and delta
+    dirs) with ``pred`` pushed into the same scan, and score the unit
+    queries of ``q`` (qid, qemb) against the survivors. An index that
+    does not store unit vectors is normalized after the scan."""
+    # bounded driver state: at most N_QUERIES x nprobe probed cell ids
+    probed = sorted({r["pcell"] for r in probe.select("pcell").distinct().collect()})
+    keep = F.col("cell").isin(probed)
+    if pred is not None:
+        keep = keep & pred
+    idx = functools.reduce(DataFrame.unionByName, [t.where(keep) for t in index])
+    if "unit" not in idx.columns:
+        idx = with_unit_vector(idx, "emb", "unit")
+    return _cell_scores(_unit_queries(q), probe, idx)
+
+
+def _shortlist(scored: DataFrame, order: Column, n: int) -> DataFrame:
+    """(qid, vec_id) of each query's ``n`` best candidates by the
+    coarse score ``order`` (vec_id tiebreak)."""
+    w = Window.partitionBy("qid").orderBy(order, F.col("vec_id"))
+    return (
+        scored.withColumn("crk", F.row_number().over(w))
+        .where(F.col("crk") <= n)
+        .select("qid", "vec_id")
+    )
+
+
+def _rerank_topk(
+    cand: DataFrame, ed: DataFrame, qu: DataFrame | None = None
+) -> DataFrame:
+    """Exact-cosine re-rank of a (qid, vec_id) shortlist: the corpus
+    side ``ed`` (vec_id, emb) is normalized behind the cache barrier and
+    joined on vec_id; the (qid, qunit) query side ``qu`` is broadcast,
+    taken from the corpus' own query rows when not given."""
+    eu = with_unit_vector(ed, "emb", "unit")
+    if qu is None:
+        qu = eu.where(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("qid"), F.col("unit").alias("qunit")
+        )
+    return _topk(
+        cand.join(F.broadcast(qu), "qid")
+        .join(eu.select("vec_id", "unit"), "vec_id")
+        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
+    )
+
+
+def _topk(scored: DataFrame, depth: int = TOP_K) -> DataFrame:
+    """The exact top-k tail over (qid, vec_id, cosine): rank by the
+    6dp-rounded cosine with a vec_id tiebreak (deterministic and
+    cross-engine stable), keep ``depth`` rows per query, ordered."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rk") <= depth)
+        .orderBy("qid", "rk")
+    )
+
+
 _SQL_E = "SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings"
 
 
@@ -307,17 +479,9 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("qid"), F.col("unit").alias("qunit")
         )
     )
-    scored = (
+    return _topk(
         q.join(e, F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
     )
 
 
@@ -461,29 +625,6 @@ def _query_probes(qsig: DataFrame, k: int) -> DataFrame:
     return qsig.select("qid", "tbl", F.explode(probes).alias("bucket"))
 
 
-def _rerank_topk(cand: DataFrame, e: DataFrame) -> DataFrame:
-    """Exact-cosine re-rank of (qid, vec_id) candidate pairs: broadcast
-    the query vectors, join the corpus side on vec_id, keep TOP_K by
-    rounded cosine (vec_id tiebreak for cross-engine determinism)."""
-    from pyspark.sql import Window
-
-    eu = with_unit_vector(e, "embedding", "unit")
-    qe = eu.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("unit").alias("qunit")
-    )
-    scored = (
-        cand.join(F.broadcast(qe), "qid")
-        .join(eu.select("vec_id", "unit"), "vec_id")
-        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
-    )
-
-
 @register(
     "sim_lsh_bucketed_topk",
     tags=("similarity", "lsh"),
@@ -530,7 +671,7 @@ def sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id")
         .distinct()
     )
-    return _rerank_topk(cand, e)
+    return _rerank_topk(cand, e.withColumnRenamed("embedding", "emb"))
 
 
 def _index_tag(sf_dir: str) -> str:
@@ -557,21 +698,13 @@ def lsh_signature_table(spark: SparkSession, sf_dir: str) -> str:
     signature computation (N_TABLES × PLANES_PER_TABLE hyperplane dot
     products per vector) is paid at index-build time, and every probe
     reads pre-bucketed files co-partitioned on the join key."""
-    import os
-    import shutil
-
     tag = _index_tag(sf_dir)
     db = f"simdb_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     tbl = f"{db}.lsh_sig_b"
     if spark.catalog.tableExists(tbl):
         return tbl
-    # the in-memory catalog is per-session: clear any stale managed-
-    # table directory left by a previous session before saveAsTable
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
-    shutil.rmtree(os.path.join(warehouse, f"{db}.db", "lsh_sig_b"), ignore_errors=True)
+    reset_managed_table(spark, tbl)
     e = load(spark, sf_dir, "embeddings")
     k = lsh_n_planes(e.count())
     sig = _signatures_df(e, k)
@@ -620,7 +753,9 @@ def sim_lsh_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id")
         .distinct()
     )
-    return _rerank_topk(cand, load(spark, sf_dir, "embeddings"))
+    return _rerank_topk(
+        cand, load(spark, sf_dir, "embeddings").withColumnRenamed("embedding", "emb")
+    )
 
 
 def _sql_kmeans_cells(
@@ -793,64 +928,16 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     to ~nprobe/√n so the flat tier beats brute force at every measured
     decade (RECALL_r10.json carries the curve).
     """
-    from pyspark.sql import Window
-
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
-    e = load(spark, sf_dir, "embeddings")
-    # one cached corpus projection serves the fused head aggregate, the
-    # fit's first pass and the normalized index build (previously the
-    # count, fit and unit-vector passes each re-scanned the parquet)
-    # gate-widened BEFORE the cache (DEFAULT 4 MiB floor): at the bench
-    # SF the gate is off and this is exactly load() — an r14 A/B with a
-    # lower floor measured 32-way tiny-batch dispatch ~2x SLOWER at
-    # 2k vectors. At sf1+ (8 MiB single-row-group corpus) the scan pins
-    # every cached pass (Lloyd iterations, assignment, coarse scan) to
-    # ONE core — the sf1 8-vs-32-core ratio sat at ~1.0 (serial) — and
-    # the exchange is paid once at cache materialization (guide §2.5).
-    ed = _cache(
-        load_wide(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-    )
-    n_corpus, head = _corpus_head(ed, N_QUERIES)
-    k_cells = ivf_n_cells(n_corpus)
-    n_probe = ivf_nprobe(k_cells)
-    model = KMeans(
-        k=k_cells, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-    ).fit(ed)
+    ed = _corpus(spark, sf_dir)
+    n_corpus, _, head = _corpus_head(ed, N_QUERIES)
+    q = _head_query_df(spark, head)
+    model, probe = _coarse_quantizer(spark, ed, n_corpus, q)
     # pre-normalized corpus: the candidate cosine is then ONE dot per
-    # pair instead of dot+2 norms (3x fewer HOF evaluations — the same
-    # unit-vector discipline as the brute/LSH tiers; 6dp-parity with
-    # the oracle's list_cosine_similarity is the established precedent)
-    eu = with_unit_vector(ed, "emb", "unit")
-    cells = model.transform(eu, "cell")  # (vec_id, emb, unit, cell)
-    # query side: the head slice as LocalTableScans (probe's broadcast
-    # build runs no corpus-side cluster work; unit vectors from the
-    # same expressions over the same doubles)
-    q = _head_query_df(spark, head, "qid bigint, qemb array<double>")
-    probe = ivf_probe(q, ivf_centroid_rows(spark, model), n_probe)
-    qu = with_unit_vector(
-        _head_query_df(spark, head, "qid bigint, qemb array<double>"),
-        "qemb",
-        "qunit",
-        barrier=False,  # 20-row LocalTableScan: skip the cache job
-    ).select("qid", "qunit")
-    scored = (
-        qu.join(probe, "qid")
-        .join(
-            cells.select("vec_id", "unit", "cell"),
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
-        )
-        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
-    )
+    # pair instead of dot+2 norms (3x fewer HOF evaluations; 6dp-parity
+    # with the oracle's list_cosine_similarity is the established
+    # precedent)
+    cells = model.transform(with_unit_vector(ed, "emb", "unit"), "cell")
+    return _topk(_cell_scores(_unit_queries(q), probe, cells))
 
 
 QUANT_LEVELS = 255  # int8 codes: 64 bytes/vector vs 512 for float64 (8x)
@@ -878,13 +965,10 @@ qv AS MATERIALIZED (
 )"""
 
 
-def _sq_recon_expr(ed: DataFrame):
-    """Column-builder for the int8 quantize→dequantize reconstruction:
-    one d-row stats aggregate over the corpus, then a pure expression
-    (col -> recon array) applicable to ANY frame carrying the same
-    doubles — the corpus projection AND the LocalTableScan query slice
-    get bit-identical reconstructions from the identical expression.
-    Op order mirrors _SQL_SQ_RECON exactly."""
+def _sq_stats(ed: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(mins, dens): the per-dimension int8 quantizer of the corpus —
+    one d-row min/max aggregate, op-order-identical to the oracle's
+    stats CTE, with den = mx - mn (1.0 for a constant dimension)."""
     stats = (
         ed.select(F.posexplode("emb").alias("pos", "val"))
         .groupBy("pos")
@@ -892,8 +976,22 @@ def _sq_recon_expr(ed: DataFrame):
         .orderBy("pos")
         .collect()
     )  # d rows — bounded driver state, same pattern as the k-means centroids
-    mins = [r["mn"] for r in stats]
-    dens = [r["mx"] - r["mn"] if r["mx"] > r["mn"] else 1.0 for r in stats]
+    mins = np.array([r["mn"] for r in stats], dtype=np.float64)
+    dens = np.array(
+        [r["mx"] - r["mn"] if r["mx"] > r["mn"] else 1.0 for r in stats],
+        dtype=np.float64,
+    )
+    return mins, dens
+
+
+def _sq_recon_expr(ed: DataFrame):
+    """The int8 quantize→dequantize reconstruction as a column function:
+    the _sq_stats aggregate, then a pure expression (col -> recon
+    array) applicable to ANY frame carrying the same doubles — the
+    corpus projection AND the LocalTableScan query slice get
+    bit-identical reconstructions from the identical expression. Op
+    order mirrors _SQL_SQ_RECON exactly."""
+    mins, dens = _sq_stats(ed)
     mins_l = F.array(*[F.lit(float(v)) for v in mins])
     dens_l = F.array(*[F.lit(float(v)) for v in dens])
     lv = float(QUANT_LEVELS)
@@ -1014,40 +1112,12 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     staying far above 6dp boundaries (the matmul-vs-fold argument at
     _hyperplanes; the FINAL cosine always comes from the exact
     re-rank)."""
-    from pyspark.sql import Window
-
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
-    # one cached (gate-widened, default floor) projection serves the
-    # stats aggregate, the query collect, the coarse scan and the
-    # re-rank side — previously four separate single-task parquet
-    # scans; at sf1+ the widening also unpins the batched coarse
-    # kernel from one core (released by release_caches post-run)
-    ed = _cache(
-        load_wide(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-    )
-    # per-dimension min/max stats: d rows of bounded driver state,
-    # op-order-identical to the oracle's stats CTE (_sq_reconstructed)
-    stats = (
-        ed.select(F.posexplode("emb").alias("pos", "val"))
-        .groupBy("pos")
-        .agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
-        .orderBy("pos")
-        .collect()
-    )
-    mins = np.array([r["mn"] for r in stats], dtype=np.float64)
-    dens = np.array(
-        [r["mx"] - r["mn"] if r["mx"] > r["mn"] else 1.0 for r in stats],
-        dtype=np.float64,
-    )
+    ed = _corpus(spark, sf_dir)
+    mins, dens = _sq_stats(ed)
     lv = float(QUANT_LEVELS)
-    qrows = (
-        ed.where(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
-    )  # Q rows — bounded driver state (the query workload itself)
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r["emb"], dtype=np.float64) for r in qrows])
+    _, _, head = _corpus_head(ed, N_QUERIES)
+    qids = np.array([vid for vid, _ in head], dtype=np.int64)
+    qmat = np.array([emb for _, emb in head], dtype=np.float64)
     # reconstruct queries with the SAME op order as the oracle's qv
     # CTE: mn + LEAST(lv, FLOOR((v-mn)*lv/den)) * den / lv
     qrec = mins + np.minimum(lv, np.floor((qmat - mins) * lv / dens)) * dens / lv
@@ -1093,15 +1163,7 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     local = ed.mapInPandas(coarse_scan, "qid bigint, vec_id bigint, qscore double")
     score = local.select("qid", "vec_id", F.round("qscore", 6).alias("qscore"))
-    wc = Window.partitionBy("qid").orderBy(F.col("qscore").desc(), F.col("vec_id"))
-    cand = (
-        score.withColumn("crk", F.row_number().over(wc))
-        .where(F.col("crk") <= QUANT_CAND)
-        .select("qid", "vec_id")
-    )
-    # re-rank reads the same cached projection (cast is exact, so
-    # unit vectors are bit-identical to the raw-column path)
-    return _rerank_topk(cand, ed.select("vec_id", F.col("emb").alias("embedding")))
+    return _rerank_topk(_shortlist(score, F.col("qscore").desc(), QUANT_CAND), ed)
 
 
 def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -1111,11 +1173,6 @@ def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     table). Training is the same deterministic fixed-iteration k-means
     as sim_ivf_topk (ml/kmeans.py), so the persisted index is
     hash-checkable through the shared oracle."""
-    import os
-    import shutil
-
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
-
     tag = _index_tag(sf_dir)
     db = f"simdb_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
@@ -1124,31 +1181,19 @@ def ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     cells_tbl, cent_tbl = f"{db}.ivf_cells_pa", f"{db}.ivf_centroids_a"
     if spark.catalog.tableExists(cells_tbl) and spark.catalog.tableExists(cent_tbl):
         return cells_tbl, cent_tbl
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
     for t in ("ivf_cells_p", "ivf_centroids", "ivf_cells_pa", "ivf_centroids_a"):
-        # DROP first so a still-registered catalog entry never outlives
-        # its data files (a dangling entry would fail on read instead
-        # of a clean table-not-found)
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-        shutil.rmtree(os.path.join(warehouse, f"{db}.db", t), ignore_errors=True)
-    e = load(spark, sf_dir, "embeddings")
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    k_cells = ivf_n_cells(ed.count())
-    model = KMeans(
-        k=k_cells, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-    ).fit(ed)
+        reset_managed_table(spark, f"{db}.{t}")
+    ed = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    model = _ivf_fit(ed, ed.count())
     (
         model.transform(ed, "cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .saveAsTable(cells_tbl)
     )
-    spark.createDataFrame(
-        [(j, [float(v) for v in model.centroids[j]]) for j in range(k_cells)],
-        schema="cl bigint, cemb array<double>",
-    ).write.mode("overwrite").saveAsTable(cent_tbl)
+    ivf_centroid_rows(spark, model).write.mode("overwrite").saveAsTable(cent_tbl)
     return cells_tbl, cent_tbl
 
 
@@ -1174,46 +1219,16 @@ def sim_ivf_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     build; probes are pure pruned scans plus a broadcast of the tiny
     (qid, cell) probe list.
     """
-    from pyspark.sql import Window
-
     cells_tbl, cent_tbl = ivf_index_tables(spark, sf_dir)
     cent = spark.table(cent_tbl)
-    # k is the persisted centroid count (one tiny-table count, no
-    # corpus re-count); nprobe re-derives the same adaptive fraction
-    n_probe = ivf_nprobe(cent.count())
-    e = load(spark, sf_dir, "embeddings")
-    q = e.select(
+    q = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").cast("array<double>").alias("qemb"),
     ).where(F.col("qid") < N_QUERIES)
-    probe = ivf_probe(q, cent, n_probe)
-    # bounded driver state: at most N_QUERIES x nprobe probed cell ids
-    probed = sorted({r["pcell"] for r in probe.select("pcell").distinct().collect()})
-    # pre-normalize both sides so the pair cosine is ONE dot (the
-    # brute/LSH unit-vector discipline; norms amortize per ROW). The
-    # query side is 20 broadcast rows, so the inline O(d^2) projection
-    # collapse with_unit_vector's cache barrier exists to avoid is noise.
-    idx = with_unit_vector(
-        spark.table(cells_tbl).where(F.col("cell").isin(probed)), "emb", "unit"
-    )
-    qu = q.withColumn("qnorm", norm_expr("qemb")).select(
-        "qid",
-        F.transform("qemb", lambda x: x.cast("double") / F.col("qnorm")).alias("qunit"),
-    )
-    scored = (
-        qu.join(F.broadcast(probe), "qid")
-        .join(
-            idx.select("vec_id", "unit", "cell"),
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
-        )
-        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
-    )
+    # k is the persisted centroid count (one tiny-table count, no
+    # corpus re-count)
+    probe = ivf_probe(q, cent, ivf_nprobe(cent.count()))
+    return _topk(_probe_index(q, probe, [spark.table(cells_tbl)]))
 
 
 # ---- filtered ANN (metadata predicate inside the probe scan) ----
@@ -1238,9 +1253,6 @@ def ivf_meta_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     k-means retraining — so the assignment is provably identical to
     every other IVF tier's. Returns (meta_cells_table, centroids_
     table)."""
-    import os
-    import shutil
-
     cells_tbl, cent_tbl = ivf_index_tables(spark, sf_dir)
     db = cells_tbl.split(".")[0]
     # _pm2 = layout v2 (round 13): the UNIT vector is materialized at
@@ -1250,12 +1262,8 @@ def ivf_meta_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     meta_tbl = f"{db}.ivf_cells_pm2"
     if spark.catalog.tableExists(meta_tbl):
         return meta_tbl, cent_tbl
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
     for t in ("ivf_cells_pm", "ivf_cells_pm2"):  # _pm = stale round-13a layout
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-        shutil.rmtree(os.path.join(warehouse, f"{db}.db", t), ignore_errors=True)
+        reset_managed_table(spark, f"{db}.{t}")
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang", "n_chars"
     )
@@ -1307,6 +1315,54 @@ ORDER BY qid, rk
 """
 
 
+def _filter_pred() -> Column:
+    """The filtered tiers' metadata predicate (lang, n_chars)."""
+    return (F.col("lang") == FILTER_LANG) & (F.col("n_chars") >= FILTER_NCHARS)
+
+
+def _filtered_probe(
+    spark: SparkSession, sf_dir: str, pred: Column | None = None
+) -> DataFrame:
+    """(qid, vec_id, cosine) of the head queries against the probed
+    cells of the metadata index, keeping rows that pass _filter_pred()
+    (and ``pred``) inside the pruned scan — the shared access path of
+    sim_filtered_ivf_topk and the filtered RRF dense tower.
+
+    SELECTIVITY-AWARE probe widening: under a predicate of selectivity
+    s = m/n, a fixed nprobe scans nprobe/k of the corpus but only s of
+    it survives the filter — true filtered neighbors in the
+    (nprobe+1)-th..(nprobe/s)-th cells are lost (measured recall@5
+    0.92 at sf1 with the fixed probe). Widening to ceil(nprobe·n/m)
+    cells (capped at k) restores BOTH recall and the scored-candidate
+    budget, paid in scan (pushed-down, row-group-skippable) rather than
+    shuffle. n and m are exact counts from the single-file base tables
+    (not the many-dir partitioned index) in the head aggregate's one
+    job, integer ceil-div — cross-engine identical to the oracle's
+    sel/npf CTEs. They assume one document per vector: a query vector
+    whose doc_id repeats would repeat that query, so it raises, as
+    does m > n."""
+    meta_tbl, cent_tbl = ivf_meta_index_tables(spark, sf_dir)
+    cent = spark.table(cent_tbl)
+    k = cent.count()
+    ed = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    docs = load(spark, sf_dir, "documents").where(_filter_pred())
+    n_corpus, n_match, head = _corpus_head(
+        ed, N_QUERIES, docs.select(F.col("doc_id").alias("vec_id"))
+    )
+    for (a, _), (b, _) in zip(head, head[1:]):
+        if a == b:
+            raise ValueError(f"duplicate doc_id {a} in documents: one document per vector")
+    if n_match > n_corpus:
+        raise ValueError(f"{n_match} predicate matches > {n_corpus} vectors: doc_id repeats")
+    n_match = max(1, n_match)
+    n_probe = min(k, (ivf_nprobe(k) * n_corpus + n_match - 1) // n_match)
+    q = _head_query_df(spark, head)
+    keep = _filter_pred() if pred is None else _filter_pred() & pred
+    return _probe_index(q, ivf_probe(q, cent, n_probe), [spark.table(meta_tbl)], keep)
+
+
 @register(
     "sim_filtered_ivf_topk",
     tags=("similarity", "ivf", "filtered", "scale"),
@@ -1354,89 +1410,7 @@ def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     This round's predicate sits at s ~ 0.2 vs nprobe/k ~ 1/6, right
     at the boundary — chosen deliberately so both regimes are
     exercised by the recall probe."""
-    from pyspark.sql import Window
-
-    meta_tbl, cent_tbl = ivf_meta_index_tables(spark, sf_dir)
-    cent = spark.table(cent_tbl)
-    k = cent.count()
-    # SELECTIVITY-AWARE probe widening: under a predicate of
-    # selectivity s = m/n, a fixed nprobe scans nprobe/k of the corpus
-    # but only s of it survives the filter — true filtered neighbors
-    # in the (nprobe+1)-th..(nprobe/s)-th cells are lost (measured
-    # recall@5 0.92 at sf1 with the fixed probe). Widening to
-    # ceil(nprobe·n/m) cells (capped at k) restores BOTH recall and
-    # the scored-candidate budget: ~(nprobe/s)·(n/k) rows scanned, of
-    # which ~nprobe·n/k survive — the same mass the unfiltered tier
-    # scores, paid in scan (pushed-down, row-group-skippable) rather
-    # than shuffle. n and m are exact counts, integer ceil-div —
-    # cross-engine identical (the oracle's sel/npf CTEs).
-    # counts come from the single-file base tables (count-star on one
-    # parquet footer / one narrow projection), not the 448-dir
-    # partitioned index — same exact integers as the oracle's
-    # COUNT(*) FROM e and e-JOIN-documents sel CTE, at a fraction of
-    # the task-dispatch cost on local mode's many small partitions.
-    # n, m and the query slice come from ONE aggregate job: doc_id is
-    # unique, so a left join against the filtered documents keeps
-    # exactly one row per corpus vector (n = COUNT(*) unchanged) and
-    # COUNT(_m) counts the matches — the same exact integer the
-    # previous separate left-semi count computed; the head slice is
-    # the bounded collect_list-over-when pattern (_corpus_head).
-    e = load(spark, sf_dir, "embeddings")
-    ed = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    docs_f = (
-        load(spark, sf_dir, "documents")
-        .where(
-            (F.col("lang") == FILTER_LANG) & (F.col("n_chars") >= FILTER_NCHARS)
-        )
-        .select(F.col("doc_id").alias("vec_id"), F.lit(1).alias("_m"))
-    )
-    row = (
-        ed.join(docs_f, "vec_id", "left")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("_m").alias("m"),
-            F.collect_list(
-                F.when(F.col("vec_id") < N_QUERIES, F.struct("vec_id", "emb"))
-            ).alias("head"),
-        )
-        .collect()[0]  # bounded: two scalars + N_QUERIES rows of d doubles
-    )
-    n_corpus, n_match = row["n"], max(1, row["m"])
-    head = sorted((r["vec_id"], list(r["emb"])) for r in row["head"])
-    n_probe = min(k, (ivf_nprobe(k) * n_corpus + n_match - 1) // n_match)
-    q = _head_query_df(spark, head, "qid bigint, qemb array<double>")
-    probe = ivf_probe(q, cent, n_probe)
-    # bounded driver state: at most N_QUERIES x nprobe probed cell ids
-    probed = sorted({r["pcell"] for r in probe.select("pcell").distinct().collect()})
-    # ONE scan: partition prune on cell + attribute predicate pushed
-    # to the parquet reader — the filtered-ANN access path. The unit
-    # vector is already materialized in the index (layout v2), so the
-    # scan feeds the dot directly: no normalization, no cache barrier.
-    idx = spark.table(meta_tbl).where(
-        F.col("cell").isin(probed)
-        & (F.col("lang") == FILTER_LANG)
-        & (F.col("n_chars") >= FILTER_NCHARS)
-    )
-    qu = q.withColumn("qnorm", norm_expr("qemb")).select(
-        "qid",
-        F.transform("qemb", lambda x: x.cast("double") / F.col("qnorm")).alias("qunit"),
-    )
-    scored = (
-        qu.join(F.broadcast(probe), "qid")
-        .join(
-            idx.select("vec_id", "unit", "cell"),
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
-        )
-        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
-    )
+    return _topk(_filtered_probe(spark, sf_dir))
 
 
 @register(
@@ -1477,26 +1451,20 @@ def sim_filtered_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (pruned at the scan) joined on the id — at 100 TB this is
     the fact-to-dim semi-join AQE turns into a broadcast or bloom
     pre-filter."""
-    from pyspark.sql import Window
-
     e = with_unit_vector(load(spark, sf_dir, "embeddings"), "embedding", "unit")
-    keep = load(spark, sf_dir, "documents").where(
-        (F.col("lang") == FILTER_LANG) & (F.col("n_chars") >= FILTER_NCHARS)
-    ).select(F.col("doc_id").alias("vec_id"))
+    keep = load(spark, sf_dir, "documents").where(_filter_pred()).select(
+        F.col("doc_id").alias("vec_id")
+    )
     c = e.join(keep, "vec_id", "left_semi")
     q = F.broadcast(
         e.where(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("qid"), F.col("unit").alias("qunit")
         )
     )
-    scored = q.join(c, F.col("vec_id") != F.col("qid")).select(
-        "qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
+    return _topk(
+        q.join(c, F.col("vec_id") != F.col("qid")).select(
+            "qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine")
+        )
     )
 
 
@@ -1615,24 +1583,8 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query. This is the tier that keeps a 10^9-vector index in
     RAM on one rack.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
-    e = load(spark, sf_dir, "embeddings")
-    # one cached corpus projection serves the head aggregate, the
-    # encoder pass and the re-rank side (previously each was its own
-    # parquet scan); released by harness/bench release_caches()
-    # gate-widened BEFORE the cache (DEFAULT 4 MiB floor): at the bench
-    # SF the gate is off and this is exactly load() — an r14 A/B with a
-    # lower floor measured 32-way tiny-batch dispatch ~2x SLOWER at
-    # 2k vectors. At sf1+ (8 MiB single-row-group corpus) the scan pins
-    # every cached pass (Lloyd iterations, assignment, coarse scan) to
-    # ONE core — the sf1 8-vs-32-core ratio sat at ~1.0 (serial) — and
-    # the exchange is paid once at cache materialization (guide §2.5).
-    ed = _cache(
-        load_wide(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-    )
+    ed = _corpus(spark, sf_dir)
+    n_corpus, _, head = _corpus_head(ed, PQ_ANCHOR_LO + PQ_CODES)
     # ADC shortlist scales with the corpus (5%, floored at PQ_CAND):
     # a FIXED shortlist shrinks to a vanishing corpus fraction as N
     # grows and recall@5 decays with it (measured 0.78 -> 0.58 from
@@ -1640,57 +1592,18 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while keeping the exact re-rank O(N/20) — the oracle applies the
     # identical GREATEST(floor, N/div) cutoff. Production IVF-PQ gets
     # the same effect from nprobe cells; this is the flat-PQ analogue.
-    # Corpus count, query vectors and codebook sample come from ONE
-    # fused aggregate (_corpus_head) instead of a count job plus
-    # per-broadcast cluster scans.
-    n_corpus, head = _corpus_head(ed, PQ_ANCHOR_LO + PQ_CODES)
     cand_k = max(PQ_CAND, n_corpus // PQ_CAND_DIV)
-    from pyspark.sql import Window
-
-    enc = _pq_encode_df(ed, head)
-    # query lookup tables: partial distance to every (m, code) — the
-    # pairing is driver-side, the distance the same Spark expression
-    lut = _pq_lut_local(spark, head)
-    # ADC: M integer lookups per (query, vector)
+    # ADC: M integer lookups per (query, vector) against the query
+    # lookup table, whose pairing is driver-side (_pq_lut_local)
     adc = (
-        enc.join(F.broadcast(lut), ["m", "code"])
+        _pq_encode_df(ed, head)
+        .join(F.broadcast(_pq_lut_local(spark, head)), ["m", "code"])
         .where(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
         .agg(F.sum("pd").alias("adc_nano"))
     )
-    wq = Window.partitionBy("qid").orderBy("adc_nano", "vec_id")
-    cand = (
-        adc.withColumn("crk", F.row_number().over(wq))
-        .where(F.col("crk") <= cand_k)
-        .select("qid", "vec_id")
-    )
-    # exact re-rank of the ADC shortlist; the query side normalizes the
-    # LocalTableScan head slice (same expressions, same doubles)
-    qn = with_unit_vector(
-        _head_query_df(spark, head, "uqid bigint, emb array<double>"),
-        "emb",
-        "qunit",
-        barrier=False,  # 20-row LocalTableScan: skip the cache job
-    ).select("uqid", "qunit")
-    xn = with_unit_vector(ed, "emb", "xunit").select(
-        F.col("vec_id").alias("uxid"), "xunit"
-    )
-    rer = (
-        cand.join(F.broadcast(qn), F.col("qid") == F.col("uqid"))
-        .join(xn, F.col("vec_id") == F.col("uxid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(dot_expr("qunit", "xunit"), 6).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        rer.withColumn("rk", F.row_number().over(wr))
-        .where(F.col("rk") <= TOP_K)
-        .select("qid", "vec_id", "cosine", F.col("rk").cast("bigint").alias("rk"))
-        .orderBy("qid", "rk")
-    )
+    qu = _unit_queries(_head_query_df(spark, head))
+    return _rerank_topk(_shortlist(adc, F.col("adc_nano"), cand_k), ed, qu)
 
 
 def _pq_head_subrows(head: list) -> tuple[list, list]:
@@ -1800,12 +1713,6 @@ def _pq_encode_df(ed: DataFrame, head: list, cell_model=None) -> DataFrame:
     return ed.select("vec_id", "emb").mapInPandas(encode, schema)
 
 
-# The hybrid shares the flat tier's corpus-adaptive coarse quantizer
-# (k = max(10, ceil(sqrt(n))) cells, nprobe = max(6, ceil(k/6)) — the
-# kc scalar-subquery spine), so the ADC join volume is ~nprobe/sqrt(n)
-# of the corpus instead of the round-9 fixed 60% slice.
-
-
 def _ivfpq_oracle() -> str:
     return f"""
 WITH e AS MATERIALIZED ({_SQL_E}),
@@ -1903,51 +1810,15 @@ def sim_ivf_pq_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy balanced as N grows (vs the fixed-plane LSH tier), and
     the corpus-proportional shortlist holds recall (the PQ fix).
     """
-    from pyspark.sql import Window
-
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
-    e = load(spark, sf_dir, "embeddings")
-    # ONE cached corpus projection serves the fused head aggregate, the
-    # k-means fit's first pass, the final cell assignment, the PQ
-    # encoder and the re-rank corpus side — previously each consumer
-    # re-scanned the parquet. Released by release_caches() after the
-    # caller materializes (the dedup-module contract bench/harness use).
-    # gate-widened BEFORE the cache (DEFAULT 4 MiB floor): at the bench
-    # SF the gate is off and this is exactly load() — an r14 A/B with a
-    # lower floor measured 32-way tiny-batch dispatch ~2x SLOWER at
-    # 2k vectors. At sf1+ (8 MiB single-row-group corpus) the scan pins
-    # every cached pass (Lloyd iterations, assignment, coarse scan) to
-    # ONE core — the sf1 8-vs-32-core ratio sat at ~1.0 (serial) — and
-    # the exchange is paid once at cache materialization (guide §2.5).
-    ed = _cache(
-        load_wide(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-    )
-    # corpus count + query vectors + codebook sample in ONE job
-    n_corpus, head = _corpus_head(ed, PQ_ANCHOR_LO + PQ_CODES)
-    cand_k = max(PQ_CAND, n_corpus // PQ_CAND_DIV)
-    k_cells = ivf_n_cells(n_corpus)
-    n_probe = ivf_nprobe(k_cells)
-    # coarse quantizer: learned IVF cells (same training as sim_ivf_topk)
-    model = KMeans(
-        k=k_cells, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-    ).fit(ed)
-    # probe list: LocalTableScan queries × LocalTableScan centroids —
-    # the broadcast build below runs no corpus-side cluster work
-    q = _head_query_df(spark, head, "qid bigint, qemb array<double>")
-    probe = ivf_probe(q, ivf_centroid_rows(spark, model), n_probe).select(
-        F.col("qid").alias("pqid"), "pcell"
-    )
-    # fine quantizer: PQ codes (same encoder as sim_pq_adc_topk) with
-    # the coarse-cell assignment FUSED into the same batch kernel
-    # (assign_batch = transform()'s exact arithmetic on the same
-    # float64 matrix) — one pass emits codes AND cell, removing the
-    # enc ⋈ cells self-join of two projections of one frame. The query
-    # LUT pairing is driver-side, its distances the same Spark
-    # expression (_pq_dist_nano) over the same doubles
+    ed = _corpus(spark, sf_dir)
+    n_corpus, _, head = _corpus_head(ed, PQ_ANCHOR_LO + PQ_CODES)
+    q = _head_query_df(spark, head)
+    model, probe = _coarse_quantizer(spark, ed, n_corpus, q)
+    probe = probe.select(F.col("qid").alias("pqid"), "pcell")
+    # fine quantizer: PQ codes with the coarse-cell assignment FUSED
+    # into the same batch kernel (assign_batch = transform()'s exact
+    # arithmetic on the same float64 matrix) — one pass emits codes AND
+    # cell, no enc ⋈ cells self-join of two projections of one frame
     enc = _pq_encode_df(ed, head, cell_model=model)
     lut = _pq_lut_local(spark, head)
     # ADC restricted to probed cells: code table ⋈ probe list
@@ -1963,48 +1834,11 @@ def sim_ivf_pq_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "vec_id")
         .agg(F.sum("pd").alias("adc_nano"))
     )
-    wq = Window.partitionBy("qid").orderBy("adc_nano", "vec_id")
-    cand = (
-        adc.withColumn("crk", F.row_number().over(wq))
-        .where(F.col("crk") <= cand_k)
-        .select("qid", "vec_id")
-    )
-    qn = with_unit_vector(
-        _head_query_df(spark, head, "uqid bigint, emb array<double>"),
-        "emb",
-        "qunit",
-        barrier=False,  # 20-row LocalTableScan: skip the cache job
-    ).select("uqid", "qunit")
-    xn = with_unit_vector(ed, "emb", "xunit").select(
-        F.col("vec_id").alias("uxid"), "xunit"
-    )
-    rer = (
-        cand.join(F.broadcast(qn), F.col("qid") == F.col("uqid"))
-        .join(xn, F.col("vec_id") == F.col("uxid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(dot_expr("qunit", "xunit"), 6).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        rer.withColumn("rk", F.row_number().over(wr))
-        .where(F.col("rk") <= TOP_K)
-        .select("qid", "vec_id", "cosine", F.col("rk").cast("bigint").alias("rk"))
-        .orderBy("qid", "rk")
-    )
+    cand = _shortlist(adc, F.col("adc_nano"), max(PQ_CAND, n_corpus // PQ_CAND_DIV))
+    return _rerank_topk(cand, ed, _unit_queries(q))
 
 
 # ------------------------------------------------------ IVF-SQ hybrid tier
-
-# The IVF-SQ pairing (FAISS IVF,SQ8): the SAME adaptive coarse
-# quantizer as the flat/PQ tiers prunes the corpus to the probed
-# cells, and inside them the coarse scan ranks by dot product of int8
-# DEQUANTIZED reconstructions instead of full vectors — the round-10
-# verdict's last named wall: the flat SQ tier traded memory but still
-# scanned the whole corpus (49.7 s vs 40.9 s brute at sf10).
-
 
 def _ivfsq_oracle() -> str:
     return f"""
@@ -2090,90 +1924,24 @@ def sim_ivf_sq_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only loss, the codec none; gate in tests/test_quality.py, curve in
     RECALL_r11.json / SCALING.md.
     """
-    from pyspark.sql import Window
-
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
-    e = load(spark, sf_dir, "embeddings")
-    # ONE cached corpus projection serves the fused head aggregate, the
-    # quantizer stats, the fit's first pass, the cell assignment, the
-    # coarse-scan corpus side and the re-rank side (previously each was
-    # its own parquet scan); released by release_caches() post-run.
-    # gate-widened BEFORE the cache (DEFAULT 4 MiB floor): at the bench
-    # SF the gate is off and this is exactly load() — an r14 A/B with a
-    # lower floor measured 32-way tiny-batch dispatch ~2x SLOWER at
-    # 2k vectors. At sf1+ (8 MiB single-row-group corpus) the scan pins
-    # every cached pass (Lloyd iterations, assignment, coarse scan) to
-    # ONE core — the sf1 8-vs-32-core ratio sat at ~1.0 (serial) — and
-    # the exchange is paid once at cache materialization (guide §2.5).
-    ed = _cache(
-        load_wide(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-    )
-    # corpus count + query vectors in ONE job
-    n_corpus, head = _corpus_head(ed, N_QUERIES)
-    k_cells = ivf_n_cells(n_corpus)
-    n_probe = ivf_nprobe(k_cells)
-    # coarse quantizer: learned IVF cells (same training as sim_ivf_topk)
-    model = KMeans(
-        k=k_cells, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-    ).fit(ed)
-    q = _head_query_df(spark, head, "qid bigint, qemb array<double>")
-    probe = ivf_probe(q, ivf_centroid_rows(spark, model), n_probe).select(
-        F.col("qid").alias("pqid"), "pcell"
-    )
-    # fine codec: int8 scalar quantization (same quantizer as
-    # sim_quantized_topk); query reconstructions apply the SAME recon
-    # expression to the LocalTableScan query slice (bit-identical
-    # doubles), riding the probe list (Q × nprobe rows) as one
-    # broadcast side with no corpus-side cluster work in its build.
-    # Reconstruction and coarse-cell assignment ride ONE projection of
-    # the cached corpus (previously rv ⋈ cells equi-joined two
-    # projections of the same frame — a pure-overhead self-join).
+    ed = _corpus(spark, sf_dir)
+    n_corpus, _, head = _corpus_head(ed, N_QUERIES)
+    q = _head_query_df(spark, head)
+    model, probe = _coarse_quantizer(spark, ed, n_corpus, q)
+    # fine codec: the int8 reconstruction and the coarse-cell
+    # assignment ride ONE projection of the cached corpus (no rv ⋈
+    # cells self-join); the queries get the SAME recon expression
+    # (bit-identical doubles) and ride the probe list as one broadcast
     recon = _sq_recon_expr(ed)
     rvc = model.transform(ed, "cell").select(
         "vec_id", recon(F.col("emb")).alias("rv"), "cell"
     )
-    qprobe = F.broadcast(
-        q.select("qid", recon(F.col("qemb")).alias("qrv"))
-        .join(probe, F.col("qid") == F.col("pqid"))
-        .select("qid", "qrv", "pcell")
-    )
-    score = (
-        qprobe.join(
-            rvc,
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
-        )
-        .select("qid", "vec_id", F.round(dot_expr("qrv", "rv"), 6).alias("qscore"))
-    )
-    wc = Window.partitionBy("qid").orderBy(F.col("qscore").desc(), F.col("vec_id"))
-    cand = (
-        score.withColumn("crk", F.row_number().over(wc))
-        .where(F.col("crk") <= QUANT_CAND)
-        .select("qid", "vec_id")
-    )
-    eu = with_unit_vector(ed, "emb", "unit")
-    qe = F.broadcast(
-        with_unit_vector(
-            _head_query_df(spark, head, "qid bigint, qemb array<double>"),
-            "qemb",
-            "qunit",
-            barrier=False,  # 20-row LocalTableScan: skip the cache job
-        ).select("qid", "qunit")
-    )
-    rer = (
-        cand.join(qe, "qid")
-        .join(eu.select("vec_id", "unit"), "vec_id")
-        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rer.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
-    )
+    qprobe = q.select("qid", recon(F.col("qemb")).alias("qrv")).join(probe, "qid")
+    score = F.broadcast(qprobe).join(
+        rvc, (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid"))
+    ).select("qid", "vec_id", F.round(dot_expr("qrv", "rv"), 6).alias("qscore"))
+    cand = _shortlist(score, F.col("qscore").desc(), QUANT_CAND)
+    return _rerank_topk(cand, ed, _unit_queries(q))
 
 
 # ------------------------------------------- sparse (inverted-index) cosine
@@ -2450,15 +2218,11 @@ def dq_embedding_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the (pop, cell) count — ≤ 2k rows. The monitor costs one corpus
     scan regardless of dimensionality or corpus size.
     """
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
-
     e = load(spark, sf_dir, "embeddings")
     ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     anchor = ed.where(F.col("vec_id") % 2 == 0)
-    k_cells = ivf_n_cells(anchor.count())
-    model = KMeans(
-        k=k_cells, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-    ).fit(anchor)
+    model = _ivf_fit(anchor, anchor.count())
+    k_cells = len(model.centroids)
     w = model.transform(ed, "cell").select(
         F.col("cell"),
         (F.col("vec_id") % 2).alias("pop"),
@@ -2602,8 +2366,6 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (qid, doc_id, rank) from each tower, so towers swap freely);
     fusion itself joins two ≤ Q·RRF_DEPTH-row lists — driver-free,
     shuffle-light, and independent of corpus size."""
-    from pyspark.sql import Window
-
     from spark_rapids_ml_spark.operators.dedup import _cache
 
     alldocs = load(spark, sf_dir, "documents")
@@ -2653,15 +2415,10 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dscore = q.join(eu, F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        F.col("vec_id").alias("doc_id"),
-        F.round(dot_expr("qunit", "unit"), 6).alias("cosine"),
+        "qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine")
     )
-    wd = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("doc_id"))
-    den = (
-        dscore.withColumn("dense_rk", F.row_number().over(wd))
-        .where(F.col("dense_rk") <= RRF_DEPTH)
-        .select("qid", "doc_id", "dense_rk")
+    den = _topk(dscore, RRF_DEPTH).select(
+        "qid", F.col("vec_id").alias("doc_id"), F.col("rk").alias("dense_rk")
     )
     # fusion: integer micro-contributions over the union of the lists
     fused = lex.join(den, ["qid", "doc_id"], "full_outer").select(
@@ -2804,17 +2561,14 @@ def retrieval_rrf_filtered_fusion(spark: SparkSession, sf_dir: str) -> DataFrame
     integers the filtered tier already uses; the id cap is an
     evaluation-slice artifact applied as one more pushed scan
     predicate in both engines."""
-    from pyspark.sql import Window
-
     from spark_rapids_ml_spark.operators.dedup import _cache
 
     alldocs = load(spark, sf_dir, "documents")
     cap = _doc_slice_cap(alldocs.count())
-    pred = (F.col("lang") == FILTER_LANG) & (F.col("n_chars") >= FILTER_NCHARS)
 
     # lexical tower over the FILTERED collection: df/idf computed on
     # matching docs only; query docs weight by the collection's idf
-    fd = alldocs.where((F.col("doc_id") <= cap) & pred).select(
+    fd = alldocs.where((F.col("doc_id") <= cap) & _filter_pred()).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     sh = _cache(fd.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
@@ -2859,58 +2613,8 @@ def retrieval_rrf_filtered_fusion(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     # dense tower: the filtered IVF access path at RRF_DEPTH
-    meta_tbl, cent_tbl = ivf_meta_index_tables(spark, sf_dir)
-    cent = spark.table(cent_tbl)
-    k = cent.count()
-    e = load(spark, sf_dir, "embeddings")
-    n_corpus = e.count()
-    n_match = max(
-        1,
-        e.select("vec_id")
-        .join(
-            alldocs.where(pred).select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
-        )
-        .count(),
-    )
-    n_probe = min(k, (ivf_nprobe(k) * n_corpus + n_match - 1) // n_match)
-    q = e.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).where(F.col("qid") < N_QUERIES)
-    probe = ivf_probe(q, cent, n_probe)
-    # bounded driver state: at most N_QUERIES x widened-nprobe ids —
-    # the same '.select("pcell").distinct().collect()' contract as
-    # every other persisted-index probe
-    probed = sorted({r["pcell"] for r in probe.select("pcell").distinct().collect()})
-    idx = spark.table(meta_tbl).where(
-        F.col("cell").isin(probed)
-        & (F.col("lang") == FILTER_LANG)
-        & (F.col("n_chars") >= FILTER_NCHARS)
-        & (F.col("vec_id") <= cap)
-    )
-    qu = q.withColumn("qnorm", norm_expr("qemb")).select(
-        "qid",
-        F.transform("qemb", lambda x: x.cast("double") / F.col("qnorm")).alias("qunit"),
-    )
-    dscore = (
-        qu.join(F.broadcast(probe), "qid")
-        .join(
-            idx.select("vec_id", "unit", "cell"),
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
-        )
-        .select(
-            "qid",
-            F.col("vec_id").alias("doc_id"),
-            F.round(dot_expr("qunit", "unit"), 6).alias("cosine"),
-        )
-    )
-    wd = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("doc_id"))
-    den = (
-        dscore.withColumn("dense_rk", F.row_number().over(wd))
-        .where(F.col("dense_rk") <= RRF_DEPTH)
-        .select("qid", "doc_id", "dense_rk")
+    den = _topk(_filtered_probe(spark, sf_dir, F.col("vec_id") <= cap), RRF_DEPTH).select(
+        "qid", F.col("vec_id").alias("doc_id"), F.col("rk").alias("dense_rk")
     )
 
     # fusion: identical integer micro-unit arithmetic
@@ -3039,10 +2743,6 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidate generation is the chosen tier's cost; the greedy
     loop is O(Q * MMR_CAND^2 * MMR_K) total FLOPs on MMR_CAND-row
     groups — independent of corpus size. No driver hop anywhere."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
     e = load(spark, sf_dir, "embeddings")
     ed = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")

@@ -52,7 +52,8 @@ def clamped_shuffle(spark: SparkSession, n: int):
     finally:
         spark.conf.set(key, prev)
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] width: SPARK_GRAFT_CPUS, else every core of the host
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 # the directory holding the spark_rapids_ml_spark package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

@@ -230,3 +230,26 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql queries."""
     for name in TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def warehouse_dir(spark: SparkSession) -> str:
+    """The session's managed-table warehouse directory as a local path."""
+    return spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
+        "file:", ""
+    )
+
+
+def reset_managed_table(spark: SparkSession, table: str) -> None:
+    """Drop the managed table ``db.name`` and delete its warehouse
+    directory before a rebuild. The in-memory catalog is per-session,
+    so a directory left by a previous session would make saveAsTable
+    fail; the DROP comes first so a still-registered catalog entry
+    never outlives its data files (a dangling entry would fail on read
+    instead of a clean table-not-found)."""
+    import shutil
+
+    db, name = table.split(".")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(
+        os.path.join(warehouse_dir(spark), f"{db}.db", name), ignore_errors=True
+    )

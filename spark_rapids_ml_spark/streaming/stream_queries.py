@@ -2135,59 +2135,24 @@ def _ann_index_current(index_root: str) -> dict:
 
 def _probe_cell_index(spark: SparkSession, qv, model, index_dir,
                       n_probe: int) -> DataFrame:
-    """Probe a cell-partitioned on-disk index: nprobe nearest cells per
-    query (shared ivf_probe rank-and-tiebreak), PARTITION-PRUNED scan
-    of only the probed cell dirs, exact cosine re-rank to TOP_K.
-    ``qv`` carries (qid, qemb). ``index_dir`` is one dir or a LIST of
-    dirs — a versioned index's manifest names the base + delta dirs
-    and the scan unions them (each still cell-partitioned, each still
-    pruned). The one driver collect is the probed-cell id set —
-    bounded by Q x nprobe cell ids (the sim_ivf_persisted_probe
-    partition-prune contract)."""
-    from pyspark.sql import Window
-
+    """Top-k of the queries ``qv`` (qid, qemb) over the n_probe nearest
+    cells of ``model`` in a cell-partitioned on-disk index — the
+    similarity._probe_index pruned scan. ``index_dir`` is one dir or a
+    LIST of dirs: a versioned index's manifest names the base + delta
+    dirs and the scan unions them (each still cell-partitioned, each
+    still pruned)."""
     from spark_rapids_ml_spark.operators.similarity import (
-        TOP_K,
-        dot_expr,
+        _probe_index,
+        _topk,
         ivf_centroid_rows,
         ivf_probe,
-        with_unit_vector,
     )
 
     probe = ivf_probe(qv, ivf_centroid_rows(spark, model), n_probe)
-    # bounded driver state: at most Q x nprobe probed cell ids — the
-    # sim_ivf_persisted_probe partition-prune contract
-    probed = sorted({r["pcell"] for r in probe.select("pcell").distinct().collect()})
     dirs = [index_dir] if isinstance(index_dir, str) else list(index_dir)
-    # one read per dir (each dir is its own partition-discovery root,
-    # so each keeps its cell= partition column and its pruning) then
-    # union — a multi-root read would conflate the directory layouts
-    parts = [
-        spark.read.parquet(d).where(F.col("cell").isin(probed)) for d in dirs
-    ]
-    idx = parts[0]
-    for p in parts[1:]:
-        idx = idx.unionByName(p)
-    iu = with_unit_vector(idx, "emb", "unit")
-    qu = F.broadcast(
-        with_unit_vector(qv.withColumnRenamed("qemb", "emb"), "emb", "qunit").select(
-            "qid", "qunit"
-        )
-    )
-    scored = (
-        qu.join(F.broadcast(probe), "qid")
-        .join(
-            iu.select("vec_id", "unit", "cell"),
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("qid")),
-        )
-        .select("qid", "vec_id", F.round(dot_expr("qunit", "unit"), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .orderBy("qid", "rk")
-    )
+    # one read per dir: each dir is its own partition-discovery root, so
+    # each keeps its cell= partition column and its pruning
+    return _topk(_probe_index(qv, probe, [spark.read.parquet(d) for d in dirs]))
 
 
 def _ivf_ingest_oracle() -> str:
@@ -2268,12 +2233,10 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink manifest makes restarts idempotent. Probes pay nprobe/k of
     the index bytes regardless of how many batches built it.
     """
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
     from spark_rapids_ml_spark.operators.similarity import (
-        IVF_ITERS,
         K_CELLS,
         N_QUERIES,
-        ivf_n_cells,
+        _ivf_fit,
         ivf_nprobe,
     )
 
@@ -2286,10 +2249,7 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     n = ed.count()
     anchor = ed.where(F.col("vec_id") < max(K_CELLS, n // IVFSTREAM_ANCHOR_DEN))
-    k_cells = ivf_n_cells(anchor.count())
-    model = KMeans(
-        k=k_cells, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-    ).fit(anchor)
+    model = _ivf_fit(anchor, anchor.count())
 
     # replay the corpus as ranged micro-batches through the ingest,
     # then probe the finished index (partition-pruned scan, the
@@ -2299,7 +2259,9 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = ed.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
-    return _probe_cell_index(spark, qv, model, index_dir, ivf_nprobe(k_cells))
+    return _probe_cell_index(
+        spark, qv, model, index_dir, ivf_nprobe(len(model.centroids))
+    )
 
 
 # ------------------------------- drift-gated retrain lifecycle (ANN)
@@ -2508,14 +2470,10 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     attribute ``last_serving_model`` for the byte-stability test."""
     import shutil
 
-    from pyspark.sql import Window  # noqa: F401  (probe helper owns windows)
-
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
     from spark_rapids_ml_spark.operators.similarity import (
-        IVF_ITERS,
         N_QUERIES,
         PSI_RETRAIN_MICRO,
-        ivf_n_cells,
+        _ivf_fit,
         ivf_nprobe,
         psi_micro_sql,
     )
@@ -2532,8 +2490,8 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     # ingested through the streaming path, committed under the
     # versioned-manifest layout (round 13 — the index exists BEFORE
     # new data arrives, which is what makes an append meaningful)
-    k1 = ivf_n_cells(ref.count())
-    m1 = KMeans(k=k1, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0).fit(ref)
+    m1 = _ivf_fit(ref, ref.count())
+    k1 = len(m1.centroids)
     tag = sf_dir.strip("/").replace("/", "_")
     variant = "drift" if shift else "nodrift"
     stage = f"/root/repo/.tmp/stream_src_ivf/{tag}_lifecycle_{variant}"
@@ -2585,18 +2543,14 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     # swap; the v1 manifest stays on disk for rollback.
     ck2 = f"{_CHECKPOINT_ROOT}/ann_lifecycle_{uuid.uuid4().hex[:8]}"
     if retrained:
-        k2 = ivf_n_cells(cur.count())
-        serve_model = KMeans(
-            k=k2, feature_col="emb", id_col="vec_id", max_iter=IVF_ITERS, tol=0.0
-        ).fit(cur)
-        serve_k = k2
+        serve_model = _ivf_fit(cur, cur.count())
         rebuild_dir = f"{index_root}/data_rebuild_v2"
         _stream_build_cell_index(
             spark, ref.unionByName(cur), serve_model, stage, rebuild_dir, ck2
         )
         _ann_index_commit(index_root, 2, ["data_rebuild_v2"], retrained=1)
     else:
-        serve_model, serve_k = m1, k1
+        serve_model = m1
         delta_dir = f"{index_root}/data_delta_v2"
         _stream_build_cell_index(spark, cur, serve_model, stage, delta_dir, ck2)
         _ann_index_commit(
@@ -2614,7 +2568,9 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     qv = cur.where(F.col("vec_id") < 2 * N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
-    out = _probe_cell_index(spark, qv, serve_model, serve_dirs, ivf_nprobe(serve_k))
+    out = _probe_cell_index(
+        spark, qv, serve_model, serve_dirs, ivf_nprobe(len(serve_model.centroids))
+    )
     return out.select(
         "qid",
         "vec_id",
@@ -2737,11 +2693,9 @@ def stream_ann_compaction_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     cites."""
     import shutil
 
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
     from spark_rapids_ml_spark.operators.similarity import (
-        IVF_ITERS,
         N_QUERIES,
-        ivf_n_cells,
+        _ivf_fit,
         ivf_nprobe,
     )
 
@@ -2751,9 +2705,7 @@ def stream_ann_compaction_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = ed.where(F.col("vec_id") % 2 == 1)
 
     n_ref = ref.count()
-    k1 = ivf_n_cells(n_ref)
-    m1 = KMeans(k=k1, feature_col="emb", id_col="vec_id",
-                max_iter=IVF_ITERS, tol=0.0).fit(ref)
+    m1 = _ivf_fit(ref, n_ref)
 
     tag = sf_dir.strip("/").replace("/", "_")
     stage = f"/root/repo/.tmp/stream_src_ivf/{tag}_compaction"
@@ -2825,7 +2777,7 @@ def stream_ann_compaction_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = cur.where(F.col("vec_id") < 2 * N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
-    out = _probe_cell_index(spark, qv, m1, serve_dirs, ivf_nprobe(k1))
+    out = _probe_cell_index(spark, qv, m1, serve_dirs, ivf_nprobe(len(m1.centroids)))
     return out.select(
         "qid",
         "vec_id",
@@ -2931,11 +2883,9 @@ def stream_ann_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (the sim_ivf_persisted_probe contract)."""
     import shutil
 
-    from spark_rapids_ml_spark.ml.kmeans import KMeans
     from spark_rapids_ml_spark.operators.similarity import (
-        IVF_ITERS,
         N_QUERIES,
-        ivf_n_cells,
+        _ivf_fit,
         ivf_nprobe,
     )
 
@@ -2945,9 +2895,7 @@ def stream_ann_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = ed.where(F.col("vec_id") % 2 == 1)
 
     n_ref = ref.count()
-    k1 = ivf_n_cells(n_ref)
-    m1 = KMeans(k=k1, feature_col="emb", id_col="vec_id",
-                max_iter=IVF_ITERS, tol=0.0).fit(ref)
+    m1 = _ivf_fit(ref, n_ref)
 
     tag = sf_dir.strip("/").replace("/", "_")
     stage = f"/root/repo/.tmp/stream_src_ivf/{tag}_rollback"
@@ -2972,7 +2920,7 @@ def stream_ann_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = cur.where(F.col("vec_id") < 2 * N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
-    out = _probe_cell_index(spark, qv, m1, serve_dirs, ivf_nprobe(k1))
+    out = _probe_cell_index(spark, qv, m1, serve_dirs, ivf_nprobe(len(m1.centroids)))
     return out.select(
         "qid",
         "vec_id",

@@ -59,7 +59,6 @@ ALLOWED = {
     },
     "operators/similarity.py": {
         'F.collect_list( F.when(F.col("vec_id") < cap',  # _corpus_head: when() emits NULL for non-head rows and collect_list skips NULLs — buffer bounded at cap (<= 36) rows regardless of corpus size
-        'F.collect_list( F.when(F.col("vec_id") < N_QUERIES',  # filtered-IVF fused aggregate: same NULL-skipping pattern, bounded at N_QUERIES (=20) rows
     },
 }
 

@@ -63,11 +63,8 @@ ALLOWED = {
     },
     "operators/similarity.py": {
         "# bounded: cap (<= 36) rows",  # _corpus_head fused count+query/codebook slice: cap rows of d doubles
-        "# bounded: two scalars + N_QUERIES rows",  # filtered-IVF fused n/m/query-slice aggregate
         ".orderBy(\"pos\")",  # quantizer stats: d=64 rows
         '.select("pcell").distinct().collect()',  # probed cells <= nprobe
-        "cb.collect()",  # PQ codebook: M*K rows
-        '< N_QUERIES).orderBy("vec_id").collect()',  # SQ query matrix: Q x d doubles (the query workload itself), shipped as the batched-kernel closure constant
     },
     "ml/kmeans.py": {
         ".limit(self.k).collect()",  # k init rows
@@ -78,7 +75,6 @@ ALLOWED = {
     },
     "streaming/stream_queries.py": {
         "bounded: d^2 + d + 1 statistic cells",  # incremental-covariance final state: one flat moments vector
-        "sim_ivf_persisted_probe partition-prune contract",  # IVF ingest probe list — bounded at N_QUERIES x nprobe (~Q * ceil(sqrt(n))/6) cell ids
     },
     "ml/scaler.py": {
         "mapInPandas(run, _PACKED).collect()",  # packed per-partition stats

@@ -41,7 +41,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n = int(sys.argv[1])
     names = sys.argv[2:]
-    spark = get_spark("ab", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("ab")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
 

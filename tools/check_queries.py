@@ -17,8 +17,7 @@ from spark_rapids_ml_spark.session import get_spark
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark("check", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")),
-                      shuffle_partitions=16)
+    spark = get_spark("check", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
     names = sys.argv[1:] or list(specs)

@@ -81,11 +81,7 @@ def main() -> None:
         return
     from spark_rapids_ml_spark.session import get_spark
 
-    spark = get_spark(
-        "digest_audit",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")),
-        shuffle_partitions=16,
-    )
+    spark = get_spark("digest_audit", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
     bad = []

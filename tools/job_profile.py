@@ -37,7 +37,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
         "jobprofile",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file:{LOG_DIR}",

@@ -22,9 +22,7 @@ from spark_rapids_ml_spark.session import get_spark
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        "recall", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    )
+    spark = get_spark("recall")
     spark.sparkContext.setLogLevel("ERROR")
 
     from spark_rapids_ml_spark.operators import similarity as sim

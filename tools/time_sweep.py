@@ -21,7 +21,7 @@ from spark_rapids_ml_spark.session import get_spark
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark("sweep", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("sweep")
     spark.sparkContext.setLogLevel("ERROR")
     from spark_rapids_ml_spark.operators.dedup import release_caches
 
