@@ -1,16 +1,18 @@
 """Distributed Lloyd's k-means over an array<numeric> or Vector column.
 
 Per iteration: broadcast the k×d centroid matrix into an Arrow
-mapInPandas stage; each batch assigns its rows to the nearest centroid
-(vectorized numpy distance matrix) and emits per-cluster (count, sum)
-partials; a groupBy(cluster) sum merges them; the driver updates
-centroids. Deterministic: init = the k rows with the smallest id
-column (no RNG), ties impossible on a unique id.
+mapInArrow stage; each batch assigns its rows to the nearest centroid
+(vectorized numpy distance matrix) and each partition emits one packed
+per-cluster (counts, sums) partial; the driver sums the partials in
+partition order and updates centroids. Deterministic: init = the k
+rows with the smallest id column (no RNG), ties impossible on a unique
+id.
 
-Scale: each iteration is ONE linear scan; shuffle carries k×d doubles
-per partition. State on the driver is k×d. This is exactly the plan a
-1000-executor k-means runs; k-means|| init would replace the seed rule
-at real scale (kept id-deterministic here for oracle-ability).
+Scale: each iteration is ONE linear scan, one Spark job; each
+partition sends k×(d+1) doubles to the driver. State on the driver is
+k×d. This is exactly the plan a 1000-executor k-means runs;
+k-means|| init would replace the seed rule at real scale (kept
+id-deterministic here for oracle-ability).
 """
 
 from __future__ import annotations
@@ -18,26 +20,18 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import LongType
 
 from spark_rapids_ml_spark.ml.schema import (
     ParamsPersistence,
-    as_matrix,
+    decode,
     load_model,
+    reduce_partials,
     save_model,
     vector_column,
-)
-
-# per-partition, per-cluster partial: [count, sum_0 .. sum_{d-1}]
-# (count packed into the array so ONE explode+agg merges everything)
-_ASSIGN_SCHEMA = StructType(
-    [
-        StructField("cluster", LongType()),
-        StructField("packed", ArrayType(DoubleType())),
-    ]
+    with_batch_column,
 )
 
 
@@ -66,22 +60,18 @@ class KMeans(ParamsPersistence):
         # cache each pass re-reads and re-decodes the source (parquet
         # scan + cast) — the standard MLlib discipline (KMeans.run warns
         # when its input is uncached). The id column rides along so the
-        # deterministic seed collect below materializes the SAME cached
-        # pass the iterations read — previously the seed scan was a
-        # separate uncached read of the source. Freed in the finally,
-        # so no storage outlives the fit.
-        data = df.select(
-            self.id_col, vec.cast("array<double>").alias("v")
-        ).persist()
+        # seed rows come from the same cached pass. Freed in the
+        # finally, so no storage outlives the fit.
+        data = df.select(self.id_col, vec.cast("array<double>").alias(feat)).persist()
         try:
             # deterministic init: rows with the k smallest ids. The cast
             # to double is exact (float32 widens losslessly), so seeds
             # are bit-identical to reading the raw feature column.
-            seed_rows = data.orderBy(self.id_col).limit(self.k).collect()
-            if not seed_rows:
+            seeds = [r[feat] for r in data.orderBy(self.id_col).limit(self.k).collect()]
+            centroids = decode(pa.array(seeds, pa.list_(pa.float64())), feat)
+            if not len(centroids):
                 raise ValueError("empty input")
-            centroids = as_matrix(pd.Series([r["v"] for r in seed_rows]))
-            centroids = self._lloyd(data.select("v"), centroids)
+            centroids = self._lloyd(data.select(feat), centroids)
         finally:
             data.unpersist()
         return KMeansModel(centroids, feat)
@@ -89,16 +79,15 @@ class KMeans(ParamsPersistence):
     def _lloyd(self, data: DataFrame, centroids: np.ndarray) -> np.ndarray:
         """max_iter Lloyd iterations over the cached projection; returns
         the final centroid matrix."""
+        k, d = centroids.shape
         for _ in range(self.max_iter):
             c = centroids.copy()
 
-            def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                counts = np.zeros(len(c), dtype=np.int64)
+            def assign(batches: Iterator[np.ndarray]) -> np.ndarray | None:
+                """A partition's packed [counts(k), sums(k×d)]."""
+                counts = np.zeros(k, dtype=np.int64)
                 sums = np.zeros_like(c)
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    x = as_matrix(pdf["v"])
+                for x in batches:
                     # pairwise squared distances via the Gram trick
                     d2 = (
                         (x * x).sum(axis=1)[:, None]
@@ -109,34 +98,18 @@ class KMeans(ParamsPersistence):
                     # vectorized scatter-accumulate: the per-cluster
                     # mask loop was O(k·rows) python at k≈√n (448
                     # passes per batch at sf10)
-                    counts += np.bincount(lab, minlength=len(c))
+                    counts += np.bincount(lab, minlength=k)
                     np.add.at(sums, lab, x)
-                rows = [
-                    {
-                        "cluster": j,
-                        "packed": np.concatenate(([float(counts[j])], sums[j])).tolist(),
-                    }
-                    for j in range(len(c))
-                    if counts[j] > 0
-                ]
-                if rows:
-                    yield pd.DataFrame(rows)
+                return np.concatenate((counts, sums.ravel())) if counts.any() else None
 
-            # collect the per-partition partials directly (≤ k rows per
-            # partition, k×(d+1) doubles each) and merge on the driver —
-            # one single-stage job per iteration instead of an extra
-            # explode+shuffle round. At 1000-executor scale the partial
-            # set is still only n_partitions×k rows; switch the merge to
-            # treeAggregate if k×d×partitions ever outgrows the driver.
-            partials = data.mapInPandas(assign, _ASSIGN_SCHEMA).collect()
+            # one k×(d+1) partial per partition, summed on the driver in
+            # partition order. At 1000-executor scale the partial set is
+            # still only n_partitions×k×(d+1) doubles; switch the merge
+            # to treeAggregate if that ever outgrows the driver.
+            flat = reduce_partials(data, self.feature_col, assign, width=d)
+            cnts, sums = flat[:k], flat[k:].reshape(k, d)
             new_c = centroids.copy()
-            cnts = np.zeros(self.k)
-            sums = np.zeros_like(centroids)
-            for r in partials:
-                packed = np.asarray(r["packed"])
-                cnts[r["cluster"]] += packed[0]
-                sums[r["cluster"]] += packed[1:]
-            for j in range(self.k):
+            for j in range(k):
                 if cnts[j] > 0:
                     new_c[j] = sums[j] / cnts[j]
             shift = float(np.abs(new_c - centroids).max())
@@ -178,10 +151,6 @@ class KMeansModel:
         return d2.argmin(axis=1).astype(np.int64)
 
     def transform(self, df: DataFrame, output_col: str = "cluster") -> DataFrame:
-        model = self
-
-        @F.pandas_udf(LongType())
-        def assign(series: pd.Series) -> pd.Series:
-            return pd.Series(model.assign_batch(as_matrix(series)))
-
-        return df.withColumn(output_col, assign(vector_column(df.schema, self.feature_col)))
+        return with_batch_column(
+            df, self.feature_col, output_col, self.centroids.shape[1], self.assign_batch, LongType()
+        )

@@ -1,9 +1,10 @@
 """Distributed linear regression via normal equations.
 
 Reuses the engine's Gram-partial machinery (ml/pca.py): one linear
-scan gathers (n, Σz, ΣzzᵀT) for z = [x | y]; the driver then solves
+scan (one Spark job) gathers (n, Σz, ΣzzᵀT) for z = [x | y]; the
+driver then solves
 (XᵀX)β = Xᵀy — both blocks are sub-matrices of the z-Gram. Same scale
-property as PCA fit: shuffle O(n_features²) per partition, driver
+property as PCA fit: O(n_features²) partial per partition, driver
 memory O(n_features²), row count irrelevant.
 
 This is the classic scalable closed-form fit (the shape GPU ML
@@ -14,19 +15,18 @@ L-BFGS/SGD — out of scope for the declared contract.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from spark_rapids_ml_spark.ml.pca import _partials, _probe_n_cols, _sum_partials
+from spark_rapids_ml_spark.ml.pca import _moments
 from spark_rapids_ml_spark.ml.schema import (
     ParamsPersistence,
-    as_matrix,
     load_model,
     save_model,
     validate_numeric_col,
     vector_column,
+    with_batch_column,
 )
 
 
@@ -44,14 +44,19 @@ class LinearRegression(ParamsPersistence):
     def fit(self, df: DataFrame) -> "LinearRegressionModel":
         vec = vector_column(df.schema, self.feature_col)  # fail fast, zero jobs
         validate_numeric_col(df.schema, self.label_col)
-        z = df.select(
-            F.concat(
-                vec.cast("array<double>"),
-                F.array(F.col(self.label_col).cast("double")),
-            ).alias("z")
+        # z = [x | y]; named after both inputs, so a degenerate row's
+        # error names them
+        z = f"[{self.feature_col}, {self.label_col}]"
+        n, colsum, gram = _moments(
+            df.select(
+                F.concat(
+                    vec.cast("array<double>"),
+                    F.array(F.col(self.label_col).cast("double")),
+                ).alias(z)
+            ),
+            z,
         )
-        d = _probe_n_cols(z, "z") - 1  # features
-        n, colsum, gram = _sum_partials(_partials(z, "z"), d + 1)
+        d = len(colsum) - 1  # features
         sx = colsum[:d]
         sy = colsum[d]
         gxx = gram[:d, :d]
@@ -98,9 +103,6 @@ class LinearRegressionModel:
     def transform(self, df: DataFrame, output_col: str = "prediction") -> DataFrame:
         beta = self.coefficients.copy()
         b0 = self.intercept
-
-        @F.pandas_udf(DoubleType())
-        def predict(series: pd.Series) -> pd.Series:
-            return pd.Series(as_matrix(series) @ beta + b0)
-
-        return df.withColumn(output_col, predict(vector_column(df.schema, self.feature_col)))
+        return with_batch_column(
+            df, self.feature_col, output_col, len(beta), lambda x: x @ beta + b0, DoubleType()
+        )

@@ -9,138 +9,91 @@ module re-expresses that contract Spark-first:
 
 | reference                                      | here |
 |------------------------------------------------|------|
-| RDD[Vector] + per-partition densify + JNI GEMM (RapidsRowMatrix.scala:177-199) | mapInPandas: Arrow batch → numpy ``X.T @ X`` partial Gram |
+| RDD[Vector] + per-partition densify + JNI GEMM (RapidsRowMatrix.scala:177-199) | mapInArrow: Arrow batch → ``schema.decode`` (flat values + reshape) → numpy ``X.T @ X`` partial Gram |
 | dense or sparse Vector input, identical results (RapidsRowMatrix.scala:186, PCASuite.scala:155-190) | ``schema.vector_column``: a VectorUDT column becomes ``array<double>`` via ``vector_to_array`` before the Arrow stage; ``array<numeric>`` is read as is |
-| Statistics.colStats mean + broadcast (RapidsRowMatrix.scala:152-166) | first pass: partial (n, colsum) → driver mean, captured in closure |
-| reduce(_+_) of n×n partials (RapidsRowMatrix.scala:201) | posexplode partials → groupBy(idx).sum — Catalyst partial+final agg |
+| Statistics.colStats mean + broadcast (RapidsRowMatrix.scala:152-166) | spr backend's first pass: partial (n, colsum) → driver mean, captured in closure |
+| reduce(_+_) of n×n partials (RapidsRowMatrix.scala:201) | ``schema.reduce_partials``: one packed partial per partition, collected in ONE job and summed on the driver in partition order; the vector width is read off the partial's length (no probe job) |
 | RAFT eigDC + reverse + sqrt + signFlip (rapidsml_jni.cu:302-356) | numpy.linalg.eigh + [::-1] + max-|x|-positive sign flip |
-| scala UDF pcᵀ·v per row (RapidsPCA.scala:187-189) | pandas_udf: batched ``X @ pc`` — the fast path the reference left commented out (RapidsPCA.scala:172-185) |
+| scala UDF pcᵀ·v per row (RapidsPCA.scala:187-189) | scalar Arrow UDF: batched ``X @ pc``, encoded straight to an Arrow list column — the fast path the reference left commented out (RapidsPCA.scala:172-185) |
 | params metadata JSON + 1-row parquet (RapidsPCA.scala:218-254) | save(): metadata.json + data/ parquet, symmetric load() |
 
-Scale notes (100 TB): both passes are single linear scans; shuffle
-traffic is O(n_cols²) per partition (the Gram partial), independent of
-row count — same property as the reference's treeReduce. Driver-side
-memory is one n×n matrix, guarded by the reference's documented
-n_cols ≤ 65535 bound (RapidsRowMatrix.scala:147,203-205).
+Scale notes (100 TB): both passes are single linear scans with no
+shuffle; the driver receives O(n_cols²) per partition (the Gram
+partial), independent of row count. At thousands of partitions that
+partial set is what a treeReduce (RapidsRowMatrix.scala:201) would
+bound. Driver-side memory is one n×n matrix, guarded by the
+reference's documented n_cols ≤ 65535 bound (RapidsRowMatrix.scala:
+147,203-205), checked in the kernel before the first GEMM.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from math import isqrt
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType
 
 from spark_rapids_ml_spark.ml.schema import (
     ParamsPersistence,
-    as_matrix,
+    fold,
     load_model,
+    partials,
+    reduce_partials,
     save_model,
     transform_schema,
-    vector_column,
+    with_batch_column,
 )
 
 MAX_COLS = 65535  # RapidsRowMatrix.scala:147 — O(n²) driver matrix bound
 
 
+def _moments_kernel(batches: Iterator[np.ndarray]) -> np.ndarray | None:
+    """A partition's raw moments packed as [n, colsum(d), gram(d²)]."""
+
+    def moments(x: np.ndarray) -> np.ndarray:
+        if x.shape[1] > MAX_COLS:
+            raise ValueError(f"n_cols {x.shape[1]} exceeds bound {MAX_COLS}")
+        # the per-batch GEMM (reference: cuBLAS dgemm)
+        return np.concatenate(([x.shape[0]], x.sum(axis=0), (x.T @ x).ravel()))
+
+    return fold(np.add, map(moments, batches))
+
+
+def _colsum_kernel(batches: Iterator[np.ndarray]) -> np.ndarray | None:
+    """A partition's [n, colsum(d)]."""
+    return fold(np.add, (np.concatenate(([x.shape[0]], x.sum(axis=0))) for x in batches))
+
+
 def _partials(df: DataFrame, input_col: str) -> DataFrame:
-    """One flat partial per partition: [n, colsum(n), gram(n²)] packed
-    into a single array so the whole reduction is ONE aggregation job."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        s = None
-        g = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = as_matrix(pdf[input_col])
-            n += x.shape[0]
-            cs = x.sum(axis=0)
-            gr = x.T @ x  # the per-batch GEMM (reference: cuBLAS dgemm)
-            s = cs if s is None else s + cs
-            g = gr if g is None else g + gr
-        if n > 0:
-            packed = np.concatenate(([float(n)], s, g.ravel()))
-            yield pd.DataFrame({"packed": [packed.tolist()]})
-
-    return df.select(vector_column(df.schema, input_col)).mapInPandas(
-        run, StructType([StructField("packed", ArrayType(DoubleType()))])
-    )
+    """One flat moments partial per partition, ``packed array<double>``
+    — the unreduced form a Spark-side state merge folds."""
+    return partials(df, input_col, _moments_kernel)
 
 
-def _reduce_flat(partials: DataFrame, length: int) -> np.ndarray:
-    """Distributed elementwise sum of packed partial vectors via
-    posexplode + group-by — Catalyst's partial+final aggregation is
-    the treeReduce/treeAggregate (RapidsRowMatrix.scala:201,208), in
-    one job. Shuffle volume is O(length) per partition, row-count
-    independent."""
-    rows = (
-        partials.select(F.posexplode("packed").alias("idx", "val"))
-        .groupBy("idx")
-        .agg(F.sum("val").alias("s"))
-        .collect()
-    )
-    flat = np.zeros(length)
-    for row in rows:
-        flat[row["idx"]] = row["s"]
-    return flat
+def _unpack_moments(flat: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
+    """(n, colsum, gram) of a summed [n, colsum(d), gram(d²)] vector;
+    d is read off its length 1 + d + d²."""
+    d = (isqrt(4 * len(flat) - 3) - 1) // 2
+    return int(round(flat[0])), flat[1 : 1 + d], flat[1 + d :].reshape(d, d)
 
 
-def _sum_partials(partials: DataFrame, n_cols: int) -> tuple[int, np.ndarray, np.ndarray]:
-    flat = _reduce_flat(partials, 1 + n_cols + n_cols * n_cols)
-    n = int(round(flat[0]))
-    colsum = flat[1 : 1 + n_cols]
-    gram = flat[1 + n_cols :].reshape(n_cols, n_cols)
-    return n, colsum, gram
-
-
-def _probe_n_cols(df: DataFrame, input_col: str) -> int:
-    """Vector width from the first row (one or two Spark jobs); raises
-    on empty input."""
-    first = df.select(input_col).first()
-    if first is None:
-        raise ValueError("empty input")
-    return len(first[0])
+def _moments(df: DataFrame, input_col: str) -> tuple[int, np.ndarray, np.ndarray]:
+    """(n, colsum, gram) of ``input_col`` in one Spark job."""
+    return _unpack_moments(reduce_partials(df, input_col, _moments_kernel))
 
 
 def compute_column_means(df: DataFrame, input_col: str) -> tuple[np.ndarray, int]:
     """Distributed column mean in one colsum-only linear scan — the
     analogue of Statistics.colStats → mean (RapidsRowMatrix.scala:
     152-166). Unlike compute_covariance this never forms the O(d²)
-    Gram, so a mean-only consumer pays O(d) shuffle, not O(d²).
+    Gram, so a mean-only consumer moves O(d) per partition, not O(d²).
 
     Returns (mean: d ndarray, n_rows: int).
     """
-    return _column_means(df, input_col, _probe_n_cols(df, input_col))
-
-
-def _column_means(df: DataFrame, input_col: str, n_cols: int) -> tuple[np.ndarray, int]:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        s = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = as_matrix(pdf[input_col])
-            n += x.shape[0]
-            cs = x.sum(axis=0)
-            s = cs if s is None else s + cs
-        if n > 0:
-            yield pd.DataFrame(
-                {"packed": [np.concatenate(([float(n)], s)).tolist()]}
-            )
-
-    partials = df.select(vector_column(df.schema, input_col)).mapInPandas(
-        run, StructType([StructField("packed", ArrayType(DoubleType()))])
-    )
-    flat = _reduce_flat(partials, 1 + n_cols)
+    flat = reduce_partials(df, input_col, _colsum_kernel)
     n = int(round(flat[0]))
-    if n < 1:
-        raise ValueError("empty input")
     return flat[1:] / n, n
 
 
@@ -162,23 +115,20 @@ def compute_covariance_spr(df: DataFrame, input_col: str, mean_centering: bool =
     d(d+1)/2 packed buffer, combOp +=, triuToFull unpack, /(n-1)).
 
     Spark-first re-expression: pass 1 is the colsum mean
-    (broadcast into the UDF closure, the meanBC of :206); pass 2
+    (broadcast into the kernel closure, the meanBC of :206); pass 2
     packs the per-batch centered GEMM ``Xcᵀ·Xc`` into column-major
-    upper-triangular order and reduces via posexplode+sum (the
-    treeAggregate). Numerics differ from the moments path exactly as
-    in the reference: centered Gram here vs raw-moment identity there.
+    upper-triangular order and sums the per-partition partials on the
+    driver (the treeAggregate). Numerics differ from the moments path
+    exactly as in the reference: centered Gram here vs raw-moment
+    identity there.
 
-    Scale: shuffle traffic is d(d+1)/2 per partition — HALF the full
+    Scale: each partition's partial is d(d+1)/2 doubles — HALF the full
     Gram — which is why the reference ships this backend for high d;
     the cost is a second linear scan for the mean.
 
     Returns (cov: d×d ndarray, mean: d ndarray, n_rows: int).
     """
-    return _covariance_spr(df, input_col, mean_centering, _probe_n_cols(df, input_col))
-
-
-def _covariance_spr(df: DataFrame, input_col: str, mean_centering: bool, n_cols: int):
-    mean, n_rows = _column_means(df, input_col, n_cols)
+    mean, n_rows = compute_column_means(df, input_col)
     if n_rows < 2:
         raise ValueError("need at least 2 rows")
     d = len(mean)
@@ -187,21 +137,13 @@ def _covariance_spr(df: DataFrame, input_col: str, mean_centering: bool, n_cols:
     center = mean if mean_centering else np.zeros(d)
     li, lj = np.tril_indices(d)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xc = as_matrix(pdf[input_col]) - center
-            g = (xc.T @ xc)[lj, li]  # pack upper triangle, spr order
-            acc = g if acc is None else acc + g
-        if acc is not None:
-            yield pd.DataFrame({"packed": [acc.tolist()]})
+    def centered_gram(x: np.ndarray) -> np.ndarray:
+        xc = x - center
+        return (xc.T @ xc)[lj, li]  # pack upper triangle, spr order
 
-    partials = df.select(vector_column(df.schema, input_col)).mapInPandas(
-        run, StructType([StructField("packed", ArrayType(DoubleType()))])
+    packed = reduce_partials(
+        df, input_col, lambda xs: fold(np.add, map(centered_gram, xs)), width=d
     )
-    packed = _reduce_flat(partials, d * (d + 1) // 2)
     cov = triu_to_full(d, packed) / (n_rows - 1)
     if not mean_centering:
         mean = np.zeros(d)
@@ -233,14 +175,7 @@ def compute_covariance(df: DataFrame, input_col: str, mean_centering: bool = Tru
 
     Returns (cov: n×n ndarray, mean: n ndarray, n_rows: int).
     """
-    return _covariance(df, input_col, mean_centering, _probe_n_cols(df, input_col))
-
-
-def _covariance(df: DataFrame, input_col: str, mean_centering: bool, n_cols: int):
-    if n_cols > MAX_COLS:
-        raise ValueError(f"n_cols {n_cols} exceeds bound {MAX_COLS}")
-
-    n_rows, colsum, gram = _sum_partials(_partials(df, input_col), n_cols)
+    n_rows, colsum, gram = _moments(df, input_col)
     if n_rows < 2:
         raise ValueError("need at least 2 rows")
     mean = colsum / n_rows
@@ -248,7 +183,7 @@ def _covariance(df: DataFrame, input_col: str, mean_centering: bool, n_cols: int
         cov = (gram - n_rows * np.outer(mean, mean)) / (n_rows - 1)
     else:
         cov = gram / (n_rows - 1)
-        mean = np.zeros(n_cols)
+        mean = np.zeros(len(colsum))
     return cov, mean, n_rows
 
 
@@ -298,12 +233,11 @@ class PCA(ParamsPersistence):
         from spark_rapids_ml_spark.plans.profiling import span
 
         self.transform_schema(df.schema)  # fail fast, zero jobs
-        n_features = _probe_n_cols(df, self.input_col)
-        if self.k > n_features:  # RapidsPCA.scala:117-119
-            raise ValueError(f"k={self.k} > numFeatures={n_features}")
-        cov_fn = _covariance if self.backend == "moments" else _covariance_spr
+        cov_fn = compute_covariance if self.backend == "moments" else compute_covariance_spr
         with span(df.sparkSession, f"pca.fit.covariance[{self.backend}]"):
-            cov, mean, n_rows = cov_fn(df, self.input_col, self.mean_centering, n_features)
+            cov, mean, n_rows = cov_fn(df, self.input_col, self.mean_centering)
+        if self.k > len(mean):  # RapidsPCA.scala:117-119
+            raise ValueError(f"k={self.k} > numFeatures={len(mean)}")
         # symmetric eigendecomposition — eigh is the numpy analogue of
         # the reference's raft eigDC on the PSD covariance
         eigvals, eigvecs = np.linalg.eigh(cov)
@@ -329,7 +263,8 @@ class PCAModel:
 
     transform() is the batched matmul the reference intended but left
     disabled (RapidsPCA.scala:172-185) — Arrow streams row batches to
-    numpy, one ``X @ pc`` per batch, no per-row UDF dispatch.
+    numpy, one ``X @ pc`` per batch, no per-row UDF dispatch, and the
+    result goes back as an Arrow list column.
     """
 
     def __init__(
@@ -357,17 +292,12 @@ class PCAModel:
     def transform(self, df: DataFrame) -> DataFrame:
         transform_schema(df.schema, self.input_col, self.output_col)
         pc = self.pc.copy()
-
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def project(series: pd.Series) -> pd.Series:
-            x = as_matrix(series)
-            y = x @ pc  # batched GEMM transform (ref: gemm_b, rapidsml_jni.cu:224-300)
-            return pd.Series(list(y))
-
-        # parity with reference/Spark MLlib: projection does NOT
+        # batched GEMM transform (ref: gemm_b, rapidsml_jni.cu:224-300).
+        # Parity with reference/Spark MLlib: projection does NOT
         # re-center (RapidsPCA.scala:187-189 multiplies the raw vector)
-        return df.withColumn(
-            self.output_col, project(vector_column(df.schema, self.input_col))
+        return with_batch_column(
+            df, self.input_col, self.output_col, pc.shape[0], lambda x: x @ pc,
+            ArrayType(DoubleType()),
         )
 
     # ---------------- persistence (RapidsPCA.scala:218-254 layout) ----

@@ -190,7 +190,7 @@ class SparkStandardScaler(
     Estimator, _ScalerParams, DefaultParamsWritable, DefaultParamsReadable
 ):
     """Pipeline-composable z-score scaler delegating to
-    ml/scaler.StandardScaler (one mapInPandas stats pass)."""
+    ml/scaler.StandardScaler (one mapInArrow stats job)."""
 
     @keyword_only
     def __init__(self, *, inputCol="features", outputCol="scaled"):

@@ -3,78 +3,54 @@
 user of the reference's ML-pipeline conventions expects next to PCA
 (same Estimator/Model/persistence shape, RapidsPCA.scala:30-255).
 
-fit = ONE distributed linear scan producing packed per-column moments
-(n, sum, sum-of-squares, min, max) — the colStats pattern of
-RapidsRowMatrix.scala:152-166 extended with extrema; transform = a
-batched Arrow pandas_udf applying the affine map (the same staging
-shape as the PCA projection, A3).
+fit = ONE distributed linear scan (one Spark job) producing packed
+per-column moments (n, sum, sum-of-squares, min, max) — the colStats
+pattern of RapidsRowMatrix.scala:152-166 extended with extrema;
+transform = a scalar Arrow UDF applying the affine map (the same
+staging shape as the PCA projection, A3).
 
-Scale: the fit exchange carries O(d) doubles per partition regardless
-of rows; transform is stateless and shuffle-free.
+Scale: the fit moves O(d) doubles per partition regardless of rows;
+transform is stateless and shuffle-free.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType
 
 from spark_rapids_ml_spark.ml.schema import (
     ParamsPersistence,
-    as_matrix,
+    fold,
     load_model,
+    reduce_partials,
     save_model,
-    vector_column,
+    with_batch_column,
 )
 
-_PACKED = StructType([StructField("packed", ArrayType(DoubleType()))])
+
+def _merge_stats(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Merge two packed [n, sum(d), sumsq(d), min(d), max(d)] stats."""
+    d = (len(a) - 1) // 4
+    lo, hi = 1 + 2 * d, 1 + 3 * d
+    return np.concatenate(
+        (a[:lo] + b[:lo], np.minimum(a[lo:hi], b[lo:hi]), np.maximum(a[hi:], b[hi:]))
+    )
 
 
 def _column_stats(df: DataFrame, input_col: str) -> tuple[int, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(n, sum, sumsq, min, max) per column in one mapInPandas scan +
+    """(n, sum, sumsq, min, max) per column in one mapInArrow scan +
     driver merge of the tiny per-partition partials."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        s = ss = mn = mx = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = as_matrix(pdf[input_col])
-            n += x.shape[0]
-            cs, css = x.sum(axis=0), (x * x).sum(axis=0)
-            cmn, cmx = x.min(axis=0), x.max(axis=0)
-            s = cs if s is None else s + cs
-            ss = css if ss is None else ss + css
-            mn = cmn if mn is None else np.minimum(mn, cmn)
-            mx = cmx if mx is None else np.maximum(mx, cmx)
-        if n > 0:
-            yield pd.DataFrame(
-                {"packed": [np.concatenate(([float(n)], s, ss, mn, mx)).tolist()]}
-            )
+    def stats(x: np.ndarray) -> np.ndarray:
+        return np.concatenate(
+            ([x.shape[0]], x.sum(axis=0), (x * x).sum(axis=0), x.min(axis=0), x.max(axis=0))
+        )
 
-    rows = df.select(vector_column(df.schema, input_col)).mapInPandas(run, _PACKED).collect()
-    if not rows:
-        raise ValueError("empty input")
-    acc = None
-    n_total = 0
-    for r in rows:
-        p = np.asarray(r["packed"])
-        d = (len(p) - 1) // 4
-        n_total += int(p[0])
-        part = p[1:].reshape(4, d)
-        if acc is None:
-            acc = part.copy()
-        else:
-            acc[0] += part[0]
-            acc[1] += part[1]
-            acc[2] = np.minimum(acc[2], part[2])
-            acc[3] = np.maximum(acc[3], part[3])
-    return n_total, acc[0], acc[1], acc[2], acc[3]
+    p = reduce_partials(df, input_col, lambda xs: fold(_merge_stats, map(stats, xs)), _merge_stats)
+    d = (len(p) - 1) // 4
+    s, ss, mn, mx = p[1:].reshape(4, d)
+    return int(p[0]), s, ss, mn, mx
 
 
 class StandardScaler(ParamsPersistence):
@@ -110,14 +86,14 @@ class StandardScalerModel:
         mean, std = self.mean.copy(), self.std.copy()
         safe = np.where(std > 0, std, 1.0)
 
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def scale(series: pd.Series) -> pd.Series:
-            x = as_matrix(series)
+        def scale(x: np.ndarray) -> np.ndarray:
             z = (x - mean) / safe
             z[:, std == 0] = 0.0
-            return pd.Series(list(z))
+            return z
 
-        return df.withColumn(self.output_col, scale(vector_column(df.schema, self.input_col)))
+        return with_batch_column(
+            df, self.input_col, self.output_col, len(mean), scale, ArrayType(DoubleType())
+        )
 
     def save(self, spark, path: str) -> None:
         meta = {"input_col": self.input_col, "output_col": self.output_col, "dim": len(self.mean)}
@@ -158,14 +134,14 @@ class MinMaxScalerModel:
         rng = mx - mn
         safe = np.where(rng > 0, rng, 1.0)
 
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def scale(series: pd.Series) -> pd.Series:
-            x = as_matrix(series)
+        def scale(x: np.ndarray) -> np.ndarray:
             z = (x - mn) / safe
             z[:, rng == 0] = 0.5
-            return pd.Series(list(z))
+            return z
 
-        return df.withColumn(self.output_col, scale(vector_column(df.schema, self.input_col)))
+        return with_batch_column(
+            df, self.input_col, self.output_col, len(mn), scale, ArrayType(DoubleType())
+        )
 
     def save(self, spark, path: str) -> None:
         meta = {"input_col": self.input_col, "output_col": self.output_col, "dim": len(self.mn)}

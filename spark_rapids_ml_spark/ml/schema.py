@@ -1,5 +1,6 @@
-"""Input adapter, batch decoder, schema validation and persistence —
-the one place each of these lives for the five estimators in ``ml/``.
+"""Input adapter, batch codec, partial reduction, schema validation
+and persistence — the one place each of these lives for the five
+estimators in ``ml/``.
 
 Parity targets in the reference:
 - ``validateAndTransformSchema`` (RapidsPCA.scala:127-129 via Spark's
@@ -12,8 +13,18 @@ Parity targets in the reference:
   adapter: a VectorUDT column (dense or sparse) becomes
   ``array<double>`` through ``vector_to_array`` before any Python stage
   sees it, and an ``array<numeric>`` column passes through untouched
-  (same plan). ``as_matrix`` is the single batch decoder every
-  ``mapInPandas``/``pandas_udf`` uses on such a column.
+  (same plan).
+- The batch codec is the one way a Python stage reads and writes such a
+  column: ``decode`` turns an Arrow ``list`` column into a dense float64
+  (rows, d) matrix (flat values + one reshape, no per-row objects) and
+  rejects a null row, a null element or a ragged width by name;
+  ``encode`` builds the ``list`` column back from offsets + flat values.
+- ``reduce(_+_)`` of per-partition partials (RapidsRowMatrix.scala:201):
+  ``partials`` runs one ``mapInArrow`` kernel per partition that emits
+  one packed float64 partial; ``reduce_partials`` collects them (one
+  job) and folds them on the driver in partition order, so the result
+  never depends on shuffle fetch order. Model transforms are scalar
+  Arrow UDFs over the same codec (``with_batch_column``).
 - ``DefaultParamsWriter/Readable`` (RapidsPCA.scala:134-140,
   RapidsPCAModel reader/writer :207-255; round-tripped by
   PCASuite.scala:192-206): estimators persist their *params* as JSON
@@ -26,10 +37,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, Row, SparkSession
+import pyarrow as pa
+from pyspark.errors import PythonException
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -86,12 +100,6 @@ def vector_column(schema: StructType, name: str) -> Column:
     return F.col(name)
 
 
-def as_matrix(series: pd.Series) -> np.ndarray:
-    """Stack one Arrow batch of a ``vector_column`` into a dense float64
-    (rows, d) matrix."""
-    return np.vstack(series.map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-
-
 def validate_numeric_col(schema: StructType, col: str) -> None:
     if col not in schema.names:
         raise ValueError(f"column '{col}' not found; columns: {schema.names}")
@@ -114,6 +122,117 @@ def transform_schema(
     return StructType(
         schema.fields + [StructField(output_col, ArrayType(DoubleType()))]
     )
+
+
+def decode(col: pa.Array | pa.ChunkedArray, name: str, width: int | None = None) -> np.ndarray:
+    """One Arrow ``list``/``large_list`` column as a dense float64
+    (rows, d) matrix; float32 and integer elements widen exactly as
+    ``np.asarray(v, dtype=float64)`` would. NaN passes through; a null
+    row, a null element or a row whose width differs from ``width``
+    (default: the first row's) raises ``ValueError`` naming ``name``."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(f"vector column '{name}': null row")
+    values = col.flatten()
+    if values.null_count:
+        raise ValueError(f"vector column '{name}': null element")
+    widths = np.diff(col.offsets.to_numpy())
+    if width is None:
+        width = int(widths[0]) if len(widths) else 0
+    if (widths != width).any():
+        raise ValueError(
+            f"vector column '{name}': ragged width "
+            f"({widths.min()} to {widths.max()} values, expected {width})"
+        )
+    return values.to_numpy().astype(np.float64, copy=False).reshape(len(col), width)
+
+
+def encode(y: np.ndarray) -> pa.Array:
+    """``decode``'s inverse for a (rows, d) matrix: a ``list<double>``
+    column built from offsets + the flat values."""
+    rows, d = y.shape
+    offsets = pa.array(np.arange(rows + 1, dtype=np.int32) * d)
+    return pa.ListArray.from_arrays(offsets, pa.array(np.ravel(y), pa.float64()))
+
+
+def with_batch_column(
+    df: DataFrame, input_col: str, output_col: str, width: int, fn: Callable, return_type
+) -> DataFrame:
+    """``df`` plus ``output_col`` = ``fn`` applied to each decoded Arrow
+    batch of ``input_col`` (rows ``width`` wide) as a scalar Arrow UDF.
+    ``fn`` returns a (rows, d) matrix for an array column or a (rows,)
+    vector for a scalar one."""
+
+    def run(col):  # unannotated: arrow_udf defaults it to SCALAR
+        y = fn(decode(col, input_col, width))
+        return encode(y) if y.ndim == 2 else pa.array(y)
+
+    udf = F.arrow_udf(run, return_type)
+    return df.withColumn(output_col, udf(vector_column(df.schema, input_col)))
+
+
+def fold(merge: Callable, items: Iterable[np.ndarray]) -> np.ndarray | None:
+    """Left fold ``merge`` over ``items`` in order; None when empty."""
+    acc = None
+    for item in items:
+        acc = item if acc is None else merge(acc, item)
+    return acc
+
+
+# a partition's decoded batches -> its packed partial (None: no rows)
+Kernel = Callable[[Iterator[np.ndarray]], "np.ndarray | None"]
+
+
+def partials(df: DataFrame, input_col: str, kernel: Kernel, width: int | None = None) -> DataFrame:
+    """One ``mapInArrow`` pass: ``kernel`` folds a partition's decoded
+    batches (empty ones skipped; every row ``width`` wide, default the
+    partition's first row's) into one packed float64 vector, emitted as
+    a one-row ``packed array<double>`` partial; a partition whose
+    kernel returns None emits nothing."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        d = width
+
+        def matrices() -> Iterator[np.ndarray]:
+            nonlocal d
+            for b in batches:
+                if b.num_rows:
+                    x = decode(b.column(0), input_col, d)
+                    d = x.shape[1]
+                    yield x
+
+        acc = kernel(matrices())
+        if acc is not None:
+            yield pa.RecordBatch.from_arrays([encode(acc[None, :])], ["packed"])
+
+    return df.select(vector_column(df.schema, input_col)).mapInArrow(
+        run, "packed array<double>"
+    )
+
+
+def reduce_partials(
+    df: DataFrame, input_col: str, kernel: Kernel, merge: Callable = np.add, width: int | None = None
+) -> np.ndarray:
+    """``partials`` collected in partition order (ONE job) and folded
+    with ``merge`` on the driver. A ``ValueError`` raised in a kernel
+    (the codec's degenerate-row checks) re-raises here as a
+    ``ValueError``; no partial at all raises ``empty input``."""
+    try:
+        table = partials(df, input_col, kernel, width).toArrow()
+    except PythonException as e:
+        m = re.search(r"^ValueError: (.*)$", str(e), re.MULTILINE)
+        if m is None:
+            raise
+        raise ValueError(m.group(1)) from e
+    try:
+        rows = decode(table.column("packed"), "packed")
+    except ValueError:  # partials of unequal length: widths differ across partitions
+        raise ValueError(f"vector column '{input_col}': ragged width across partitions")
+    acc = fold(merge, rows)
+    if acc is None:
+        raise ValueError("empty input")
+    return acc
 
 
 # ---------------- persistence ----------------

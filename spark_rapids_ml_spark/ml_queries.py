@@ -73,8 +73,8 @@ ORDER BY i, j
 """,
 )
 def pca_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed covariance (mapInPandas Gram partials + distributed
-    sum) vs DuckDB covar_samp over every element pair — the direct
+    """Distributed covariance (one mapInArrow job of per-partition Gram
+    partials, summed on the driver in partition order) vs DuckDB covar_samp over every element pair — the direct
     correctness gate for the reference's computeCovariance
     (RapidsRowMatrix.scala:149-257). Upper triangle only (symmetric).
     """
@@ -316,7 +316,7 @@ def pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("pca_transform_topk", tags=("ml", "pca"), bench=True, oracle=None)
 def pca_transform_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fit k=8 PCA on embeddings and project every vector (batched
-    pandas_udf GEMM); output the first two sign-stable components.
+    Arrow UDF GEMM); output the first two sign-stable components.
     Rows-only check here; exact numpy parity in tests/test_pca.py."""
     e = load(spark, sf_dir, "embeddings")
     model = PCA(k=8, input_col="embedding", output_col="proj").fit(e)
@@ -1203,24 +1203,23 @@ def pca_covariance_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFr
     pca_covariance_matrix's oracle bit-for-bit under ROUND(6) + the
     −0.0 normalization.
 
-    Scale: two O(d²)-shuffle linear scans (one per batch; in
+    Scale: two linear scans, one Spark job each with an O(d²) partial
+    per partition (one scan per batch; in
     production the old batch's partials are a persisted d²+d+1
     vector, not a rescan) and a driver-side d×d merge.
     """
     import numpy as np
 
-    from spark_rapids_ml_spark.ml.pca import _partials, _sum_partials
+    from spark_rapids_ml_spark.ml.pca import _moments
 
     e = load(spark, sf_dir, "embeddings")
-    first = e.select("embedding").first()
-    d = len(first[0])
     batches = [
         e.where(F.col("vec_id") % 2 == 0),
         e.where(F.col("vec_id") % 2 == 1),
     ]
-    n, s, g = 0, np.zeros(d), np.zeros((d, d))
+    n, s, g = 0, 0.0, 0.0
     for b in batches:
-        nb, sb, gb = _sum_partials(_partials(b, "embedding"), d)
+        nb, sb, gb = _moments(b, "embedding")
         n, s, g = n + nb, s + sb, g + gb
     mean = s / n
     cov = (g - n * np.outer(mean, mean)) / (n - 1)

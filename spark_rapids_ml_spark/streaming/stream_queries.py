@@ -1829,7 +1829,7 @@ def stream_incremental_covariance(spark: SparkSession, sf_dir: str) -> DataFrame
 
     import numpy as np
 
-    from spark_rapids_ml_spark.ml.pca import _partials
+    from spark_rapids_ml_spark.ml.pca import _partials, _unpack_moments
     from spark_rapids_ml_spark.ml_queries import _cov_df
 
     tag = sf_dir.strip("/").replace("/", "_")
@@ -1839,8 +1839,6 @@ def stream_incremental_covariance(spark: SparkSession, sf_dir: str) -> DataFrame
     shutil.rmtree(state_root, ignore_errors=True)
 
     e = load(spark, sf_dir, "embeddings")
-    d = len(e.select("embedding").first()[0])
-    flat_len = 1 + d + d * d
     e.select("vec_id", "embedding").repartitionByRange(
         COVSTREAM_FILES, "vec_id"
     ).write.mode("overwrite").parquet(stage)
@@ -1890,12 +1888,11 @@ def stream_incremental_covariance(spark: SparkSession, sf_dir: str) -> DataFrame
     rows = spark.read.parquet(
         os.path.join(state_root, f"state_v{versions[-1]}")
     ).collect()  # bounded: d^2 + d + 1 statistic cells, corpus-independent
-    flat = np.zeros(flat_len)
+    flat = np.zeros(len(rows))
     for r in rows:
         flat[r["idx"]] = r["val"]
-    n = int(round(flat[0]))
-    mean = flat[1 : 1 + d] / n
-    gram = flat[1 + d :].reshape(d, d)
+    n, colsum, gram = _unpack_moments(flat)
+    mean = colsum / n
     cov = (gram - n * np.outer(mean, mean)) / (n - 1)
     return _cov_df(spark, cov)
 

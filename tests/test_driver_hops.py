@@ -1,10 +1,10 @@
-"""CI guard: every driver materialization (.collect()/.toPandas()) in
+"""CI guard: every driver materialization (.collect()/.toPandas()/.toArrow()) in
 engine code must be on the audited bounded-state allowlist.
 
 At 100 TB an unbounded driver hop is the difference between "runs" and
 "OOMs the driver": each allowed site below is bounded by a constant or
 a model/dimension size, never by the data volume. Adding a new
-collect()/toPandas() to the engine requires adding it here WITH its
+collect()/toPandas()/toArrow() to the engine requires adding it here WITH its
 boundedness argument — the review gate this test automates. (Round 7
 removed the last unbounded hop, stream_incremental_dedup_lsh's
 toPandas staging, replaced by a distributed repartitionByRange write.)
@@ -68,20 +68,16 @@ ALLOWED = {
     },
     "ml/kmeans.py": {
         ".limit(self.k).collect()",  # k init rows
-        "mapInPandas(assign, _ASSIGN_SCHEMA).collect()",  # k*(d+1) per partition
     },
-    "ml/pca.py": {
-        ".collect()",  # Gram/moment partials: O(d^2) per partition, row-count independent
+    "ml/schema.py": {
+        "partials(df, input_col, kernel, width).toArrow()",  # one packed partial per partition: O(d^2) (PCA), k*(d+1) (KMeans), row-count independent
     },
     "streaming/stream_queries.py": {
         "bounded: d^2 + d + 1 statistic cells",  # incremental-covariance final state: one flat moments vector
     },
-    "ml/scaler.py": {
-        "mapInPandas(run, _PACKED).collect()",  # packed per-partition stats
-    },
 }
 
-PATTERN = re.compile(r"\.(collect|toPandas)\(\)")
+PATTERN = re.compile(r"\.(collect|toPandas|toArrow)\(\)")
 
 
 def test_no_unaudited_driver_hops():

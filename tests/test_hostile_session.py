@@ -22,7 +22,7 @@ SAMPLED = [
     "dedup_minhash_lsh_pairs",  # portable hash + guard
     "pipe_sequence_packing",  # total-order window
     "stream_tumbling_window",  # streaming + state clamp restore
-    "feature_minmax_scale",  # mapInPandas fit + pandas_udf transform
+    "feature_minmax_scale",  # mapInArrow fit + arrow_udf transform
     "scalar_datetime_extra",  # timezone/nanos handling
     "layout_zorder_buckets",  # round 6: range-shuffle write under foreign shuffle width
     "pipe_bpe_apply_tokens",  # round 6: pandas_udf under arrow disabled

@@ -193,27 +193,6 @@ def test_k_validation(spark, small_df):
 
 
 @pytest.mark.parametrize("backend", PCA.BACKENDS)
-def test_fit_probes_first_row_once(spark, small_df, backend):
-    """fit = one first-row probe + the covariance scan: exactly the jobs
-    of the public covariance function, which probes once itself."""
-    sc = spark.sparkContext
-    cov_fn = compute_covariance if backend == "moments" else compute_covariance_spr
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    n_cov = jobs(f"probe-cov-{backend}", lambda: cov_fn(small_df, "features"))
-    n_fit = jobs(f"probe-fit-{backend}",
-                 lambda: PCA(k=2, input_col="features", backend=backend).fit(small_df))
-    assert n_fit == n_cov
-
-
-@pytest.mark.parametrize("backend", PCA.BACKENDS)
 def test_fit_empty_input(spark, small_df, backend):
     with pytest.raises(ValueError, match="empty input"):
         PCA(k=2, input_col="features", backend=backend).fit(small_df.limit(0))
