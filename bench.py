@@ -36,6 +36,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F
+
+from spark_rapids_ml_spark.query_run import release_caches
 from spark_rapids_ml_spark.registry import all_queries
 from spark_rapids_ml_spark.session import get_spark
 
@@ -84,6 +87,29 @@ def _host_identity() -> dict:
     return host
 
 
+def _time_query(spark, sf_dir: str, spec) -> float:
+    """One timed run of a declared query: build it, consume every
+    output column in one hash-sum job, free its caches."""
+    t0 = time.perf_counter()
+    df = spec.fn(spark, sf_dir)
+    # consume EVERY output column (count() would let Catalyst
+    # prune the projections, under-billing expression-heavy
+    # queries); one hash-sum row also counts via the same pass.
+    # xxhash64 rejects MapType — serialize maps (and anything
+    # else unhashable) through to_json first.
+    hashable = [
+        F.to_json(c) if t.typeName() in ("map",) else F.col(c)
+        for c, t in ((f.name, f.dataType) for f in df.schema.fields)
+    ]
+    df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*hashable).cast("decimal(28,0)")).alias("h"),
+    ).collect()
+    dt = round(time.perf_counter() - t0, 3)
+    release_caches()
+    return dt
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -97,31 +123,7 @@ def main() -> None:
     # warm-up: JVM + Arrow + parquet footer caches
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
-    from pyspark.sql import functions as F
-
-    from spark_rapids_ml_spark.operators.dedup import release_caches
-
     n_events = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
-
-    def _time_query(spec) -> float:
-        t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        # consume EVERY output column (count() would let Catalyst
-        # prune the projections, under-billing expression-heavy
-        # queries); one hash-sum row also counts via the same pass.
-        # xxhash64 rejects MapType — serialize maps (and anything
-        # else unhashable) through to_json first.
-        hashable = [
-            F.to_json(c) if t.typeName() in ("map",) else F.col(c)
-            for c, t in ((f.name, f.dataType) for f in df.schema.fields)
-        ]
-        df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*hashable).cast("decimal(28,0)")).alias("h"),
-        ).collect()
-        dt = round(time.perf_counter() - t0, 3)
-        release_caches()
-        return dt
 
     # DISCARDED warm-up pass (round 11): one full suite execution whose
     # timings are thrown away. The lineitem count above warms the JVM
@@ -134,7 +136,7 @@ def main() -> None:
     n_warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
     for wu in range(n_warmup):
         for name in sorted(specs):
-            dt = _time_query(specs[name])
+            dt = _time_query(spark, sf_dir, specs[name])
             print(f"# warmup {wu + 1}/{n_warmup} {name}: {dt:.3f}s (discarded)",
                   file=sys.stderr)
         all_queries()["stream_tumbling_window"].fn(spark, sf_dir).agg(
@@ -146,7 +148,7 @@ def main() -> None:
     stream_rates: list[float] = []
     for run in range(n_runs):
         for name in sorted(specs):
-            dt = _time_query(specs[name])
+            dt = _time_query(spark, sf_dir, specs[name])
             per_query[name].append(dt)
             print(f"# run {run + 1}/{n_runs} {name}: {dt:.3f}s", file=sys.stderr)
         run_totals.append(round(sum(per_query[n][-1] for n in per_query), 3))
@@ -174,7 +176,7 @@ def main() -> None:
             statistics.median(per_query[name]) < fast_cutoff
             and len(per_query[name]) < fast_runs
         ):
-            dt = _time_query(specs[name])
+            dt = _time_query(spark, sf_dir, specs[name])
             per_query[name].append(dt)
             print(
                 f"# top-up {len(per_query[name])}/{fast_runs} {name}: {dt:.3f}s",

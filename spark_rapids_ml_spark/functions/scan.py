@@ -21,8 +21,8 @@ for every consumer), and no stage in the plan carries an
 The partition layout is pinned with ``localCheckpoint`` because both
 the totals job and the main plan must observe ONE
 ``repartitionByRange`` sampling outcome; the checkpoint handle is
-registered for release after the caller materializes (see
-``operators.dedup.register_checkpoint`` one-shot semantics).
+registered with the query scope, freed after the caller materializes
+(``query_run.checkpoint`` one-shot semantics).
 
 First factored here from ``operators/llm_pipeline._pack_token_counts``
 (the sequence-packing scan) so RFM NTILE scoring, token-budget
@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from spark_rapids_ml_spark.query_run import checkpoint
 
 SCAN_PARTITIONS = 16  # floor for the range-partition width of the scan
 
@@ -71,12 +73,7 @@ def _pin_ranged(df: DataFrame, order_by: list, num_partitions: int | None) -> Da
     t = df.repartitionByRange(_scan_width(df, num_partitions), *order_by).withColumn(
         _PID, F.spark_partition_id()
     )
-    t = t.localCheckpoint(eager=False)
-    # lazy import: operators.dedup imports functions.* at module level
-    from spark_rapids_ml_spark.operators.dedup import register_checkpoint
-
-    register_checkpoint(t)
-    return t
+    return checkpoint(t.localCheckpoint(eager=False))
 
 
 def _offset_expr(per_pid: dict[int, int]) -> tuple[Column, int]:

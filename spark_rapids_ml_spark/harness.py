@@ -67,6 +67,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from spark_rapids_ml_spark.query_run import query_run
 from spark_rapids_ml_spark.registry import QuerySpec
 from spark_rapids_ml_spark.sources.catalog import TABLES, table_path
 
@@ -263,15 +264,12 @@ def _digest_duck(
 def _compare_digest(
     spark: SparkSession, spec: QuerySpec, sf_dir: str
 ) -> tuple[bool, dict[str, Any]]:
-    from spark_rapids_ml_spark.operators.dedup import release_caches
-
-    sdf = spec.fn(spark, sf_dir)
-    if spec.oracle is None:
-        n = sdf.count()
-        release_caches()
-        return n >= 0, {"rows": n, "oracle": "none", "mode": "digest"}
-    sn, sh1, sh2 = _digest_spark(sdf)
-    release_caches()
+    with query_run(spark, spec.name):
+        sdf = spec.fn(spark, sf_dir)
+        if spec.oracle is None:
+            n = sdf.count()
+            return n >= 0, {"rows": n, "oracle": "none", "mode": "digest"}
+        sn, sh1, sh2 = _digest_spark(sdf)
     con = duckdb_connect(sf_dir)
     try:
         on, oh1, oh2, ocols = _digest_duck(con, spec.oracle)
@@ -327,10 +325,8 @@ def _compare_pandas(
     spark: SparkSession, spec: QuerySpec, sf_dir: str
 ) -> tuple[bool, dict[str, Any]]:
     """Driver-replica compare: collect both results, normalize, diff."""
-    from spark_rapids_ml_spark.operators.dedup import release_caches
-
-    sdf = spec.fn(spark, sf_dir).toPandas()
-    release_caches()  # free any executor blocks the query pinned
+    with query_run(spark, spec.name):  # frees any executor blocks the query pinned
+        sdf = spec.fn(spark, sf_dir).toPandas()
     if spec.oracle is None:
         return len(sdf) >= 0, {"rows": len(sdf), "oracle": "none"}
     con = duckdb_connect(sf_dir)

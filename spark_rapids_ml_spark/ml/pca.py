@@ -229,7 +229,7 @@ class PCA(ParamsPersistence):
 
     def fit(self, df: DataFrame) -> "PCAModel":
         # stage spans mirror the reference's NVTX ranges
-        # (RapidsRowMatrix.scala:78,88,153) via setJobDescription
+        # (RapidsRowMatrix.scala:78,88,153) as job descriptions
         from spark_rapids_ml_spark.plans.profiling import span
 
         self.transform_schema(df.schema)  # fail fast, zero jobs

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.functions.portable import davg, dsum, hash60, sql_hash60
 from spark_rapids_ml_spark.functions.localframe import local_df
+from spark_rapids_ml_spark.query_run import cache
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -1457,11 +1458,9 @@ def agg_bloom_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     n itself is one scalar aggregate (bounded driver state, the
     kmeans-centroid convention).
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     # cached via the shared registry: the distinct key set feeds three
     # consumers (count for sizing, filter build, truth join)
-    keys = _cache(
+    keys = cache(
         load(spark, sf_dir, "orders").select(F.col("o_custkey").alias("key")).distinct()
     )
     m_bits = BLOOM_BITS_PER_KEY * keys.count()
@@ -1630,10 +1629,8 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; marginals and the total aggregate THAT table. The exchange
     carries ~35 rows at any corpus size.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     ev = load(spark, sf_dir, "events")
-    o = _cache(
+    o = cache(
         ev.groupBy("event_type", (F.dayofweek("ts") - 1).alias("dow0")).agg(
             F.count(F.lit(1)).alias("obs")
         )
@@ -1644,7 +1641,7 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (F.col("r") * F.col("c")).cast("double") / F.col("n_tot").cast("double")
     od = F.col("obs").cast("double")
     cmicro = F.floor((od - e) * (od - e) / e * CHI2_MICRO).cast("bigint")
-    parts = _cache(
+    parts = cache(
         o.join(F.broadcast(rt), "event_type")
         .join(F.broadcast(ct), "dow0")
         .crossJoin(F.broadcast(n_tot))
@@ -1732,15 +1729,13 @@ def agg_trimmed_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     v = load(spark, sf_dir, "events").select(
         "event_type", "event_id", cents.alias("cents")
     )
     wr = Window.partitionBy("event_type").orderBy("cents", "event_id")
     wn = Window.partitionBy("event_type")
-    b = _cache(
+    b = cache(
         v.select(
             "event_type",
             "cents",
@@ -1897,11 +1892,10 @@ def agg_exact_quantiles_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of tiebreak. Output: |pcts| rows.
     """
     from spark_rapids_ml_spark.functions.scan import ranged_row_number
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
     # cached: the projected value column feeds BOTH the count and the
     # scan — uncached, the orders scan would run twice
-    v = _cache(
+    v = cache(
         load(spark, sf_dir, "orders").select(
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents")
         )
@@ -1956,11 +1950,10 @@ def agg_weighted_quantiles_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.
     """
     from spark_rapids_ml_spark.functions.scan import ranged_cumsum
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
     # cached: the histogram feeds BOTH the grand-weight reduction and
     # the scan — uncached, the lineitem aggregation would run twice
-    h = _cache(
+    h = cache(
         load(spark, sf_dir, "lineitem")
         .select(
             F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("cents"),
@@ -2031,9 +2024,8 @@ def agg_pareto_share_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranged_cumsum,
         ranged_row_number,
     )
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
-    pc = _cache(
+    pc = cache(
         load(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.query_run import cache
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -386,9 +387,8 @@ def agg_market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     ).distinct()
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
-    basket = _cache(li)
+    basket = cache(li)
     nb = basket.agg(F.count_distinct("o").alias("n_baskets"))
     ic = basket.groupBy("p").agg(F.count(F.lit(1)).alias("n_p"))
     a, b = basket.alias("a"), basket.alias("b")
@@ -689,10 +689,8 @@ def agg_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; everything downstream aggregates THAT table — ~25 rows
     cross the exchange at any corpus size.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     ev = load(spark, sf_dir, "events")
-    o = _cache(
+    o = cache(
         ev.groupBy(
             "event_type",
             F.least(
@@ -989,10 +987,8 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; marginals and both entropy sums aggregate THAT table —
     ~25 rows cross the exchange at any corpus size.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     ev = load(spark, sf_dir, "events")
-    o = _cache(
+    o = cache(
         ev.groupBy(
             "event_type",
             F.least(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.sources.catalog import load
 
 
@@ -277,9 +278,7 @@ def sink_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("psum"),
         )
 
-    with_dpo = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         # Initial materialization: everything before the newest month.
         partial(o.where(F.col("month") < last_month)).write.mode(
             "overwrite"
@@ -289,8 +288,6 @@ def sink_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
         partial(o.where(F.col("month") == last_month)).write.mode(
             "overwrite"
         ).partitionBy("month").parquet(partials)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dpo)
 
     return (
         spark.read.parquet(partials)

@@ -29,57 +29,19 @@ from pyspark.sql import functions as F
 from spark_rapids_ml_spark.functions.portable import hash60, sql_hash60
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.functions.text import shingles, sql_shingle_rows
+
+# the cache registry is query_run's; _cache, register_checkpoint and
+# release_caches stay importable here because the benchmark's tracer
+# wraps dedup.release_caches by name
+from spark_rapids_ml_spark.query_run import (
+    _checkpoint_rdd,
+    cache as _cache,
+    checkpoint as register_checkpoint,
+    release_caches,
+)
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.sources.catalog import load, load_wide
-
-# Cached frames registered here so consumers can free executor storage
-# once results are materialized (a long-lived session otherwise
-# accumulates blocks across a 100+-query sweep). harness.compare and
-# bench call release_caches() after each query; ContextCleaner remains
-# the backstop for frames still referenced lazily.
-#
-# CONTRACT: the registry is module-global, so dedup queries compose
-# one-at-a-time — materialize (collect/toPandas/write) each query's
-# result BEFORE building the next, then call release_caches(). A
-# caller interleaving two unmaterialized dedup queries would release
-# the first query's still-needed caches (correctness is unaffected —
-# Spark recomputes from lineage, except for the clustering result,
-# which registers a lineage-free checkpoint and documents its one-shot
-# semantics below).
-_SESSION_CACHES: list[DataFrame] = []
-# JVM RDD handles of localCheckpoint'ed frames: Dataset.unpersist() is
-# a NO-OP for these (checkpoint blocks are not CacheManager entries),
-# so release goes through the RDD under the LogicalRDD plan instead.
-_SESSION_CHECKPOINTS: list = []
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _SESSION_CACHES.append(df)
-    return df
-
-
-def _checkpoint_rdd(df: DataFrame):
-    """The JVM RDD holding a localCheckpoint'ed DataFrame's blocks
-    (the LogicalRDD plan's rdd). Unpersisting IT is what actually
-    frees the storage — after which the one-shot contract is real:
-    the DataFrame cannot recompute (lineage was cut at checkpoint)."""
-    return df._jdf.queryExecution().analyzed().rdd()
-
-
-def register_checkpoint(df: DataFrame) -> DataFrame:
-    """Track a localCheckpoint'ed frame so the NEXT release_caches()
-    (called by harness/bench after result materialization) frees its
-    blocks for real."""
-    _SESSION_CHECKPOINTS.append(_checkpoint_rdd(df))
-    return df
-
-
-def release_caches() -> None:
-    while _SESSION_CACHES:
-        _SESSION_CACHES.pop().unpersist()
-    while _SESSION_CHECKPOINTS:
-        _SESSION_CHECKPOINTS.pop().unpersist(False)
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -770,8 +732,6 @@ def _components_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     diameter) passes (near-dup graphs are shallow)."""
     from pyspark.sql import Observation
 
-    from spark_rapids_ml_spark.session import clamped_shuffle
-
     edges = _cache(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -784,7 +744,7 @@ def _components_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     # the pair graph is orders of magnitude smaller than the corpus;
     # iterate its joins at a narrow shuffle width — the width is a
     # property of the GRAPH, not of the session's scan-sized default
-    with clamped_shuffle(spark, 8):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         for _ in range(20):  # diameter bound; converges far earlier
             neigh_min = (
                 edges.join(labels, edges.dst == labels.doc_id)
@@ -878,15 +838,14 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [StructField("doc_id", LongType()), StructField("label", LongType())]
             ),
         )
-        release_caches()  # labels are driver-materialized; drop everything
+        release_caches()  # labels are driver-materialized; drop the scope's caches
     else:
         labels = _components_distributed(spark, pairs)
-        # drain the intermediate caches (pairs/bands/edges) FIRST, then
-        # register the final checkpoint's RDD handle so the NEXT
-        # release_caches() — which harness/bench call after
-        # materializing the result — frees its blocks too. One-shot
-        # semantics: a released checkpoint cannot recompute (lineage is
-        # cut), so callers must materialize before releasing.
+        # free this scope's intermediate caches (pairs/bands/edges)
+        # FIRST, then register the final checkpoint so the scope's exit
+        # (or the caller's next release_caches()) frees its blocks after
+        # the result is materialized. One-shot: a released checkpoint
+        # cannot recompute (lineage is cut).
         release_caches()
         register_checkpoint(labels)
     return labels.select(

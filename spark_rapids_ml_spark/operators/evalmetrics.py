@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.functions.portable import hash60, sql_hash60
 from spark_rapids_ml_spark.functions.localframe import local_df
+from spark_rapids_ml_spark.query_run import checkpoint
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -97,9 +98,8 @@ def ml_eval_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pid", F.spark_partition_id()
     )
     t = t.localCheckpoint(eager=False)  # pin pid: both consumers need ONE layout
-    from spark_rapids_ml_spark.operators.dedup import register_checkpoint
 
-    register_checkpoint(t)
+    checkpoint(t)
     w_local = Window.partitionBy("pid", "segment").orderBy("score_key")
     # per-(partition, segment) counts -> exclusive per-segment offsets
     # (driver-side: n_partitions x n_segments rows, the scan's middle step)

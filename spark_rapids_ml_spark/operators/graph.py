@@ -17,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.query_run import _checkpoint_rdd, cache, checkpoint
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -210,11 +212,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_co") >= min_sup)
         .select("a", "b")
     )
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
-    # cached (via the shared registry, freed by release_caches()):
+    # cached, freed when the query scope closes:
     # the edge list feeds four consumers (degree, triangles x3, count)
-    e = _cache(e)
+    e = cache(e)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -306,11 +307,6 @@ def graph_bfs_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance for plan bound — executor loss mid-query fails the job
     rather than recomputing, the documented convention trade-off.
     """
-    from spark_rapids_ml_spark.operators.dedup import (
-        _checkpoint_rdd,
-        register_checkpoint,
-    )
-
     li = load(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
     sp = li.select(
         (F.lit(_SUPPLIER_BASE) + F.col("l_suppkey")).alias("src"),
@@ -347,9 +343,9 @@ def graph_bfs_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").cast("bigint").alias("node"),
         F.col("dist").cast("bigint").alias("dist"),
     ).orderBy("node")
-    # the final checkpoint is registered with the session release hook
-    # (harness/bench call release_caches() after materializing)
-    out = register_checkpoint(out.localCheckpoint(eager=True))
+    # the final checkpoint is registered with the query scope, which
+    # frees its blocks after the caller materializes the result
+    out = checkpoint(out.localCheckpoint(eager=True))
     prev_rdd.unpersist(False)
     edges.unpersist()
     return out
@@ -434,22 +430,18 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     are freed directly (rdd.unpersist — Dataset.unpersist is a no-op
     on checkpoints) as soon as the NEXT round's checkpoint
     materializes, so at most two rounds' edge sets are resident; the
-    final round's blocks go through the register_checkpoint one-shot
+    final round's blocks go through the query_run.checkpoint one-shot
     release after the caller materializes. k and the per-round stats
     come from one scalar aggregate per round (bounded driver state,
     same convention as the kmeans centroid collect).
     """
-    from spark_rapids_ml_spark.operators.scale_patterns import _scoped_conf
-
-    from spark_rapids_ml_spark.operators.dedup import register_checkpoint
-
     li = (
         load(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") <= _KCORE_KEY_CAP)
         .select("l_orderkey", "l_partkey")
     )
     a, b = li.alias("a"), li.alias("b")
-    e = register_checkpoint(
+    e = checkpoint(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -474,7 +466,7 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # Each round's edge set is LINEAGE-CUT with localCheckpoint (the
-    # register_checkpoint one-shot release convention): with plain
+    # query_run.checkpoint one-shot release convention): with plain
     # cache() every round's plan embeds BOTH semi-join branches of the
     # previous round's plan, so the logical tree — and Spark's
     # explain-string generation for it — doubles per round (2^rounds;
@@ -492,8 +484,7 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-exchange re-planning turns each round's one logical action
     # into 3-4 separate Spark jobs (measured r14: 33 jobs / 1.2 s of
     # inter-job driver gap for 5 rounds; the fixed plan runs the same
-    # rows). Scoped + restored, the _scoped_conf convention.
-    from spark_rapids_ml_spark.operators.dedup import _checkpoint_rdd
+    # rows). Scoped + restored by session.scoped_conf.
 
     k = None
     traj = []
@@ -501,10 +492,9 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_ck = None
     from spark_rapids_ml_spark.plans.profiling import span
 
-    with _scoped_conf(
+    with scoped_conf(
         spark,
-        spark__sql__shuffle__partitions="8",
-        spark__sql__adaptive__enabled="false",
+        {"spark.sql.shuffle.partitions": "8", "spark.sql.adaptive.enabled": "false"},
     ):
         for r in range(_KCORE_ROUNDS + 1):
             with span(spark, f"kcore_round_{r}"):
@@ -528,7 +518,7 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
                 deg.unpersist()
                 break
             keep = deg.where(F.col("d") >= k).select("node")
-            e = register_checkpoint(
+            e = checkpoint(
                 e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
                 .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
                 .select("a", "b")
@@ -609,11 +599,9 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     exclusion is a left-anti hash join. Jaccard is one exact-integer
     IEEE division, so the ranking is bit-stable cross-engine.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
-    e = _cache(
+    e = cache(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -624,7 +612,7 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(F.col("n_co") >= GRAPH_MIN_SUP)
         .select("a", "b")
     )
-    sym = _cache(
+    sym = cache(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
             e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
@@ -764,8 +752,6 @@ def _lpa_run(spark: SparkSession, sf_dir: str):
     the documented localCheckpoint convention."""
     from pyspark.sql import Window
 
-    from spark_rapids_ml_spark.operators.dedup import _checkpoint_rdd
-
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     min_sup = LPA_MIN_SUP + 1 if li.count() > CO_SUPPORT_THRESH else LPA_MIN_SUP
     a, b = li.alias("a"), li.alias("b")
@@ -862,11 +848,10 @@ def graph_degree_distribution_ccdf(spark: SparkSession, sf_dir: str) -> DataFram
     the plan.
     """
     from spark_rapids_ml_spark.functions.scan import ranged_cumsum
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
-    e = _cache(
+    e = cache(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -882,7 +867,7 @@ def graph_degree_distribution_ccdf(spark: SparkSession, sf_dir: str) -> DataFram
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # cached: the histogram feeds BOTH the total reduction and the scan
-    hist = _cache(
+    hist = cache(
         deg.groupBy(F.col("d").alias("degree")).agg(
             F.count(F.lit(1)).alias("n_nodes")
         )
@@ -977,15 +962,13 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint the score frames every few iterations — the k-core
     lineage discipline); the normalization max is a 1-row broadcast.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = (
         load(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") <= 6000)
         .select("l_orderkey", "l_suppkey")
     )
-    e0 = _cache(
+    e0 = cache(
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(
             F.col("o_custkey").alias("src"),
@@ -1006,11 +989,6 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s"),
         )
 
-    from spark_rapids_ml_spark.operators.dedup import (
-        _checkpoint_rdd,
-        register_checkpoint,
-    )
-
     h = e0.select("src").distinct().select(
         F.col("src").alias("id"), F.lit(_ONE).cast("bigint").alias("s")
     )
@@ -1029,9 +1007,9 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # execution before this cut). Values are unchanged. Round-11
         # (the round-10 advice): a half-step's blocks are freed as soon
         # as the NEXT half-step materializes — only the FINAL a and h
-        # (the ranking inputs) live to release_caches(), so live
+        # (the ranking inputs) live until the scope closes, so live
         # checkpoint storage is one half-step, not 2*iters frames.
-        a = register_checkpoint(_normalize(a_raw).localCheckpoint(eager=True))
+        a = checkpoint(_normalize(a_raw).localCheckpoint(eager=True))
         if h_rdd is not None:  # h_{it-1}: consumed by a_raw, never again
             h_rdd.unpersist(False)
         h_raw = (
@@ -1040,7 +1018,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("s").cast("bigint").alias("s"))
             .select(F.col("src").alias("id"), "s")
         )
-        h = register_checkpoint(_normalize(h_raw).localCheckpoint(eager=True))
+        h = checkpoint(_normalize(h_raw).localCheckpoint(eager=True))
         h_rdd = _checkpoint_rdd(h)
         if it < _HITS_ITERS - 1:  # a_it: consumed by h_raw; keep only the final
             _checkpoint_rdd(a).unpersist(False)

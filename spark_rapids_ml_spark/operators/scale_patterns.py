@@ -10,13 +10,13 @@ be semantically identical to its naive form via the DuckDB oracle.
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load, reset_managed_table, warehouse_dir
 
@@ -551,26 +551,14 @@ def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@contextlib.contextmanager
-def _scoped_conf(spark: SparkSession, **confs: str):
-    """Set session confs for the duration of a query build+execution,
-    restoring previous values after — deployment knobs must not leak
-    into unrelated queries on the shared session."""
-    keys = {k.replace("__", "."): v for k, v in confs.items()}
-    prev = {k: spark.conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 BLOOM_PRICE_CUTOFF = 400_000
+# runtime Bloom-filter knobs of scale_runtime_bloom_filter_join (scoped)
+BLOOM_JOIN_CONFS = {
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
 
 @register(
@@ -610,15 +598,7 @@ def scale_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFra
     at the hash table — the Bloom path exists for the shuffle-join
     regime where BOTH sides are too large to broadcast.
     """
-    with _scoped_conf(
-        spark,
-        **{
-            "spark__sql__optimizer__runtime__bloomFilter__enabled": "true",
-            "spark__sql__optimizer__runtime__bloomFilter__applicationSideScanSizeThreshold": "0",
-            "spark__sql__optimizer__runtime__bloomFilter__creationSideThreshold": "100MB",
-            "spark__sql__autoBroadcastJoinThreshold": "-1",
-        },
-    ):
+    with scoped_conf(spark, BLOOM_JOIN_CONFS):
         o = load(spark, sf_dir, "orders").where(
             F.col("o_totalprice") > BLOOM_PRICE_CUTOFF
         )
@@ -1025,19 +1005,19 @@ def scale_footer_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hot key (75% of fact rows on one join key) trips the runtime skew
 # split even at test scale; production leaves the defaults (256MB).
 AQE_SKEW_CONFS = {
-    "spark__sql__adaptive__enabled": "true",
-    "spark__sql__adaptive__skewJoin__enabled": "true",
-    "spark__sql__adaptive__skewJoin__skewedPartitionFactor": "1.2",
-    "spark__sql__adaptive__skewJoin__skewedPartitionThresholdInBytes": "4KB",
-    "spark__sql__adaptive__advisoryPartitionSizeInBytes": "4KB",
-    "spark__sql__adaptive__coalescePartitions__enabled": "false",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4KB",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
     # the aggregation downstream of the join needs hash partitioning,
     # so splitting the skewed join partition ADDS a shuffle — without
     # force, OptimizeSkewedJoin declines exactly the common shape
     # (join feeding an agg); production sets this when the straggler
     # costs more than the extra exchange
-    "spark__sql__adaptive__forceOptimizeSkewedJoin": "true",
-    "spark__sql__autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
 }
 
 
@@ -1078,7 +1058,7 @@ def scale_aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     here are scoped deployment knobs (defaults assume 256MB
     partitions), restored on exit — the bloom-join discipline.
     """
-    with _scoped_conf(spark, **AQE_SKEW_CONFS):
+    with scoped_conf(spark, AQE_SKEW_CONFS):
         # AQE splits a skewed reduce partition on MAP-OUTPUT boundaries
         # — a partition fed by ONE mapper is unsplittable. The test
         # tables read as a single parquet file (one map task), so stage

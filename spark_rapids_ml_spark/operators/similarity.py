@@ -59,6 +59,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.query_run import cache
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load, load_wide, reset_managed_table
@@ -250,9 +251,7 @@ def with_unit_vector(
     identical either way (same expressions)."""
     normed = df.withColumn("_norm", norm_expr(emb_col))
     if barrier:
-        from spark_rapids_ml_spark.operators.dedup import _cache
-
-        normed = _cache(normed)
+        normed = cache(normed)
     return normed.withColumn(
         out_col,
         F.transform(emb_col, lambda x: x.cast("double") / F.col("_norm")),
@@ -274,9 +273,7 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     every cached pass (Lloyd iterations, assignment, coarse scan) to
     ONE core — the sf1 8-vs-32-core ratio sat at ~1.0 (serial) — and
     the exchange is paid once at cache materialization (guide §2.5)."""
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
-    return _cache(
+    return cache(
         load_wide(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("emb")
         )
@@ -645,8 +642,6 @@ def sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall/wall curve is re-measured in RECALL_r8.json). Recall
     asserted vs brute force in tests/test_quality.py.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     # NOT widened (r14 negative result): widening the signature/rerank
     # side measured 1.6x WORSE at sf1 — the (tbl, bucket) candidate
     # equi-join over two 32-partition cached sides loses more than the
@@ -658,7 +653,7 @@ def sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputes it (measured ~10% of query wall at sf0.1). The
     # persisted-index tier (sim_lsh_persisted_probe) removes the
     # recompute entirely.
-    sig = _cache(_signatures_df(e, k))
+    sig = cache(_signatures_df(e, k))
     qsig = _query_probes(
         sig.where(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("qid"), "tbl", "bucket"
@@ -2013,11 +2008,9 @@ def _sparse_cosine_pairs_of(d: DataFrame) -> DataFrame:
     """Thresholded idf-weighted cosine pairs over any (doc_id, toks)
     frame — the shared pipeline behind the declared query and its
     degenerate-corpus skew-guard twin."""
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     # cached: the exploded posting table feeds df, norms, and both
     # join sides
-    sh = _cache(d.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
+    sh = cache(d.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
     n_docs = sh.select("doc_id").distinct().count()
     df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = (
@@ -2366,8 +2359,6 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (qid, doc_id, rank) from each tower, so towers swap freely);
     fusion itself joins two ≤ Q·RRF_DEPTH-row lists — driver-free,
     shuffle-light, and independent of corpus size."""
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     alldocs = load(spark, sf_dir, "documents")
     cap = _doc_slice_cap(alldocs.count())
     d = alldocs.where(F.col("doc_id") <= cap).select(
@@ -2376,7 +2367,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lexical tower: idf-weighted shingle postings, query->corpus
     # integer dots (the sparse-pairs pipeline with a query-side slice
     # instead of the doc_a < doc_b self-join)
-    sh = _cache(d.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
+    sh = cache(d.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
     n_docs = sh.select("doc_id").distinct().count()
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = (
@@ -2561,8 +2552,6 @@ def retrieval_rrf_filtered_fusion(spark: SparkSession, sf_dir: str) -> DataFrame
     integers the filtered tier already uses; the id cap is an
     evaluation-slice artifact applied as one more pushed scan
     predicate in both engines."""
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     alldocs = load(spark, sf_dir, "documents")
     cap = _doc_slice_cap(alldocs.count())
 
@@ -2571,7 +2560,7 @@ def retrieval_rrf_filtered_fusion(spark: SparkSession, sf_dir: str) -> DataFrame
     fd = alldocs.where((F.col("doc_id") <= cap) & _filter_pred()).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    sh = _cache(fd.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
+    sh = cache(fd.select("doc_id", F.explode(shingles("toks")).alias("shingle")))
     n_docs = sh.select("doc_id").distinct().count()
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ceil_df = F.lit(n_docs // SPARSE_DF_CEIL_DEN)

@@ -17,10 +17,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.plans.profiling import span
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -168,13 +171,8 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     update = d.where(F.col("lang") == "en").withColumn(
         "n_chars", F.col("n_chars") + 1000
     )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    try:
-        spark.conf.set(mode_key, "dynamic")
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         update.write.mode("overwrite").partitionBy("lang").parquet(path)
-    finally:
-        spark.conf.set(mode_key, prev)
     back = spark.read.parquet(path)
     return (
         back.groupBy("lang")
@@ -1047,25 +1045,17 @@ def sink_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    def _commit(args) -> None:
-        df, name = args
-        spark.sparkContext.setJobDescription(f"lifecycle commit {name}")
-        df.write.mode("overwrite").parquet(os.path.join(root, name))
+    def _commit(df: DataFrame, name: str) -> None:
+        with span(spark, f"lifecycle commit {name}"):
+            df.write.mode("overwrite").parquet(os.path.join(root, name))
 
+    # each commit thread inherits the caller's job group (its own copy
+    # of the local properties, so the span labels do not cross threads)
+    stages = [(o, "v1"), (v2f, "v2"), (dvf, "deletes"), (livef, "v3"), (feedf, "feed")]
     with ThreadPoolExecutor(max_workers=5) as pool:
-        list(
-            pool.map(
-                _commit,
-                [
-                    (o, "v1"),
-                    (v2f, "v2"),
-                    (dvf, "deletes"),
-                    (livef, "v3"),
-                    (feedf, "feed"),
-                ],
-            )
-        )
-    spark.sparkContext.setJobDescription(None)
+        commits = [pool.submit(inheritable_thread_target(spark)(_commit), *s) for s in stages]
+        for c in commits:
+            c.result()
 
     v3 = spark.read.parquet(os.path.join(root, "v3"))
     feed = spark.read.parquet(os.path.join(root, "feed"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from spark_rapids_ml_spark.functions.portable import hash60, sql_hash60
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.functions.text import SQL_TOKENS
+from spark_rapids_ml_spark.query_run import cache
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -650,13 +651,12 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b")
     ).select("b.w1", "b.w2")
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
     # ONE corpus-wide reduction; the marginals and the total then
     # aggregate the already-reduced (w1, w2, n_pair) vocabulary table
     # (sum over a group of counts == count over the group's rows), so
     # the token stream crosses the network exactly once.
-    cxy = _cache(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")))
+    cxy = cache(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")))
     cx = cxy.groupBy("w1").agg(F.sum("n_pair").alias("c1"))
     cy = cxy.groupBy("w2").agg(F.sum("n_pair").alias("c2"))
     tot = cxy.agg(F.sum("n_pair").alias("nb"))

@@ -13,7 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.query_run import cache
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -1098,11 +1100,10 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     {RFM_TILES}^3 cells.
     """
     from spark_rapids_ml_spark.functions.scan import ranged_ntile
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
     o = load(spark, sf_dir, "orders")
     # cached: the per-customer base feeds three independent ntile scans
-    base = _cache(
+    base = cache(
         o.groupBy(F.col("o_custkey").alias("custkey")).agg(
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).alias("freq"),
@@ -1673,9 +1674,8 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", F.col("ts").cast("date").alias("day"))
         .distinct()
     )
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
-    ud = _cache(ud)
+    ud = cache(ud)
     cal = ud.select("day").distinct()
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     # ONE 30-day fan-out computes BOTH trailing windows: the offset k
@@ -1773,20 +1773,18 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration cost is job-scheduling latency, not data (k-core's
     lesson). n_incoming ties the fixture to the raw counts.
     """
-    from spark_rapids_ml_spark.operators.dedup import _cache
-
     pairs = load(spark, sf_dir, "events").select(
         F.col("event_type").alias("cur"),
         F.lead("event_type")
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("nxt"),
     )
-    c = _cache(
+    c = cache(
         pairs.where(F.col("nxt").isNotNull()).groupBy("cur", "nxt").agg(
             F.count(F.lit(1)).alias("n")
         )
     )
-    p = _cache(
+    p = cache(
         c.select(
             "cur",
             "nxt",
@@ -1800,10 +1798,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pi = states.select("st", F.lit(_MK_NANO // n_states).cast("bigint").alias("v"))
     # the per-iteration shuffles move a |types|-row vector: scope the
     # width down (cached plans bypass AQE coalescing — the k-core
-    # convention, scale_patterns._scoped_conf)
-    from spark_rapids_ml_spark.operators.scale_patterns import _scoped_conf
-
-    with _scoped_conf(spark, spark__sql__shuffle__partitions="8"):
+    # convention)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         for _ in range(MARKOV_ITERS):
             pi = (
                 pi.join(p, pi["st"] == p["cur"])
@@ -1880,9 +1876,8 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("first_day")
     )
-    from spark_rapids_ml_spark.operators.dedup import _cache
 
-    first_seen = _cache(first_seen)
+    first_seen = cache(first_seen)
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     rev = (
         ev.where(F.col("event_type") == "purchase")

@@ -31,26 +31,30 @@ from __future__ import annotations
 import contextlib
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
 @contextlib.contextmanager
-def clamped_shuffle(spark: SparkSession, n: int):
-    """Temporarily clamp spark.sql.shuffle.partitions to ``n``.
-
-    For driver-side iterative algorithms over *small* frames (label
-    propagation, Lloyd's iterations): each iteration materializes its
-    shuffles, so the session-wide width (sized for the big scans) is
-    pure task-scheduling overhead here. AQE coalescing does not cover
-    these: localCheckpoint/stateful stages pin the initial width.
-    """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the enclosed block, then restore each
+    previous value (unsetting a key that was unset before), also when
+    the block raised. Deployment knobs a query scopes to itself (a
+    narrow shuffle width for iterative loops over small frames, a state
+    store provider, runtime-filter thresholds) must not leak into
+    unrelated queries on the shared session."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
 
 # local[N] width: SPARK_GRAFT_CPUS, else every core of the host
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
@@ -64,7 +68,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults."""
+    """Build (or reuse) a SparkSession with the engine's defaults.
+
+    Reusing a running session raises ``RuntimeError`` when an
+    ``extra_conf`` key is a static conf whose requested value differs
+    from the running context's (an event log, say, cannot be switched
+    on after the context started)."""
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
@@ -98,4 +107,20 @@ def get_spark(
     conf[key] = os.pathsep.join(filter(None, [_PACKAGE_PARENT, conf.get(key)]))
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    reused = SparkContext._active_spark_context is not None
+    spark = builder.getOrCreate()
+    if reused:
+        # a reused session keeps its context's static confs, whatever
+        # spark.conf.get reports afterwards
+        running = spark.sparkContext.getConf()
+        dropped = sorted(
+            k
+            for k in extra_conf or {}
+            if not spark.conf.isModifiable(k) and running.get(k) != conf[k]
+        )
+        if dropped:
+            raise RuntimeError(
+                "get_spark reused a running session; these static confs differ "
+                f"from it and cannot take effect: {', '.join(dropped)}"
+            )
+    return spark

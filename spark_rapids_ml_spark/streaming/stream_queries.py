@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.registry import register
+from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load, normalize_event_ts, table_path
 
@@ -47,22 +48,11 @@ _CHECKPOINT_ROOT = (
 # shuffle width for the run (state partitioning is a *deployment*
 # knob: a real 100 TB backfill sizes it to keys/executors, not to the
 # session default) and restore the session conf afterwards.
-_STATE_PARTITIONS = 4
+_STATE_SHUFFLE = {"spark.sql.shuffle.partitions": "4"}
 
 # batch-inferred schema per sf_dir (saves a file-listing + footer job
 # on every streaming query)
 _SCHEMA_CACHE: dict[str, object] = {}
-
-
-@contextlib.contextmanager
-def _state_shuffle(spark: SparkSession):
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(_STATE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -119,7 +109,7 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
 
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ck = f"{_CHECKPOINT_ROOT}/{name}"
-    with _state_shuffle(stream_df.sparkSession):
+    with scoped_conf(stream_df.sparkSession, _STATE_SHUFFLE):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -412,7 +402,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     s = _read_stream(spark, sf_dir).where(F.col("value") > 100)
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             s.select("event_id", "event_type", "value")
             .writeStream.foreachBatch(write_batch)
@@ -692,13 +682,8 @@ def stream_rocksdb_state_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users — the state shape (large keyspace, long-lived
     windows) that motivates a disk-backed store in the first place.
     """
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         s = _read_stream(spark, sf_dir)
         agg = (
             s.withWatermark("ts", "1 day")
@@ -709,11 +694,6 @@ def stream_rocksdb_state_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         res = _run_to_memory(agg, "complete")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     base = res.select(
         F.col("event_type"),
         F.date_format("window.start", "yyyy-MM-dd").alias("day"),
@@ -780,7 +760,7 @@ def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
         s = _read_stream(spark, sf_dir).where(
             F.col("event_type").isin("click", "view")
         )
-        with _state_shuffle(spark):
+        with scoped_conf(spark, _STATE_SHUFFLE):
             q = (
                 s.select("event_id", "event_type", "value")
                 .writeStream.format("parquet")
@@ -979,7 +959,7 @@ def stream_incremental_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             stream.writeStream.foreachBatch(process)
             .option(
@@ -1093,7 +1073,7 @@ def stream_python_datasource_reader(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum("score").cast("bigint").alias("score_sum"),
     )
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -1299,7 +1279,7 @@ def stream_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFra
     sel = s.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.col("value").cast("double").alias("value")
     )
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             sel.writeStream.format("jsonl_stream_sink")
             .option("path", path)
@@ -1505,7 +1485,7 @@ def stream_cdf_apply_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option(
@@ -1701,7 +1681,7 @@ def stream_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_root, f"state_v{batch_id}")
         )
 
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", f"{_CHECKPOINT_ROOT}/hh_{uuid.uuid4().hex[:8]}")
@@ -1869,7 +1849,7 @@ def stream_incremental_covariance(spark: SparkSession, sf_dir: str) -> DataFrame
             os.path.join(state_root, f"state_v{batch_id}")
         )
 
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
             .option(
@@ -1997,7 +1977,7 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_root, f"state_v{batch_id}")
         )
 
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
             .option(
@@ -2081,7 +2061,7 @@ def _stream_build_cell_index(spark: SparkSession, df, model, stage: str,
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     )
     assigned = model.transform(stream, "cell")
-    with _state_shuffle(spark):
+    with scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             assigned.writeStream.format("parquet")
             .option("path", index_dir)

@@ -1,7 +1,7 @@
 """The IVF skeleton the ANN tiers share (operators/similarity.py).
 
 Job counts: each query runs once at sf0.001 to build its persisted
-index (and start the Python workers), then again under a job group; the
+index (and start the Python workers), then again in a query scope; the
 second run's job count must not exceed the count pinned below, so
 sharing the IVF steps between the tiers can never add a Spark job to any
 of them. Streaming micro-batches run under their own job group, so the
@@ -18,12 +18,12 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from spark_rapids_ml_spark.operators.dedup import release_caches
 from spark_rapids_ml_spark.operators.similarity import (
     _index_tag,
     retrieval_rrf_filtered_fusion,
     sim_filtered_ivf_topk,
 )
+from spark_rapids_ml_spark.query_run import query_run, release_caches
 from spark_rapids_ml_spark.registry import all_queries
 from tests.conftest import SF_SMALL as SF
 
@@ -43,17 +43,11 @@ MAX_JOBS = {
 
 def _jobs(spark, name: str) -> int:
     fn = all_queries()[name].fn
-    fn(spark, SF).collect()  # warm: index build, worker start
-    release_caches()
-    sc = spark.sparkContext
-    group = f"ann-jobs-{name}"
-    sc.setJobGroup(group, group)
-    try:
+    with query_run(spark, name):
+        fn(spark, SF).collect()  # warm: index build, worker start
+    with query_run(spark, name) as run:
         fn(spark, SF).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        release_caches()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(run.job_ids)
 
 
 @pytest.mark.parametrize("name", sorted(MAX_JOBS))

@@ -3,7 +3,7 @@ reduction.
 
 - Each fit pass is ONE Spark job (a ``mapInArrow`` kernel emitting one
   packed partial per partition, collected and summed on the driver).
-  The counts are pinned under a job group.
+  The counts are pinned in a query scope (``run.job_ids``).
 - The driver sums the partials in partition order, so a fit's result is
   bit-equal to a numpy fold of the per-partition partials — it cannot
   depend on which shuffle block arrives first.
@@ -23,6 +23,7 @@ from spark_rapids_ml_spark.ml.kmeans import KMeans
 from spark_rapids_ml_spark.ml.linreg import LinearRegression
 from spark_rapids_ml_spark.ml.pca import PCA, compute_column_means, compute_covariance
 from spark_rapids_ml_spark.ml.scaler import MinMaxScaler, StandardScaler
+from spark_rapids_ml_spark.query_run import query_run
 
 ESTIMATORS = {
     "PCA": lambda: PCA(k=2),
@@ -65,15 +66,10 @@ JOB_COUNTS = {
 @pytest.mark.parametrize("call", list(JOB_COUNTS))
 def test_estimator_job_count(spark, reg_parquet, call):
     fn, expected = JOB_COUNTS[call]
-    sc = spark.sparkContext
-    df = spark.read.parquet(reg_parquet)  # schema read outside the group
-    group = f"ml-jobs-{call}"
-    sc.setJobGroup(group, group)
-    try:
+    df = spark.read.parquet(reg_parquet)  # schema read outside the scope
+    with query_run(spark, call) as run:
         fn(df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected
+    assert len(run.job_ids) == expected
 
 
 # ------------------------------------------------ partition-order merge

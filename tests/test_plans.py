@@ -526,20 +526,13 @@ def test_runtime_bloom_filter_injected(spark):
     from pyspark.sql import functions as F
 
     from spark_rapids_ml_spark.operators.scale_patterns import (
+        BLOOM_JOIN_CONFS,
         BLOOM_PRICE_CUTOFF,
-        _scoped_conf,
     )
+    from spark_rapids_ml_spark.session import scoped_conf
     from spark_rapids_ml_spark.sources.catalog import load
 
-    with _scoped_conf(
-        spark,
-        **{
-            "spark__sql__optimizer__runtime__bloomFilter__enabled": "true",
-            "spark__sql__optimizer__runtime__bloomFilter__applicationSideScanSizeThreshold": "0",
-            "spark__sql__optimizer__runtime__bloomFilter__creationSideThreshold": "100MB",
-            "spark__sql__autoBroadcastJoinThreshold": "-1",
-        },
-    ):
+    with scoped_conf(spark, BLOOM_JOIN_CONFS):
         o = load(spark, SF, "orders").where(F.col("o_totalprice") > BLOOM_PRICE_CUTOFF)
         li = load(spark, SF, "lineitem")
         j = (
@@ -857,13 +850,11 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     the oversized partition was split from runtime statistics."""
     from pyspark.sql import functions as F
 
-    from spark_rapids_ml_spark.operators.scale_patterns import (
-        AQE_SKEW_CONFS,
-        _scoped_conf,
-    )
+    from spark_rapids_ml_spark.operators.scale_patterns import AQE_SKEW_CONFS
+    from spark_rapids_ml_spark.session import scoped_conf
     from spark_rapids_ml_spark.sources.catalog import load
 
-    with _scoped_conf(spark, **AQE_SKEW_CONFS):
+    with scoped_conf(spark, AQE_SKEW_CONFS):
         # 16 mappers: AQE can only split a skewed partition on
         # map-output boundaries (one input file = one unsplittable map)
         li = load(spark, SF, "lineitem").repartition(16).select(

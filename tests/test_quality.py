@@ -166,8 +166,8 @@ def test_lsh_skew_guard_query_is_pure_star(spark):
         N_BANDS,
         SKEW_MOD,
         dedup_lsh_skew_guard,
-        release_caches,
     )
+    from spark_rapids_ml_spark.query_run import release_caches
 
     rows = dedup_lsh_skew_guard(spark, SF).collect()
     release_caches()
@@ -214,8 +214,8 @@ def test_simhash_banding_pigeonhole_exact(spark):
         SIMHASH_HAMMING_MAX,
         _simhash_df,
         dedup_simhash_hamming_pairs,
-        release_caches,
     )
+    from spark_rapids_ml_spark.query_run import release_caches
 
     sigs = {r["doc_id"]: r["simhash"] for r in _simhash_df(spark, SF).collect()}
     cand: set[tuple[int, int]] = set()
@@ -252,13 +252,9 @@ def test_checkpoint_blocks_actually_released(spark):
     Dataset.unpersist() alone is a no-op for checkpoints (their blocks
     are not CacheManager entries), so the registry tracks the JVM RDD
     under the LogicalRDD plan and unpersists that."""
-    from spark_rapids_ml_spark.operators.dedup import (
-        _checkpoint_rdd,
-        register_checkpoint,
-        release_caches,
-    )
+    from spark_rapids_ml_spark.query_run import _checkpoint_rdd, checkpoint, release_caches
 
-    ck = register_checkpoint(
+    ck = checkpoint(
         spark.range(50_000).selectExpr("id", "id * 3 AS y").localCheckpoint(eager=True)
     )
     rdd_id = _checkpoint_rdd(ck).id()
@@ -277,8 +273,8 @@ def test_cluster_paths_agree(spark):
         _components_distributed,
         _components_local,
         dedup_minhash_lsh_pairs,
-        release_caches,
     )
+    from spark_rapids_ml_spark.query_run import release_caches
 
     pairs = dedup_minhash_lsh_pairs(spark, SF).select("doc_a", "doc_b")
     rows = [(r["doc_a"], r["doc_b"]) for r in pairs.collect()]

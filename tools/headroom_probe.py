@@ -111,8 +111,9 @@ def main() -> None:
 
     # dedup at 10x docs: every doc duplicated 10x -> dense duplicate
     # cohorts, a stress test of the LSH bucket path and the guard
-    from spark_rapids_ml_spark.operators.dedup import lsh_candidate_pairs, release_caches
     from spark_rapids_ml_spark.operators import dedup as dd
+    from spark_rapids_ml_spark.operators.dedup import lsh_candidate_pairs
+    from spark_rapids_ml_spark.query_run import release_caches
 
     d = load(spark, SF_DIR, "documents")
     d10 = None

@@ -13,10 +13,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from spark_rapids_ml_spark.query_run import query_run
 from spark_rapids_ml_spark.session import get_spark
 
 
@@ -26,7 +26,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from spark_rapids_ml_spark.operators import similarity as sim
-    from spark_rapids_ml_spark.operators.dedup import release_caches
     from spark_rapids_ml_spark.sources.catalog import load
 
     tiers = {
@@ -45,13 +44,11 @@ def main() -> None:
     n_corpus = load(spark, sf_dir, "embeddings").count()
 
     def topk_sets(fn):
-        t0 = time.perf_counter()
         out: dict[int, set[int]] = {}
-        for r in fn(spark, sf_dir).collect():
-            out.setdefault(r["qid"], set()).add(r["vec_id"])
-        dt = round(time.perf_counter() - t0, 2)
-        release_caches()
-        return out, dt
+        with query_run(spark, fn.__name__) as run:
+            for r in fn(spark, sf_dir).collect():
+                out.setdefault(r["qid"], set()).add(r["vec_id"])
+        return out, round(run.wall_s, 2)
 
     truth, exact_wall = topk_sets(sim.sim_bruteforce_topk)
     truths = {sim.sim_bruteforce_topk: truth}

@@ -2,7 +2,8 @@
 
 Emits one JSON line per query to stderr-progress and a final JSON file
 tools/sweep_times.json sorted by total cost, so we can see what the
-driver's correctness budget is spent on.
+driver's correctness budget is spent on. Each query runs in its own
+query scope, so a failing query's caches are freed before the next.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_rapids_ml_spark.harness import duckdb_connect
+from spark_rapids_ml_spark.query_run import query_run
 from spark_rapids_ml_spark.registry import all_queries
 from spark_rapids_ml_spark.session import get_spark
 
@@ -23,7 +25,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark("sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    from spark_rapids_ml_spark.operators.dedup import release_caches
 
     specs = all_queries()
     con = duckdb_connect(sf_dir)
@@ -31,16 +32,14 @@ def main() -> None:
     # warm-up
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     for name, spec in specs.items():  # registration order == driver order
-        t0 = time.perf_counter()
         err = None
-        try:
-            pdf = spec.fn(spark, sf_dir).toPandas()
-            nrows = len(pdf)
-        except Exception as e:  # noqa: BLE001
-            err = f"{type(e).__name__}: {e}"[:200]
-            nrows = -1
-        t_spark = time.perf_counter() - t0
-        release_caches()
+        with query_run(spark, name) as run:
+            try:
+                nrows = len(spec.fn(spark, sf_dir).toPandas())
+            except Exception as e:  # noqa: BLE001
+                err = f"{type(e).__name__}: {e}"[:200]
+                nrows = -1
+        t_spark = run.wall_s
         t1 = time.perf_counter()
         if spec.oracle is not None and err is None:
             try:
