@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.operators.sources_io import _sink
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.sources.catalog import load
@@ -265,8 +266,7 @@ def sink_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     partition overwrite makes the delta append idempotent on retry,
     and the merge job's input is KB-sized regardless of raw volume.
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    partials = f"/root/repo/.tmp/sinks/{tag}/orders_agg_partials"
+    partials = _sink("orders_agg_partials", sf_dir)
     o = load(spark, sf_dir, "orders").withColumn(
         "month", F.date_format("o_orderdate", "yyyy-MM")
     )

@@ -20,6 +20,15 @@ from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load, reset_managed_table, warehouse_dir
 
+
+def _sink(name: str, sf_dir: str) -> str:
+    """sources_io._sink, imported at call time: importing sources_io
+    with this module would register its queries ahead of this one's."""
+    from spark_rapids_ml_spark.operators import sources_io
+
+    return sources_io._sink(name, sf_dir)
+
+
 N_SALTS = 16
 
 
@@ -124,8 +133,7 @@ def partitioned_write_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame
     lang filter is satisfied by *partition pruning* — directories for
     other languages are never opened. tests/test_plans.py asserts the
     PartitionFilters in the scan."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join("/root/repo/.tmp/sinks", tag, "documents_by_lang")
+    path = _sink("documents_by_lang", sf_dir)
     d = load(spark, sf_dir, "documents")
     d.write.mode("overwrite").partitionBy("lang").parquet(path)
     back = spark.read.parquet(path).where(F.col("lang").isin("en", "es"))
@@ -196,8 +204,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("k").isNotNull(), F.lit("U")).otherwise(F.lit("K")).alias("op"),
     )
     merged = matched.unionByName(ins)
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join("/root/repo/.tmp/sinks", tag, "customer_merged")
+    path = _sink("customer_merged", sf_dir)
     merged.write.mode("overwrite").parquet(path)
     return (
         spark.read.parquet(path)
@@ -439,9 +446,8 @@ def layout_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism only needs reducing — repartition is reserved for
     re-clustering (see layout_zorder_buckets).
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    frag = f"/root/repo/.tmp/sinks/{tag}/orders_fragmented"
-    compact = f"/root/repo/.tmp/sinks/{tag}/orders_compacted"
+    frag = _sink("orders_fragmented", sf_dir)
+    compact = _sink("orders_compacted", sf_dir)
     o = load(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "O")
     o.repartition(64).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compact)
@@ -652,8 +658,7 @@ def scale_manifest_file_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned-set contract (subset of files, same rows) is pinned in
     tests/test_round6_ops.py.
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"/root/repo/.tmp/sinks/{tag}/orders_ranged"
+    path = _sink("orders_ranged", sf_dir)
     o = load(spark, sf_dir, "orders")
     o.repartitionByRange(12, "o_orderdate").write.mode("overwrite").parquet(path)
     manifest = (
@@ -758,7 +763,6 @@ def scale_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
     composing with broadcast (the dim is broadcast anyway, so the
     pruning subquery reuses that exchange for free).
     """
-    tag = sf_dir.strip("/").replace("/", "_")
     # Cache key includes a fingerprint of the SOURCE orders parquet
     # (mtime+size), not just a _SUCCESS marker: if the source data is
     # regenerated, the partitioned snapshot is rebuilt instead of
@@ -769,7 +773,7 @@ def scale_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
         fp = f"{int(st.st_mtime)}_{st.st_size}"
     except OSError:
         fp = "nofp"
-    fact_path = f"/root/repo/.tmp/sinks/{tag}/dpp_orders_by_priority_{fp}"
+    fact_path = _sink(f"dpp_orders_by_priority_{fp}", sf_dir)
     marker = os.path.join(fact_path, "_SUCCESS")
     o = load(spark, sf_dir, "orders")
     if not os.path.exists(marker):
@@ -843,8 +847,7 @@ def scale_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned-in files; at 100 TB this is the difference between a
     weekend table rewrite and a catalog commit.
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/.tmp/sinks/{tag}/orders_evolved"
+    root = _sink("orders_evolved", sf_dir)
     o = load(spark, sf_dir, "orders")
     split = F.lit(PE_SPLIT_DATE).cast("timestamp_ntz")
     # era A: historical files, spec A = identity(o_orderpriority)
@@ -941,8 +944,7 @@ def scale_footer_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    src = f"/root/repo/.tmp/sinks/{tag}/footer_stats_orders8"
+    src = _sink("footer_stats_orders8", sf_dir)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     o.repartition(8, "o_orderkey").write.mode("overwrite").parquet(src)
 

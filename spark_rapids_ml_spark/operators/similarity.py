@@ -337,6 +337,37 @@ def _ivf_fit(train: DataFrame, n_train: int):
     ).fit(train)
 
 
+def _psi_cell_counts(spark: SparkSession, model, ed: DataFrame) -> DataFrame:
+    """The PSI input over the cells of ``model``: one row per cell with
+    the reference (even vec_id) and current (odd vec_id) counts of
+    ``ed`` (vec_id, emb) in it, zero-filled, and both window totals
+    (t_ref, t_cur) on every row — unconditional scalar totals, the
+    dq_psi degenerate-slice shape. psi_micro_sql reads these columns.
+    dq_embedding_drift_psi and the streaming ANN lifecycle's drift
+    gate share it."""
+    w = model.transform(ed, "cell").select("cell", (F.col("vec_id") % 2).alias("pop"))
+    c = w.groupBy("pop", "cell").agg(F.count(F.lit(1)).alias("n"))
+    spine = local_df(spark, [(i,) for i in range(len(model.centroids))], "cell bigint")
+    t_scalar = c.groupBy("pop").agg(F.sum("n").alias("t")).agg(
+        F.max(F.when(F.col("pop") == 0, F.col("t"))).alias("t_ref"),
+        F.max(F.when(F.col("pop") == 1, F.col("t"))).alias("t_cur"),
+    )
+    p = c.where(F.col("pop") == 0).select("cell", F.col("n").alias("n_ref"))
+    q = c.where(F.col("pop") == 1).select("cell", F.col("n").alias("n_cur"))
+    return (
+        spine.join(p, "cell", "left")
+        .join(q, "cell", "left")
+        .crossJoin(F.broadcast(t_scalar))
+        .select(
+            "cell",
+            F.coalesce("n_ref", F.lit(0)).cast("bigint").alias("n_ref"),
+            F.coalesce("n_cur", F.lit(0)).cast("bigint").alias("n_cur"),
+            "t_ref",
+            "t_cur",
+        )
+    )
+
+
 def _coarse_quantizer(
     spark: SparkSession, ed: DataFrame, n_corpus: int, q: DataFrame
 ) -> tuple:
@@ -2216,32 +2247,7 @@ def dq_embedding_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = ed.where(F.col("vec_id") % 2 == 0)
     model = _ivf_fit(anchor, anchor.count())
     k_cells = len(model.centroids)
-    w = model.transform(ed, "cell").select(
-        F.col("cell"),
-        (F.col("vec_id") % 2).alias("pop"),
-    )
-    c = w.groupBy("pop", "cell").agg(F.count(F.lit(1)).alias("n"))
-    spine = local_df(spark, [(i,) for i in range(k_cells)], "cell bigint")
-    # unconditional scalar totals (the dq_psi degenerate-slice shape)
-    t_scalar = c.groupBy("pop").agg(F.sum("n").alias("t")).agg(
-        F.max(F.when(F.col("pop") == 0, F.col("t"))).alias("t_ref"),
-        F.max(F.when(F.col("pop") == 1, F.col("t"))).alias("t_cur"),
-    )
-    p = c.where(F.col("pop") == 0).select("cell", F.col("n").alias("n_ref"))
-    q = c.where(F.col("pop") == 1).select("cell", F.col("n").alias("n_cur"))
-    m = (
-        spine.join(p, "cell", "left")
-        .join(q, "cell", "left")
-        .crossJoin(F.broadcast(t_scalar))
-        .select(
-            "cell",
-            F.coalesce("n_ref", F.lit(0)).cast("bigint").alias("n_ref"),
-            F.coalesce("n_cur", F.lit(0)).cast("bigint").alias("n_cur"),
-            "t_ref",
-            "t_cur",
-        )
-    )
-    kq = m.select(
+    kq = _psi_cell_counts(spark, model, ed).select(
         "cell",
         "n_ref",
         "n_cur",

@@ -31,8 +31,10 @@ SINK_ROOT = "/root/repo/.tmp/sinks"
 
 
 def _sink(name: str, sf_dir: str) -> str:
-    tag = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(SINK_ROOT, tag, name)
+    """The sink dir ``name`` of one dataset: <SINK_ROOT>/<tag>/<name>.
+    SINK_ROOT is looked up at call time, so redirecting it moves every
+    sink."""
+    return os.path.join(SINK_ROOT, sf_dir.strip("/").replace("/", "_"), name)
 
 
 @register(
@@ -164,8 +166,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
 
     from pyspark.sql import functions as F
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join("/root/repo/.tmp/sinks", tag, "documents_dpo")
+    path = _sink("documents_dpo", sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars", "lang")
     d.write.mode("overwrite").partitionBy("lang").parquet(path)
     update = d.where(F.col("lang") == "en").withColumn(
@@ -460,8 +461,7 @@ def sink_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/.tmp/sinks/{tag}/mor_orders"
+    root = _sink("mor_orders", sf_dir)
     base_path, dv_path = os.path.join(root, "base"), os.path.join(root, "deletes")
     o = load(spark, sf_dir, "orders")
     # base write: the immutable data files
@@ -542,8 +542,7 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/.tmp/sinks/{tag}/snap_orders"
+    root = _sink("snap_orders", sf_dir)
     o = load(spark, sf_dir, "orders")
     v2 = o.withColumn(
         "o_totalprice",
@@ -691,8 +690,7 @@ def source_text_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     forbids installs — CSV/JSON/ORC/parquet/text is the available
     matrix.)
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"/root/repo/.tmp/sinks/{tag}/documents_lines"
+    path = _sink("documents_lines", sf_dir)
     d = load(spark, sf_dir, "documents")
     lines = d.select(
         F.concat_ws("|", F.col("doc_id"), F.col("lang"), F.col("n_chars")).alias("value")
@@ -741,8 +739,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML feeds parallelizes like any file source; schema is supplied
     (no inference pass).
     """
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"/root/repo/.tmp/sinks/{tag}/supplier_xml"
+    path = _sink("supplier_xml", sf_dir)
     s = load(spark, sf_dir, "supplier")
     (
         s.write.mode("overwrite")
@@ -1141,8 +1138,7 @@ def sink_snapshot_expire_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/.tmp/sinks/{tag}/snap_expire_orders"
+    root = _sink("snap_expire_orders", sf_dir)
     shutil.rmtree(root, ignore_errors=True)  # idempotent re-run
     o = load(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
     v2 = o.where(F.col("o_orderpriority") != "5-LOW")

@@ -1,10 +1,21 @@
 """Structured Streaming surface over the events table.
 
-Each declared query actually runs a streaming pipeline — readStream
-from the parquet source, trigger(availableNow), in-memory sink — and
-returns the materialized result. The DuckDB oracle is the equivalent
-*batch* query, i.e. every entry is a stream-vs-batch equivalence
-check (the strongest determinism oracle streaming admits).
+Each declared query actually runs a streaming pipeline and returns the
+materialized result. The DuckDB oracle is the equivalent *batch*
+query, i.e. every entry is a stream-vs-batch equivalence check (the
+strongest determinism oracle streaming admits).
+
+Every pipeline is built from the same four steps:
+
+- stage: ``_read_stream`` streams the events file as it is;
+  ``_replay`` writes any frame as N key-ranged parquet files and
+  streams them back one file per micro-batch, in part order;
+- stream: the query's own operators over that source;
+- run: ``_run_stream`` runs the writer with trigger(availableNow) to
+  completion under a checkpoint it owns and removes
+  (``_run_to_memory`` is its memory-sink form);
+- fold: ``_versioned_fold`` merges each micro-batch's partial
+  aggregate into a versioned state table ``state_v{i}``.
 
 Scale notes: these pipelines run unchanged against a real unbounded
 source (kafka/files): watermarks bound state, window aggregations
@@ -17,29 +28,32 @@ from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.operators.sources_io import _sink
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.session import scoped_conf
-from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load, normalize_event_ts, table_path
 
-# Checkpoints are one-shot per run (uuid-fresh or explicitly wiped
-# before reuse — nothing is resumed across bench/oracle invocations),
-# so their only role is the micro-batch commit protocol. Put them on
-# tmpfs when available: a one-micro-batch profile of the tumbling
-# window at sf0.1 showed 904 ms addBatch vs ~160 ms of pure
-# walCommit/commitOffsets/latestOffset file I/O on /root (r14, guide
-# §1) — the commit tax is the only part a path change can remove. A
-# real deployment pins this to durable storage; this knob is the
-# LOCAL-run equivalent of putting the state/commit log on fast disks.
+# Root of the micro-batch staging dirs (see _stage_dir).
+_STAGE_ROOT = "/root/repo/.tmp"
+
+# A checkpoint lives only as long as the run that made it: _checkpoint
+# removes it when the run ends, also when the query raised, so only a
+# killed process leaves one behind. Its one role is the micro-batch
+# commit protocol, so it goes on tmpfs when available: a
+# one-micro-batch profile of the tumbling window at sf0.1 showed 904 ms
+# addBatch vs ~160 ms of pure walCommit/commitOffsets/latestOffset file
+# I/O on /root (r14, guide §1). A real deployment pins this to durable
+# storage.
 _CHECKPOINT_ROOT = (
     "/dev/shm/spark_graft_checkpoints"
     if os.path.isdir("/dev/shm")
-    else "/root/repo/.tmp/checkpoints"
+    else os.path.join(_STAGE_ROOT, "checkpoints")
 )
 
 # Streaming state stores are per-shuffle-partition: every micro-batch
@@ -55,13 +69,15 @@ _STATE_SHUFFLE = {"spark.sql.shuffle.partitions": "4"}
 _SCHEMA_CACHE: dict[str, object] = {}
 
 
+def _stage_dir(sf_dir: str, name: str) -> str:
+    """The staging dir ``name`` of one dataset: <_STAGE_ROOT>/<name>/<tag>."""
+    return os.path.join(_STAGE_ROOT, name, sf_dir.strip("/").replace("/", "_"))
+
+
 def _stream_dir(sf_dir: str) -> str:
     """The file-stream source requires a *directory*; expose the single
-    events.parquet through a symlinked dir under the repo's .tmp."""
-    import os
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = f"/root/repo/.tmp/stream_src/{tag}"
+    events.parquet through a symlinked dir under the staging root."""
+    d = _stage_dir(sf_dir, "stream_src")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "events.parquet")
     # absolute target: a RELATIVE sf_dir would otherwise produce a
@@ -102,27 +118,97 @@ def _read_stream(
     return normalize_event_ts(stream)
 
 
-def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Execute with trigger(availableNow) into a memory sink; block
-    until all available data is processed; return the result table."""
-    import shutil
+def _replay(
+    spark: SparkSession,
+    df: DataFrame,
+    n_batches: int,
+    key: str,
+    stage: str,
+    sort: tuple[str, ...] = (),
+) -> DataFrame:
+    """Stage ``df`` as ``n_batches`` ``key``-ranged parquet files under
+    ``stage`` (rows ordered by ``sort`` within each file) and stream
+    them back one file per micro-batch, lowest key range first.
 
+    The write is distributed: repartitionByRange gives one contiguous
+    key range per output partition (part-00000 = lowest range), so
+    every row moves executor-side; the driver only pins the file mtimes
+    to part order, because the file source takes micro-batches in
+    mtime order. The stream reads with ``df``'s own schema, so no job
+    re-infers it from the files. On a deployment the bus delivers
+    arrival order; this is the finite replay of it."""
+    ranged = df.repartitionByRange(n_batches, key)
+    if sort:
+        ranged = ranged.sortWithinPartitions(*sort)
+    ranged.write.mode("overwrite").parquet(stage)
+    parts = sorted(
+        f for f in os.listdir(stage) if f.startswith("part-") and f.endswith(".parquet")
+    )
+    now = os.stat(os.path.join(stage, parts[0])).st_mtime if parts else 0
+    for i, fname in enumerate(parts):
+        os.utime(os.path.join(stage, fname), (now + 10 * i, now + 10 * i))
+    return (
+        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+    )
+
+
+@contextlib.contextmanager
+def _checkpoint():
+    """A fresh checkpoint dir under _CHECKPOINT_ROOT (looked up at call
+    time), removed on exit — also when the query raised."""
+    ck = os.path.join(_CHECKPOINT_ROOT, uuid.uuid4().hex)
+    try:
+        yield ck
+    finally:
+        shutil.rmtree(ck, ignore_errors=True)
+
+
+def _run_stream(writer, checkpoint: str | None = None) -> None:
+    """Run ``writer`` (a DataStreamWriter) with trigger(availableNow)
+    to completion under the clamped state shuffle width. Without
+    ``checkpoint`` the run gets a fresh one that is removed when it
+    ends; a caller that restarts against the same checkpoint passes its
+    own and owns its removal."""
+    with contextlib.ExitStack() as stack:
+        ck = checkpoint or stack.enter_context(_checkpoint())
+        stack.enter_context(scoped_conf(writer._spark, _STATE_SHUFFLE))
+        q = writer.option("checkpointLocation", ck).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()  # a no-op once terminated; never leave it writing to ck
+
+
+def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Run into a memory sink; return the result table."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ck = f"{_CHECKPOINT_ROOT}/{name}"
-    with scoped_conf(stream_df.sparkSession, _STATE_SHUFFLE):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # one-shot run is complete; the memory table no longer needs the
-    # checkpoint — drop it so tmpfs does not accumulate per-run dirs
-    shutil.rmtree(ck, ignore_errors=True)
+    _run_stream(stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode))
     return stream_df.sparkSession.table(name)
+
+
+def _versioned_fold(
+    stream: DataFrame, state_root: str, partial, keys: list[str]
+) -> DataFrame:
+    """Fold ``stream`` into a VERSIONED state table, one version per
+    micro-batch: state_v{i} = state_v{i-1} ∪ partial(batch), summed per
+    value column by ``keys`` — the snapshot-commit discipline, so a
+    retried batch rewrites its own version instead of double-counting.
+    Returns the last committed version."""
+    shutil.rmtree(state_root, ignore_errors=True)
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        part = partial(batch)
+        prev = os.path.join(state_root, f"state_v{batch_id - 1}")
+        if os.path.isdir(prev):
+            merged = batch.sparkSession.read.parquet(prev).unionByName(part)
+            part = merged.groupBy(*keys).agg(
+                *(F.sum(c).alias(c) for c in merged.columns if c not in keys)
+            )
+        part.write.mode("overwrite").parquet(os.path.join(state_root, f"state_v{batch_id}"))
+
+    _run_stream(stream.writeStream.foreachBatch(fold))
+    last = max(int(d.split("_v")[1]) for d in os.listdir(state_root) if d.startswith("state_v"))
+    return stream.sparkSession.read.parquet(os.path.join(state_root, f"state_v{last}"))
 
 
 @register(
@@ -390,10 +476,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by batch id (the idempotent exactly-once pattern — a retry
     overwrites its own batch directory); the query re-reads the sink
     and aggregates, checked against batch SQL."""
-    import shutil
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    out_dir = f"/root/repo/.tmp/sinks/{tag}/foreachbatch_events"
+    out_dir = _sink("foreachbatch_events", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -402,15 +485,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     s = _read_stream(spark, sf_dir).where(F.col("value") > 100)
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            s.select("event_id", "event_type", "value")
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", f"{_CHECKPOINT_ROOT}/fb_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(s.select("event_id", "event_type", "value").writeStream.foreachBatch(write_batch))
     back = spark.read.parquet(f"{out_dir}/batch=*")
     return (
         back.groupBy("event_type")
@@ -530,14 +605,11 @@ def _staged_outer_src(sf_dir: str) -> str:
     real deployment the bus's ongoing traffic plays this role —
     sentinels make the finite replay faithful to it.
     """
-    import os
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = f"/root/repo/.tmp/stream_src_outer/{tag}"
+    d = _stage_dir(sf_dir, "stream_src_outer")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "events_0.parquet")
     if not os.path.exists(link):
@@ -747,37 +819,20 @@ def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     the source of truth for readers.
     """
     import glob
-    import os
-    import shutil
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = f"/root/repo/.tmp/sinks/{tag}/stream_events_sink"
-    ck = f"{_CHECKPOINT_ROOT}/file_sink_{tag}"
+    out = _sink("stream_events_sink", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
 
-    def _run_once():
-        s = _read_stream(spark, sf_dir).where(
-            F.col("event_type").isin("click", "view")
-        )
-        with scoped_conf(spark, _STATE_SHUFFLE):
-            q = (
-                s.select("event_id", "event_type", "value")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    def _n_files():
+    def _run_once(ck: str) -> int:
+        s = _read_stream(spark, sf_dir).where(F.col("event_type").isin("click", "view"))
+        sel = s.select("event_id", "event_type", "value")
+        _run_stream(sel.writeStream.format("parquet").option("path", out), ck)
         return len(glob.glob(os.path.join(out, "*.parquet")))
 
-    _run_once()
-    before = _n_files()
-    _run_once()  # identical restart: the committed batch must replay as no-op
-    added = _n_files() - before
+    with _checkpoint() as ck:
+        before = _run_once(ck)
+        # identical restart: the committed batch must replay as no-op
+        added = _run_once(ck) - before
     back = spark.read.parquet(out)
     return (
         back.groupBy("event_type")
@@ -863,21 +918,15 @@ def stream_incremental_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream is a bus; availableNow over staged files is the same code
     path run as a backfill.
     """
-    import os
-    import shutil
-
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from spark_rapids_ml_spark.operators.dedup import band_projection
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/.tmp/stream_dedup/{tag}"
+    root = _stage_dir(sf_dir, "stream_dedup")
     shutil.rmtree(root, ignore_errors=True)
     src_dir, idx_dir, out_dir = (
         os.path.join(root, d) for d in ("src", "index", "verdicts")
     )
-    os.makedirs(src_dir)
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.where(F.col("doc_id") % DEDUP_STREAM_MOD != 0)
@@ -892,33 +941,12 @@ def stream_incremental_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(idx_dir)
     )
 
-    # stage the incoming docs as doc_id-ordered range files, written
-    # DISTRIBUTED: repartitionByRange gives one contiguous doc_id range
-    # per output partition (part-00000 = lowest range, ascending), so
-    # every row moves executor-side through a range shuffle — the
-    # driver only adjusts file mtimes to pin micro-batch order (harness
-    # scaffolding for the finite replay; on a deployment the bus
-    # delivers arrival order). Replay order must be ranged-ascending:
-    # the index-vs-window split assumes "earlier batch" implies
-    # "smaller doc_id", matching the oracle's arrival order.
-    (
-        incoming.repartitionByRange(DEDUP_STREAM_BATCHES, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    parts = sorted(
-        f
-        for f in os.listdir(src_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    now = os.stat(os.path.join(src_dir, parts[0])).st_mtime if parts else 0
-    for k, fname in enumerate(parts):
-        p = os.path.join(src_dir, fname)
-        os.utime(p, (now + 10 * k, now + 10 * k))
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    # replay the incoming docs as doc_id-ordered range files. Replay
+    # order must be ranged-ascending: the index-vs-window split assumes
+    # "earlier batch" implies "smaller doc_id", matching the oracle's
+    # arrival order.
+    stream = _replay(
+        spark, incoming, DEDUP_STREAM_BATCHES, "doc_id", src_dir, sort=("doc_id",)
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -954,22 +982,7 @@ def stream_incremental_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(idx_dir)
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option(
-                "checkpointLocation",
-                f"{_CHECKPOINT_ROOT}/incdedup_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(stream.writeStream.foreachBatch(process))
 
     return (
         spark.read.parquet(out_dir)
@@ -1073,16 +1086,18 @@ def stream_python_datasource_reader(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum("score").cast("bigint").alias("score_sum"),
     )
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    with scoped_conf(spark, _STATE_SHUFFLE):
+    with _checkpoint() as ck, scoped_conf(spark, _STATE_SHUFFLE):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
-            .option("checkpointLocation", f"{_CHECKPOINT_ROOT}/{name}")
+            .option("checkpointLocation", ck)
             .start()
         )
-        q.processAllAvailable()  # drain every offset chunk, then stop
-        q.stop()
+        try:
+            q.processAllAvailable()  # drain every offset chunk, then stop
+        finally:
+            q.stop()
         q.awaitTermination()
     return spark.table(name).orderBy("bucket")
 
@@ -1266,12 +1281,7 @@ def stream_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFra
     driver — the same publish shape as the built-in file sink's
     manifest, expressed through the Python API.
     """
-    import os
-    import shutil
-    import uuid
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"/root/repo/.tmp/sinks/{tag}/events_jsonl_stream_pyds"
+    path = _sink("events_jsonl_stream_pyds", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     spark.dataSource.register(_make_jsonl_stream_sink_datasource())
@@ -1279,18 +1289,7 @@ def stream_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFra
     sel = s.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.col("value").cast("double").alias("value")
     )
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            sel.writeStream.format("jsonl_stream_sink")
-            .option("path", path)
-            .option(
-                "checkpointLocation",
-                f"{_CHECKPOINT_ROOT}/{uuid.uuid4().hex}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(sel.writeStream.format("jsonl_stream_sink").option("path", path))
     back = spark.read.schema("event_id BIGINT, user_id BIGINT, value DOUBLE").json(
         os.path.join(path, "batch-*.json")
     )
@@ -1363,17 +1362,6 @@ def stream_cdf_apply_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     The apply loop is the exactly-once idempotent pattern: replaying
     a batch rewrites the same version dir to the same bytes.
     """
-    import os
-    import shutil
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from spark_rapids_ml_spark.operators.sources_io import (
         CDF_DELETE_MOD,
         CDF_INSERT_MOD,
@@ -1381,8 +1369,7 @@ def stream_cdf_apply_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         CDF_UPDATE_MOD,
     )
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/root/repo/.tmp/stream_cdc/{tag}"
+    root = _stage_dir(sf_dir, "stream_cdc")
     shutil.rmtree(root, ignore_errors=True)
     feed_dir = os.path.join(root, "feed")
 
@@ -1439,28 +1426,8 @@ def stream_cdf_apply_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("update_postimage").alias("change_type"),
     )
     feed = ins.unionAll(dele).unionAll(pre).unionAll(post)
-    (
-        feed.repartitionByRange(CDC_APPLY_BATCHES, "k")
-        .sortWithinPartitions("k", "change_type")
-        .write.mode("overwrite")
-        .parquet(feed_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(feed_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    now = os.stat(os.path.join(feed_dir, parts[0])).st_mtime if parts else 0
-    for i, fname in enumerate(parts):
-        p = os.path.join(feed_dir, fname)
-        os.utime(p, (now + 10 * i, now + 10 * i))
-
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("prio", StringType()),
-            StructField("price", DoubleType()),
-            StructField("change_type", StringType()),
-        ]
+    stream = _replay(
+        spark, feed, CDC_APPLY_BATCHES, "k", feed_dir, sort=("k", "change_type")
     )
     latest = {"dir": os.path.join(root, "replica_v0"), "version": 0}
 
@@ -1480,22 +1447,7 @@ def stream_cdf_apply_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_state.write.mode("overwrite").parquet(nxt)
         latest["dir"], latest["version"] = nxt, latest["version"] + 1
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option(
-                "checkpointLocation",
-                f"{_CHECKPOINT_ROOT}/cdcapply_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_stream(stream.writeStream.foreachBatch(apply_batch))
 
     final = spark.read.parquet(latest["dir"])
     return (
@@ -1644,56 +1596,16 @@ def stream_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer sums commute) — batch-boundary invariance is pinned by
     the replay test.
     """
-    import os
-    import shutil
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = f"/root/repo/.tmp/stream_src_hh/{tag}"
-    state_root = f"/root/repo/.tmp/sinks/{tag}/hh_state"
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(state_root, ignore_errors=True)
-
-    # distributed ranged staging: no driver materialization
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    ev.repartitionByRange(HH_STAGE_FILES, "event_id").write.mode("overwrite").parquet(
-        stage
+    stream = _replay(
+        spark, ev, HH_STAGE_FILES, "event_id", _stage_dir(sf_dir, "stream_src_hh")
     )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    final = _versioned_fold(
+        stream,
+        _sink("hh_state", sf_dir),
+        lambda b: b.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events")),
+        ["user_id"],
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-        prev_dir = os.path.join(state_root, f"state_v{batch_id - 1}")
-        if os.path.isdir(prev_dir):
-            prev = batch_df.sparkSession.read.parquet(prev_dir)
-            part = (
-                prev.unionByName(part)
-                .groupBy("user_id")
-                .agg(F.sum("n_events").alias("n_events"))
-            )
-        part.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"state_v{batch_id}")
-        )
-
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{_CHECKPOINT_ROOT}/hh_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    versions = sorted(
-        int(d.split("_v")[1]) for d in os.listdir(state_root) if d.startswith("state_v")
-    )
-    final = spark.read.parquet(os.path.join(state_root, f"state_v{versions[-1]}"))
     return (
         final.select("user_id", F.col("n_events").cast("bigint").alias("n_events"))
         .orderBy(F.col("n_events").desc(), "user_id")
@@ -1804,70 +1716,26 @@ def stream_incremental_covariance(spark: SparkSession, sf_dir: str) -> DataFrame
     ROUND(6) + the −0.0 normalization absorb float64 reassociation
     exactly as in the batch covariance oracle pair.
     """
-    import os
-    import shutil
-
     import numpy as np
 
     from spark_rapids_ml_spark.ml.pca import _partials, _unpack_moments
     from spark_rapids_ml_spark.ml_queries import _cov_df
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = f"/root/repo/.tmp/stream_src_cov/{tag}"
-    state_root = f"/root/repo/.tmp/sinks/{tag}/cov_state"
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(state_root, ignore_errors=True)
-
-    e = load(spark, sf_dir, "embeddings")
-    e.select("vec_id", "embedding").repartitionByRange(
-        COVSTREAM_FILES, "vec_id"
-    ).write.mode("overwrite").parquet(stage)
-
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    stream = _replay(
+        spark, e, COVSTREAM_FILES, "vec_id", _stage_dir(sf_dir, "stream_src_cov")
     )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = (
-            _partials(batch_df, "embedding")
+    def partial(batch: DataFrame) -> DataFrame:
+        return (
+            _partials(batch, "embedding")
             .select(F.posexplode("packed").alias("idx", "val"))
             .groupBy("idx")
             .agg(F.sum("val").alias("val"))
         )
-        prev_dir = os.path.join(state_root, f"state_v{batch_id - 1}")
-        if os.path.isdir(prev_dir):
-            prev = batch_df.sparkSession.read.parquet(prev_dir)
-            part = (
-                prev.unionByName(part)
-                .groupBy("idx")
-                .agg(F.sum("val").alias("val"))
-            )
-        part.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"state_v{batch_id}")
-        )
 
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option(
-                "checkpointLocation", f"{_CHECKPOINT_ROOT}/cov_{uuid.uuid4().hex[:8]}"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    versions = sorted(
-        int(p.split("_v")[1])
-        for p in os.listdir(state_root)
-        if p.startswith("state_v")
-    )
-    rows = spark.read.parquet(
-        os.path.join(state_root, f"state_v{versions[-1]}")
-    ).collect()  # bounded: d^2 + d + 1 statistic cells, corpus-independent
+    state = _versioned_fold(stream, _sink("cov_state", sf_dir), partial, ["idx"])
+    rows = state.collect()  # bounded: d^2 + d + 1 statistic cells, corpus-independent
     flat = np.zeros(len(rows))
     for r in rows:
         flat[r["idx"]] = r["val"]
@@ -1934,69 +1802,20 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift the hash (same contract the 1-vs-N replay tests pin for the
     EWMA and top-k monitors).
     """
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = f"/root/repo/.tmp/stream_src_cusum/{tag}"
-    state_root = f"/root/repo/.tmp/sinks/{tag}/cusum_state"
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(state_root, ignore_errors=True)
-
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
-    ev.repartitionByRange(CUSUMSTREAM_FILES, "event_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
-
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = _replay(
+        spark, ev, CUSUMSTREAM_FILES, "event_id", _stage_dir(sf_dir, "stream_src_cusum")
     )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy(
-            "event_type", F.date_trunc("day", "ts").alias("d")
-        ).agg(
-            F.sum(F.col("value").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents")
-        )
-        prev_dir = os.path.join(state_root, f"state_v{batch_id - 1}")
-        if os.path.isdir(prev_dir):
-            prev = batch_df.sparkSession.read.parquet(prev_dir)
-            part = (
-                prev.unionByName(part)
-                .groupBy("event_type", "d")
-                .agg(F.sum("cents").cast("bigint").alias("cents"))
-            )
-        part.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"state_v{batch_id}")
-        )
-
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option(
-                "checkpointLocation",
-                f"{_CHECKPOINT_ROOT}/cusum_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    versions = sorted(
-        int(p.split("_v")[1])
-        for p in os.listdir(state_root)
-        if p.startswith("state_v")
+    daily = _versioned_fold(  # bounded: series x calendar-days rows
+        stream,
+        _sink("cusum_state", sf_dir),
+        lambda b: b.groupBy("event_type", F.date_trunc("day", "ts").alias("d")).agg(
+            F.sum(F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents")
+        ),
+        ["event_type", "d"],
     )
-    daily = spark.read.parquet(
-        os.path.join(state_root, f"state_v{versions[-1]}")
-    )  # bounded: series x calendar-days rows, stream-volume-independent
     tot = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_days"), F.sum("cents").cast("bigint").alias("total")
     )
@@ -2039,39 +1858,21 @@ IVFSTREAM_ANCHOR_DEN = 4  # bootstrap slice: first 1/4 of ids (floor K_CELLS)
 
 
 def _stream_build_cell_index(spark: SparkSession, df, model, stage: str,
-                             index_dir: str, ck: str) -> None:
+                             index_dir: str) -> None:
     """The streaming ANN ingest core, shared by stream_ivf_index_ingest
     and the drift-retrain lifecycle: replay ``df`` (vec_id, emb) as
     IVFSTREAM_FILES ranged micro-batches; cell-assign each batch by the
     BROADCAST centroids (stateless pandas-UDF map — no state store);
     land in the cell-PARTITIONED parquet ``index_dir`` via the native
     streaming file sink, whose _spark_metadata transaction log makes
-    ingest EXACTLY-ONCE under retry. The per-invocation checkpoint and
-    stage dirs are removed afterwards; the index dir remains (probes
-    and the plan/semantics tests read it)."""
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
+    ingest EXACTLY-ONCE under retry. The stage dir is removed
+    afterwards; the index dir remains (probes and the plan/semantics
+    tests read it)."""
     shutil.rmtree(index_dir, ignore_errors=True)
-    df.repartitionByRange(IVFSTREAM_FILES, "vec_id").write.mode("overwrite").parquet(
-        stage
+    assigned = model.transform(_replay(spark, df, IVFSTREAM_FILES, "vec_id", stage), "cell")
+    _run_stream(
+        assigned.writeStream.format("parquet").option("path", index_dir).partitionBy("cell")
     )
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    )
-    assigned = model.transform(stream, "cell")
-    with scoped_conf(spark, _STATE_SHUFFLE):
-        q = (
-            assigned.writeStream.format("parquet")
-            .option("path", index_dir)
-            .option("checkpointLocation", ck)
-            .partitionBy("cell")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ck, ignore_errors=True)
     shutil.rmtree(stage, ignore_errors=True)
 
 
@@ -2217,11 +2018,7 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_nprobe,
     )
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = f"/root/repo/.tmp/stream_src_ivf/{tag}"
-    index_dir = f"/root/repo/.tmp/sinks/{tag}/ivf_ingest_index"
-    ck = f"{_CHECKPOINT_ROOT}/ivf_ingest_{uuid.uuid4().hex[:8]}"
-
+    index_dir = _sink("ivf_ingest_index", sf_dir)
     e = load(spark, sf_dir, "embeddings")
     ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     n = ed.count()
@@ -2232,7 +2029,9 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then probe the finished index (partition-pruned scan, the
     # sim_ivf_persisted_probe access path; shared centroid/probe
     # helpers keep the rank-and-tiebreak identical across tiers)
-    _stream_build_cell_index(spark, ed, model, stage, index_dir, ck)
+    _stream_build_cell_index(
+        spark, ed, model, _stage_dir(sf_dir, "stream_src_ivf"), index_dir
+    )
     qv = ed.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
@@ -2445,12 +2244,11 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     no-drift twin the below-threshold pytest pins). Returns the probe
     DataFrame; the chosen serving model is exposed on the function
     attribute ``last_serving_model`` for the byte-stability test."""
-    import shutil
-
     from spark_rapids_ml_spark.operators.similarity import (
         N_QUERIES,
         PSI_RETRAIN_MICRO,
         _ivf_fit,
+        _psi_cell_counts,
         ivf_nprobe,
         psi_micro_sql,
     )
@@ -2469,39 +2267,16 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     # new data arrives, which is what makes an append meaningful)
     m1 = _ivf_fit(ref, ref.count())
     k1 = len(m1.centroids)
-    tag = sf_dir.strip("/").replace("/", "_")
     variant = "drift" if shift else "nodrift"
-    stage = f"/root/repo/.tmp/stream_src_ivf/{tag}_lifecycle_{variant}"
-    index_root = f"/root/repo/.tmp/sinks/{tag}/ann_lifecycle_{variant}"
+    stage = f"{_stage_dir(sf_dir, 'stream_src_ivf')}_lifecycle_{variant}"
+    index_root = _sink(f"ann_lifecycle_{variant}", sf_dir)
     shutil.rmtree(index_root, ignore_errors=True)  # deterministic per run
     base_dir = f"{index_root}/data_base"
-    ck = f"{_CHECKPOINT_ROOT}/ann_lifecycle_{uuid.uuid4().hex[:8]}"
-    _stream_build_cell_index(spark, ref, m1, stage, base_dir, ck)
+    _stream_build_cell_index(spark, ref, m1, stage, base_dir)
     _ann_index_commit(index_root, 1, ["data_base"], retrained=0)
 
     # 2. drift gate: PSI over the v1 cell histogram (dq discipline)
-    w = m1.transform(ref.unionByName(cur), "cell").select(
-        "cell", (F.col("vec_id") % 2).alias("pop")
-    )
-    c = w.groupBy("pop", "cell").agg(F.count(F.lit(1)).alias("n"))
-    spine = local_df(spark, [(i,) for i in range(k1)], "cell bigint")
-    t_scalar = c.groupBy("pop").agg(F.sum("n").alias("t")).agg(
-        F.max(F.when(F.col("pop") == 0, F.col("t"))).alias("t_ref"),
-        F.max(F.when(F.col("pop") == 1, F.col("t"))).alias("t_cur"),
-    )
-    p = c.where(F.col("pop") == 0).select("cell", F.col("n").alias("n_ref"))
-    q2 = c.where(F.col("pop") == 1).select("cell", F.col("n").alias("n_cur"))
-    m = (
-        spine.join(p, "cell", "left")
-        .join(q2, "cell", "left")
-        .crossJoin(F.broadcast(t_scalar))
-        .select(
-            F.coalesce("n_ref", F.lit(0)).cast("bigint").alias("n_ref"),
-            F.coalesce("n_cur", F.lit(0)).cast("bigint").alias("n_cur"),
-            "t_ref",
-            "t_cur",
-        )
-    )
+    m = _psi_cell_counts(spark, m1, ref.unionByName(cur))
     # bounded driver state: the gate is ONE bigint (sum of k1 per-cell
     # micro terms), cross-engine deterministic by the dq discipline
     psi_total = int(
@@ -2518,18 +2293,17 @@ def _ann_lifecycle(spark: SparkSession, sf_dir: str, shift: float):
     #    are never rewritten (delta-only writes pinned in tests).
     # Either way version 2 commits via the atomic manifest/pointer
     # swap; the v1 manifest stays on disk for rollback.
-    ck2 = f"{_CHECKPOINT_ROOT}/ann_lifecycle_{uuid.uuid4().hex[:8]}"
     if retrained:
         serve_model = _ivf_fit(cur, cur.count())
         rebuild_dir = f"{index_root}/data_rebuild_v2"
         _stream_build_cell_index(
-            spark, ref.unionByName(cur), serve_model, stage, rebuild_dir, ck2
+            spark, ref.unionByName(cur), serve_model, stage, rebuild_dir
         )
         _ann_index_commit(index_root, 2, ["data_rebuild_v2"], retrained=1)
     else:
         serve_model = m1
         delta_dir = f"{index_root}/data_delta_v2"
-        _stream_build_cell_index(spark, cur, serve_model, stage, delta_dir, ck2)
+        _stream_build_cell_index(spark, cur, serve_model, stage, delta_dir)
         _ann_index_commit(
             index_root, 2, ["data_base", "data_delta_v2"], retrained=0
         )
@@ -2668,8 +2442,6 @@ def stream_ann_compaction_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     RapidsRowMatrix.scala:177-199's batched scan discipline, extended
     with the FAISS remove_ids/merge workflow the ingest docstring
     cites."""
-    import shutil
-
     from spark_rapids_ml_spark.operators.similarity import (
         N_QUERIES,
         _ivf_fit,
@@ -2684,21 +2456,18 @@ def stream_ann_compaction_tick(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ref = ref.count()
     m1 = _ivf_fit(ref, n_ref)
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = f"/root/repo/.tmp/stream_src_ivf/{tag}_compaction"
-    index_root = f"/root/repo/.tmp/sinks/{tag}/ann_compaction"
+    stage = f"{_stage_dir(sf_dir, 'stream_src_ivf')}_compaction"
+    index_root = _sink("ann_compaction", sf_dir)
     shutil.rmtree(index_root, ignore_errors=True)  # deterministic per run
     base_dir = f"{index_root}/data_base"
     delta_dir = f"{index_root}/data_delta_v2"
 
     # v1: the base index the corpus already has
-    ck = f"{_CHECKPOINT_ROOT}/ann_compact_{uuid.uuid4().hex[:8]}"
-    _stream_build_cell_index(spark, ref, m1, stage, base_dir, ck)
+    _stream_build_cell_index(spark, ref, m1, stage, base_dir)
     _ann_index_commit(index_root, 1, ["data_base"], retrained=0)
 
     # v2: the append tick (no retrain — the add-forever half)
-    ck2 = f"{_CHECKPOINT_ROOT}/ann_compact_{uuid.uuid4().hex[:8]}"
-    _stream_build_cell_index(spark, cur, m1, stage, delta_dir, ck2)
+    _stream_build_cell_index(spark, cur, m1, stage, delta_dir)
     _ann_index_commit(index_root, 2, ["data_base", "data_delta_v2"], retrained=0)
 
     # v3: deletes arrive — an O(deletes) tombstone commit, zero data
@@ -2858,8 +2627,6 @@ def stream_ann_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest dir; the probe is the standard partition-pruned cell
     scan + exact re-rank. Bounded driver state: the probed-cell id
     set (the sim_ivf_persisted_probe contract)."""
-    import shutil
-
     from spark_rapids_ml_spark.operators.similarity import (
         N_QUERIES,
         _ivf_fit,
@@ -2874,17 +2641,14 @@ def stream_ann_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ref = ref.count()
     m1 = _ivf_fit(ref, n_ref)
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = f"/root/repo/.tmp/stream_src_ivf/{tag}_rollback"
-    index_root = f"/root/repo/.tmp/sinks/{tag}/ann_rollback"
+    stage = f"{_stage_dir(sf_dir, 'stream_src_ivf')}_rollback"
+    index_root = _sink("ann_rollback", sf_dir)
     shutil.rmtree(index_root, ignore_errors=True)  # deterministic per run
 
     # v1 base, v2 append — the history the incident interrupts
-    ck = f"{_CHECKPOINT_ROOT}/ann_rollback_{uuid.uuid4().hex[:8]}"
-    _stream_build_cell_index(spark, ref, m1, stage, f"{index_root}/data_base", ck)
+    _stream_build_cell_index(spark, ref, m1, stage, f"{index_root}/data_base")
     _ann_index_commit(index_root, 1, ["data_base"], retrained=0)
-    ck2 = f"{_CHECKPOINT_ROOT}/ann_rollback_{uuid.uuid4().hex[:8]}"
-    _stream_build_cell_index(spark, cur, m1, stage, f"{index_root}/data_delta_v2", ck2)
+    _stream_build_cell_index(spark, cur, m1, stage, f"{index_root}/data_delta_v2")
     _ann_index_commit(index_root, 2, ["data_base", "data_delta_v2"], retrained=0)
 
     # the incident: serving rolls back to v1 — pointer-only, atomic

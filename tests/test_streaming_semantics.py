@@ -482,7 +482,6 @@ def test_ann_incremental_append_writes_only_delta(spark):
     from spark_rapids_ml_spark.operators.similarity import ivf_nprobe
     from spark_rapids_ml_spark.sources.catalog import load
     from spark_rapids_ml_spark.streaming.stream_queries import (
-        _CHECKPOINT_ROOT,
         _ann_index_current,
         _ann_lifecycle,
         _probe_cell_index,
@@ -522,8 +521,6 @@ def test_ann_incremental_append_writes_only_delta(spark):
 
     # 3. rebuild equivalence: from-scratch index of the grown corpus
     # under the SAME quantizer serves the identical probe result
-    import uuid as _uuid
-
     import pyspark.sql.functions as F
 
     ed = load(spark, sf, "embeddings").select(
@@ -531,8 +528,7 @@ def test_ann_incremental_append_writes_only_delta(spark):
     )
     rebuild_dir = f"{root}/data_rebuild_check"
     stage = f"/root/repo/.tmp/stream_src_ivf/append_equiv_check"
-    ck = f"{_CHECKPOINT_ROOT}/append_equiv_{_uuid.uuid4().hex[:8]}"
-    _stream_build_cell_index(spark, ed, model, stage, rebuild_dir, ck)
+    _stream_build_cell_index(spark, ed, model, stage, rebuild_dir)
     qv = ed.where(F.col("vec_id") % 2 == 1).where(F.col("vec_id") < 40).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )

@@ -3,9 +3,11 @@ watch item 2): `.tmp` had grown to 5.8 GB and kept growing across
 rounds/sfs because per-invocation artifacts outlive their runs.
 
 What goes (all regenerated on demand by the queries that need them):
-  - .tmp/checkpoints/*   — per-invocation streaming checkpoints; only
-    a LIVE stream needs its checkpoint, and every query creates a
-    fresh uuid-suffixed one. (548 leaked dirs, 1.6 GB, observed r13.)
+  - stream_queries._CHECKPOINT_ROOT (tmpfs when /dev/shm exists,
+    else .tmp/checkpoints) — streaming checkpoints. Every run removes
+    its own when it ends, also when the query raised, so only a killed
+    process leaves one behind. (548 leaked dirs, 1.6 GB, observed r13,
+    before runs removed their own.)
   - .tmp/stream_src*, .tmp/stream_cdc, .tmp/stream_dedup — micro-
     batch staging dirs, rewritten at the start of each run.
   - .tmp/sinks/* — streaming/lakehouse sink outputs incl. the ANN
@@ -35,14 +37,20 @@ import shutil
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TMP = os.path.join(ROOT, ".tmp")
+sys.path.insert(0, ROOT)
+
+from spark_rapids_ml_spark.operators.sources_io import SINK_ROOT  # noqa: E402
+from spark_rapids_ml_spark.streaming.stream_queries import (  # noqa: E402
+    _CHECKPOINT_ROOT,
+    _STAGE_ROOT as TMP,
+)
 
 VICTIM_GLOBS = [
-    "checkpoints",
-    "stream_src*",
-    "stream_cdc",
-    "stream_dedup",
-    "sinks",
+    _CHECKPOINT_ROOT,
+    os.path.join(TMP, "stream_src*"),
+    os.path.join(TMP, "stream_cdc"),
+    os.path.join(TMP, "stream_dedup"),
+    SINK_ROOT,
 ]
 
 
@@ -61,7 +69,7 @@ def main() -> None:
     dry = "--dry" in sys.argv
     freed = 0
     for pat in VICTIM_GLOBS:
-        for path in sorted(glob.glob(os.path.join(TMP, pat))):
+        for path in sorted(glob.glob(pat)):
             sz = du(path)
             freed += sz
             print(f"{'would remove' if dry else 'removing'} {path} "
