@@ -39,8 +39,8 @@ from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.sources.catalog import load, normalize_event_ts, table_path
 
-# Root of the micro-batch staging dirs (see _stage_dir).
-_STAGE_ROOT = "/root/repo/.tmp"
+# Root of the micro-batch staging dirs (see _stage_dir): the repo-local .tmp.
+_STAGE_ROOT = os.path.abspath(os.path.join(__file__, "../../../.tmp"))
 
 # A checkpoint lives only as long as the run that made it: _checkpoint
 # removes it when the run ends, also when the query raised, so only a
@@ -48,7 +48,7 @@ _STAGE_ROOT = "/root/repo/.tmp"
 # commit protocol, so it goes on tmpfs when available: a
 # one-micro-batch profile of the tumbling window at sf0.1 showed 904 ms
 # addBatch vs ~160 ms of pure walCommit/commitOffsets/latestOffset file
-# I/O on /root (r14, guide §1). A real deployment pins this to durable
+# I/O on the local disk. A real deployment pins this to durable
 # storage.
 _CHECKPOINT_ROOT = (
     "/dev/shm/spark_graft_checkpoints"

@@ -6,8 +6,8 @@ What goes (all regenerated on demand by the queries that need them):
   - stream_queries._CHECKPOINT_ROOT (tmpfs when /dev/shm exists,
     else .tmp/checkpoints) — streaming checkpoints. Every run removes
     its own when it ends, also when the query raised, so only a killed
-    process leaves one behind. (548 leaked dirs, 1.6 GB, observed r13,
-    before runs removed their own.)
+    process leaves one behind. (548 leaked dirs, 1.6 GB were
+    observed before runs removed their own.)
   - .tmp/stream_src*, .tmp/stream_cdc, .tmp/stream_dedup — micro-
     batch staging dirs, rewritten at the start of each run.
   - .tmp/sinks/* — streaming/lakehouse sink outputs incl. the ANN
