@@ -11,15 +11,16 @@ module re-expresses that contract Spark-first:
 |------------------------------------------------|------|
 | RDD[Vector] + per-partition densify + JNI GEMM (RapidsRowMatrix.scala:177-199) | mapInArrow: Arrow batch → ``schema.decode`` (flat values + reshape) → numpy ``X.T @ X`` partial Gram |
 | dense or sparse Vector input, identical results (RapidsRowMatrix.scala:186, PCASuite.scala:155-190) | ``schema.vector_column``: a VectorUDT column becomes ``array<double>`` via ``vector_to_array`` before the Arrow stage; ``array<numeric>`` is read as is |
-| Statistics.colStats mean + broadcast (RapidsRowMatrix.scala:152-166) | spr backend's first pass: partial (n, colsum) → driver mean, captured in closure |
+| Statistics.colStats mean + broadcast (RapidsRowMatrix.scala:152-166) | spr backend's first round: every task folds the (n, colsum) partials into the same mean, inside the one job |
 | reduce(_+_) of n×n partials (RapidsRowMatrix.scala:201) | ``schema.reduce_partials``: one packed partial per partition, collected in ONE job and summed on the driver in partition order; the vector width is read off the partial's length (no probe job) |
 | RAFT eigDC + reverse + sqrt + signFlip (rapidsml_jni.cu:302-356) | numpy.linalg.eigh + [::-1] + max-|x|-positive sign flip |
 | scala UDF pcᵀ·v per row (RapidsPCA.scala:187-189) | scalar Arrow UDF: batched ``X @ pc``, encoded straight to an Arrow list column — the fast path the reference left commented out (RapidsPCA.scala:172-185) |
 | params metadata JSON + 1-row parquet (RapidsPCA.scala:218-254) | save(): metadata.json + data/ parquet, symmetric load() |
 
-Scale notes (100 TB): both passes are single linear scans with no
-shuffle; the driver receives O(n_cols²) per partition (the Gram
-partial), independent of row count. At thousands of partitions that
+Scale notes (100 TB): each backend is one job with no shuffle (the spr
+backend's two rounds run over the partition each task decoded once);
+the driver receives O(n_cols²) per partition (the Gram partial),
+independent of row count. At thousands of partitions that
 partial set is what a treeReduce (RapidsRowMatrix.scala:201) would
 bound. Driver-side memory is one n×n matrix, guarded by the
 reference's documented n_cols ≤ 65535 bound (RapidsRowMatrix.scala:
@@ -37,6 +38,7 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from spark_rapids_ml_spark.ml.schema import (
     ParamsPersistence,
+    collective,
     fold,
     load_model,
     partials,
@@ -108,29 +110,16 @@ def triu_to_full(n: int, packed: np.ndarray) -> np.ndarray:
     return full
 
 
-def compute_covariance_spr(df: DataFrame, input_col: str, mean_centering: bool = True):
-    """A9: the reference's alternate covariance backend — packed
-    upper-triangular centered Gram via treeAggregate
-    (RapidsRowMatrix.scala:202-252: per-row BLAS.spr into a
-    d(d+1)/2 packed buffer, combOp +=, triuToFull unpack, /(n-1)).
-
-    Spark-first re-expression: pass 1 is the colsum mean
-    (broadcast into the kernel closure, the meanBC of :206); pass 2
-    packs the per-batch centered GEMM ``Xcᵀ·Xc`` into column-major
-    upper-triangular order and sums the per-partition partials on the
-    driver (the treeAggregate). Numerics differ from the moments path
-    exactly as in the reference: centered Gram here vs raw-moment
-    identity there.
-
-    Scale: each partition's partial is d(d+1)/2 doubles — HALF the full
-    Gram — which is why the reference ships this backend for high d;
-    the cost is a second linear scan for the mean.
-
-    Returns (cov: d×d ndarray, mean: d ndarray, n_rows: int).
-    """
-    mean, n_rows = compute_column_means(df, input_col)
+def _spr_task(xs: list[np.ndarray], comm, mean_centering: bool) -> np.ndarray | None:
+    """One task of the spr backend: the colsum round (the mean), then
+    the packed centered Gram round; returns [n, mean(d), packed]."""
+    flat = comm.allreduce(_colsum_kernel(iter(xs)))
+    if flat is None:
+        return None
+    n_rows = int(round(flat[0]))
     if n_rows < 2:
         raise ValueError("need at least 2 rows")
+    mean = flat[1:] / n_rows
     d = len(mean)
     if d > MAX_COLS:  # the n <= 65535 packed-length guard (:204-205)
         raise ValueError(f"n_cols {d} exceeds bound {MAX_COLS}")
@@ -141,9 +130,36 @@ def compute_covariance_spr(df: DataFrame, input_col: str, mean_centering: bool =
         xc = x - center
         return (xc.T @ xc)[lj, li]  # pack upper triangle, spr order
 
-    packed = reduce_partials(
-        df, input_col, lambda xs: fold(np.add, map(centered_gram, xs)), width=d
-    )
+    packed = comm.allreduce(fold(np.add, map(centered_gram, xs)))
+    return np.concatenate(([n_rows], mean, packed))[None, :]
+
+
+def compute_covariance_spr(df: DataFrame, input_col: str, mean_centering: bool = True):
+    """A9: the reference's alternate covariance backend — packed
+    upper-triangular centered Gram via treeAggregate
+    (RapidsRowMatrix.scala:202-252: per-row BLAS.spr into a
+    d(d+1)/2 packed buffer, combOp +=, triuToFull unpack, /(n-1)).
+
+    Spark-first re-expression, in ONE job (``schema.collective``):
+    round 1 is the colsum mean (every task folds the same partials, so
+    each holds the meanBC of :206); round 2 packs the per-batch
+    centered GEMM ``Xcᵀ·Xc`` into column-major upper-triangular order
+    and folds the per-partition partials in partition order (the
+    treeAggregate). Numerics differ from the moments path exactly as
+    in the reference: centered Gram here vs raw-moment identity there.
+
+    Scale: each partition's partial is d(d+1)/2 doubles — HALF the full
+    Gram — which is why the reference ships this backend for high d;
+    the cost is a second pass over the partition each task holds.
+
+    Returns (cov: d×d ndarray, mean: d ndarray, n_rows: int).
+    """
+    flat = collective(
+        df, input_col, lambda xs, _keys, comm: _spr_task(xs, comm, mean_centering)
+    )[0]
+    n_rows = int(round(flat[0]))
+    d = (isqrt(8 * (len(flat) - 1) + 9) - 3) // 2  # len = 1 + d + d(d+1)/2
+    mean, packed = flat[1 : 1 + d], flat[1 + d :]
     cov = triu_to_full(d, packed) / (n_rows - 1)
     if not mean_centering:
         mean = np.zeros(d)

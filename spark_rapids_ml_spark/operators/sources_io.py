@@ -27,7 +27,8 @@ from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load
 
-SINK_ROOT = "/root/repo/.tmp/sinks"
+# <repo>/.tmp/sinks, beside the staging root of streaming/stream_queries.py
+SINK_ROOT = os.path.abspath(os.path.join(__file__, "../../../.tmp/sinks"))
 
 
 def _sink(name: str, sf_dir: str) -> str:

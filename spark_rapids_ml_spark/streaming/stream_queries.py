@@ -74,12 +74,11 @@ def _stage_dir(sf_dir: str, name: str) -> str:
     return os.path.join(_STAGE_ROOT, name, sf_dir.strip("/").replace("/", "_"))
 
 
-def _stream_dir(sf_dir: str) -> str:
-    """The file-stream source requires a *directory*; expose the single
-    events.parquet through a symlinked dir under the staging root."""
-    d = _stage_dir(sf_dir, "stream_src")
+def _link_events(d: str, name: str, sf_dir: str) -> str:
+    """Make ``d/name`` a symlink to ``sf_dir``'s events file; returns
+    the link."""
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
+    link = os.path.join(d, name)
     # absolute target: a RELATIVE sf_dir would otherwise produce a
     # symlink resolved against the link's own directory — broken, and
     # the file source silently reads zero rows
@@ -88,6 +87,14 @@ def _stream_dir(sf_dir: str) -> str:
         os.remove(link)  # stale/broken link from a differently-spelled sf_dir
     if not os.path.exists(link):
         os.symlink(target, link)
+    return link
+
+
+def _stream_dir(sf_dir: str) -> str:
+    """The file-stream source requires a *directory*; expose the single
+    events.parquet through a symlinked dir under the staging root."""
+    d = _stage_dir(sf_dir, "stream_src")
+    _link_events(d, "events.parquet", sf_dir)
     return d
 
 
@@ -610,10 +617,7 @@ def _staged_outer_src(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     d = _stage_dir(sf_dir, "stream_src_outer")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events_0.parquet")
-    if not os.path.exists(link):
-        os.symlink(table_path(sf_dir, "events"), link)
+    link = _link_events(d, "events_0.parquet", sf_dir)
     # The sentinels MUST carry the same physical ts encoding as the
     # source file: the stream reads with the batch-inferred schema, so
     # an int64 sentinel against a timestamp[us] source (or vice versa)

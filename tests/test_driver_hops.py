@@ -66,11 +66,12 @@ ALLOWED = {
         ".orderBy(\"pos\")",  # quantizer stats: d=64 rows
         '.select("pcell").distinct().collect()',  # probed cells <= nprobe
     },
-    "ml/kmeans.py": {
-        ".limit(self.k).collect()",  # k init rows
-    },
     "ml/schema.py": {
-        "partials(df, input_col, kernel, width).toArrow()",  # one packed partial per partition: O(d^2) (PCA), k*(d+1) (KMeans), row-count independent
+        # _to_arrow, the ML fits' one hop: reduce_partials' packed partial per
+        # partition (O(d^2) PCA, O(d) scalers) or a collective's one result
+        # from partition 0 (k*d KMeans centroids, 1 + d + d(d+1)/2 spr
+        # moments); row-count independent
+        "return df.toArrow()  # bounded",
     },
     "streaming/stream_queries.py": {
         "bounded: d^2 + d + 1 statistic cells",  # incremental-covariance final state: one flat moments vector

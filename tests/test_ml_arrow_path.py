@@ -2,8 +2,9 @@
 reduction.
 
 - Each fit pass is ONE Spark job (a ``mapInArrow`` kernel emitting one
-  packed partial per partition, collected and summed on the driver).
-  The counts are pinned in a query scope (``run.job_ids``).
+  packed partial per partition, collected and summed on the driver),
+  and each iterative fit (KMeans, PCA ``spr``) is one ``collective``
+  job. The counts are pinned in a query scope (``run.job_ids``).
 - The driver sums the partials in partition order, so a fit's result is
   bit-equal to a numpy fold of the per-partition partials — it cannot
   depend on which shuffle block arrives first.
@@ -52,14 +53,15 @@ def reg_parquet(spark, tmp_path_factory):
 # covariance pass).
 JOB_COUNTS = {
     "pca-moments": (lambda df: PCA(k=2).fit(df), 1),  # was: 3
-    "pca-spr": (lambda df: PCA(k=2, backend="spr").fit(df), 2),  # was: 5
+    # both spr rounds (colsum mean, packed centered Gram) in one collective job
+    "pca-spr": (lambda df: PCA(k=2, backend="spr").fit(df), 1),  # was: 5, then 2
     "compute_covariance": (lambda df: compute_covariance(df, "features"), 1),  # was: 3
     "compute_column_means": (lambda df: compute_column_means(df, "features"), 1),  # was: 3
     "LinearRegression": (lambda df: LinearRegression().fit(df), 1),  # was: 3
     "StandardScaler": (lambda df: StandardScaler().fit(df), 1),  # was: 1
     "MinMaxScaler": (lambda df: MinMaxScaler().fit(df), 1),  # was: 1
-    # seed rows + one job per Lloyd iteration (tol=0 runs all 3)
-    "KMeans": (lambda df: KMeans(k=3, max_iter=3, tol=0.0).fit(df), 1 + 3),  # was: 1 + 3
+    # seed rows and every Lloyd iteration (tol=0 runs all 3) in one collective job
+    "KMeans": (lambda df: KMeans(k=3, max_iter=3, tol=0.0).fit(df), 1),  # was: 1 + 3
 }
 
 

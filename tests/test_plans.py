@@ -12,6 +12,7 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
+from spark_rapids_ml_spark.operators import sources_io  # noqa: E402
 from spark_rapids_ml_spark.plans.explain import formatted, plan_of  # noqa: E402
 
 
@@ -479,9 +480,8 @@ def test_compaction_reduces_files(spark):
 
     res = layout_compaction_rewrite(spark, SF)
     res.collect()
-    tag = SF.strip("/").replace("/", "_")
-    frag = spark.read.parquet(f"/root/repo/.tmp/sinks/{tag}/orders_fragmented")
-    comp = spark.read.parquet(f"/root/repo/.tmp/sinks/{tag}/orders_compacted")
+    frag = spark.read.parquet(sources_io._sink("orders_fragmented", SF))
+    comp = spark.read.parquet(sources_io._sink("orders_compacted", SF))
     n_frag, n_comp = len(frag.inputFiles()), len(comp.inputFiles())
     assert n_frag == 64, n_frag
     assert n_comp <= 4, n_comp
@@ -898,9 +898,7 @@ def test_ivf_ingest_index_partition_pruning(spark):
 
     from spark_rapids_ml_spark.streaming import stream_queries as sq
 
-    index_dir = (
-        f"/root/repo/.tmp/sinks/{SF.strip('/').replace('/', '_')}/ivf_ingest_index"
-    )
+    index_dir = sources_io._sink("ivf_ingest_index", SF)
     # hermeticity: always rebuild through the declared query so the
     # plan assertion exercises the CURRENT ingest code, not an index
     # left on disk by an older run or by the batch-boundary test's

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from spark_rapids_ml_spark.operators import sources_io
 from spark_rapids_ml_spark.operators.timeseries import (
     events_sequence_pattern_match,
     join_asof_nearest_tolerance,
@@ -88,8 +89,7 @@ def test_manifest_pruning_skips_files(spark):
     )
 
     scale_manifest_file_pruning(spark, SF).collect()  # writes + reads
-    tag = SF.strip("/").replace("/", "_")
-    path = f"/root/repo/.tmp/sinks/{tag}/orders_ranged"
+    path = sources_io._sink("orders_ranged", SF)
     files = (
         spark.read.parquet(path)
         .groupBy(F.input_file_name().alias("f"))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from spark_rapids_ml_spark import ml_queries as mlq
 from spark_rapids_ml_spark.operators import dedup as dd
 from spark_rapids_ml_spark.operators import graph as g
+from spark_rapids_ml_spark.operators import sources_io
 from spark_rapids_ml_spark.operators import similarity as sim
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -487,8 +488,7 @@ def test_stream_heavy_hitters_multibatch_and_batch_parity(spark):
 
     got = [(r.user_id, r.n_events) for r in sq.stream_topk_heavy_hitters(spark, SF).collect()]
     # the staged source really replayed as HH_STAGE_FILES micro-batches
-    tag = SF.strip("/").replace("/", "_")
-    state_root = f"/root/repo/.tmp/sinks/{tag}/hh_state"
+    state_root = sources_io._sink("hh_state", SF)
     versions = sorted(d for d in os.listdir(state_root) if d.startswith("state_v"))
     assert len(versions) == sq.HH_STAGE_FILES
     # stream answer == batch answer (counts are exactly mergeable)

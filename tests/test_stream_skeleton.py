@@ -24,6 +24,7 @@ import pytest
 
 from spark_rapids_ml_spark.query_run import query_run
 from spark_rapids_ml_spark.registry import all_queries
+from spark_rapids_ml_spark.sources.catalog import table_path
 from spark_rapids_ml_spark.streaming import stream_queries as sq
 from tests.conftest import SF_SMALL as SF
 
@@ -43,13 +44,14 @@ PARENT_JOBS = {
     "stream_ivf_index_ingest": 27,
 }
 
-# no schema-inference job on the staged files any more
+# no schema-inference job on the staged files any more; the IVF ingest's
+# KMeans fit is one job (was: a seed collect plus one job per iteration)
 MAX_JOBS = dict(
     PARENT_JOBS,
     stream_topk_heavy_hitters=6,
     stream_incremental_covariance=6,
     stream_cusum_monitor=11,
-    stream_ivf_index_ingest=26,
+    stream_ivf_index_ingest=23,
 )
 
 _RUNS: dict[str, tuple[int, list[list[str]]]] = {}
@@ -143,3 +145,21 @@ def test_one_copy_of_each_stream_step():
         "streaming/stream_queries.py: _STAGE_ROOT",
     ], roots
     assert sorted(tags) == ["operators/sources_io.py", "streaming/stream_queries.py"], tags
+
+
+def test_outer_join_staging_from_relative_sf_dir(monkeypatch, tmp_path):
+    """Spark-free: the outer-join staging from a relative ``sf_dir``
+    links the events file by its absolute path, and replaces the
+    dangling relative link an earlier staging step left there."""
+    monkeypatch.setattr(sq, "_STAGE_ROOT", str(tmp_path))
+    monkeypatch.chdir(os.path.dirname(SF))
+    rel = os.path.basename(SF)
+    d = sq._stage_dir(rel, "stream_src_outer")
+    link = os.path.join(d, "events_0.parquet")
+    os.makedirs(d)
+    os.symlink(table_path(rel, "events"), link)  # relative: resolves against d
+    assert not os.path.exists(link)
+    assert sq._staged_outer_src(rel) == d
+    assert os.readlink(link) == os.path.abspath(table_path(rel, "events"))
+    assert os.path.samefile(link, table_path(SF, "events"))
+    assert sorted(os.listdir(d)) == ["events_0.parquet", "sentinel_1.parquet", "sentinel_2.parquet"]

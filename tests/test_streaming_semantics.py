@@ -16,6 +16,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from spark_rapids_ml_spark.operators import sources_io
+
 TMP = "/root/repo/.tmp/stream_sem"
 
 
@@ -383,7 +385,7 @@ def test_ivf_ingest_batch_boundary_invariance(spark, monkeypatch):
     from spark_rapids_ml_spark.streaming import stream_queries as sq
 
     sf = "/root/testdata/sf0.001"
-    index_dir = f"/root/repo/.tmp/sinks/{sf.strip('/').replace('/', '_')}/ivf_ingest_index"
+    index_dir = sources_io._sink("ivf_ingest_index", sf)
     results, contents, n_files = {}, {}, {}
     for n_batches in (1, 4):
         monkeypatch.setattr(sq, "IVFSTREAM_FILES", n_batches)
