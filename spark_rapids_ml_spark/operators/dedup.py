@@ -1797,24 +1797,22 @@ _SQL_PLANTED_KEYED = f"""
 def planted_corpus_keyed(e: DataFrame) -> DataFrame:
     """Real embeddings ∪ planted near-duplicates under collision-free
     keys (orig*2 / SEM_TWIN_BASE + orig*2 + 1) — same perturbation
-    rule as planted_corpus. Output: vec_id, embedding (array<double>)."""
-    base = e.select(
+    rule as planted_corpus. Output: vec_id, embedding (array<double>).
+
+    One scan: each row explodes into itself and, when planted, its
+    twin, so the frame keeps the scan's partitions (a union of two
+    scans has as many as both, which a barrier stage cannot run as is)."""
+    delta = ((F.col("vec_id") * F.lit(2654435761)) % F.lit(241)) / F.lit(1000.0) - F.lit(0.12)
+    base = F.struct(
         (F.col("vec_id") * 2).alias("vec_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-    delta = ((F.col("vec_id") * F.lit(2654435761)) % F.lit(241)) / F.lit(1000.0) - F.lit(0.12)
-    planted = (
-        e.where(F.col("vec_id") % PLANT_MOD == 0)
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double") + delta).alias("embedding"),
-        )
-        .select(
-            (F.lit(SEM_TWIN_BASE) + F.col("vec_id") * 2 + 1).alias("vec_id"),
-            "embedding",
-        )
+    twin = F.struct(
+        (F.lit(SEM_TWIN_BASE) + F.col("vec_id") * 2 + 1).alias("vec_id"),
+        F.transform("embedding", lambda x: x.cast("double") + delta).alias("embedding"),
     )
-    return base.unionAll(planted)
+    rows = F.when(F.col("vec_id") % PLANT_MOD == 0, F.array(base, twin)).otherwise(F.array(base))
+    return e.select(F.explode(rows).alias("r")).select("r.vec_id", "r.embedding")
 
 
 def _semdedup_oracle() -> str:
@@ -1903,7 +1901,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where 32-way tiny-batch dispatch costs more than it buys; on at
     # sf1+, where the single-row-group source pins every cached fit /
     # assignment / GEMM pass to one core — sf1 8-vs-32-core ratio 1.00,
-    # i.e. serial). ONE exchange after the union, paid once at cache
+    # i.e. serial). ONE exchange after the planted scan, paid once at cache
     # materialization.
     from spark_rapids_ml_spark.sources.catalog import table_path, widen_frame
 

@@ -353,10 +353,8 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical to the literal query (same broadcast join), so
     there is nothing runtime to pay.
     """
-    from spark_rapids_ml_spark.sources.catalog import table_path
-
-    spark.read.parquet(table_path(sf_dir, "region")).createOrReplaceTempView("v_region")
-    spark.read.parquet(table_path(sf_dir, "nation")).createOrReplaceTempView("v_nation")
+    load(spark, sf_dir, "region").createOrReplaceTempView("v_region")
+    load(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
     return spark.sql(
         """
         SELECT r_name, CAST(COUNT(*) AS BIGINT) AS n_nations

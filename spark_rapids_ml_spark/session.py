@@ -98,6 +98,11 @@ def get_spark(
         # events.parquet uses timestamp[ns]; Spark reads it as raw nanos
         # (bigint) and sources.catalog converts to timestamp[us]
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # generated-code cache (static: read once, at the JVM's first
+        # codegen). A warm headline pass needs about 310 whole-stage
+        # classes; Spark's default of 100 evicted all of them, so every
+        # pass recompiled them. 1000 holds the set (measured).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local-mode hygiene
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

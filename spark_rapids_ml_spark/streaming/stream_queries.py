@@ -37,7 +37,12 @@ from pyspark.sql import functions as F
 from spark_rapids_ml_spark.operators.sources_io import _sink
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.session import scoped_conf
-from spark_rapids_ml_spark.sources.catalog import load, normalize_event_ts, table_path
+from spark_rapids_ml_spark.sources.catalog import (
+    load,
+    normalize_event_ts,
+    table_path,
+    table_schema,
+)
 
 # Root of the micro-batch staging dirs (see _stage_dir): the repo-local .tmp.
 _STAGE_ROOT = os.path.abspath(os.path.join(__file__, "../../../.tmp"))
@@ -63,10 +68,6 @@ _CHECKPOINT_ROOT = (
 # knob: a real 100 TB backfill sizes it to keys/executors, not to the
 # session default) and restore the session conf afterwards.
 _STATE_SHUFFLE = {"spark.sql.shuffle.partitions": "4"}
-
-# batch-inferred schema per sf_dir (saves a file-listing + footer job
-# on every streaming query)
-_SCHEMA_CACHE: dict[str, object] = {}
 
 
 def _stage_dir(sf_dir: str, name: str) -> str:
@@ -104,7 +105,7 @@ def _read_stream(
     src_dir: str | None = None,
     one_file_per_trigger: bool = False,
 ) -> DataFrame:
-    """Stream the events parquet with the batch-inferred schema; ts
+    """Stream the events parquet with the catalog's memoized schema; ts
     normalized to TIMESTAMP whatever the writer used (see
     sources.catalog.normalize_event_ts).
     ``src_dir`` overrides the default single-file staging dir;
@@ -114,9 +115,7 @@ def _read_stream(
     batches, e.g. outer-join null emission)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if sf_dir not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[sf_dir] = spark.read.parquet(table_path(sf_dir, "events")).schema
-    reader = spark.readStream.schema(_SCHEMA_CACHE[sf_dir])
+    reader = spark.readStream.schema(table_schema(spark, table_path(sf_dir, "events")))
     if one_file_per_trigger:
         reader = reader.option("maxFilesPerTrigger", 1)
     stream = reader.parquet(src_dir or _stream_dir(sf_dir))
@@ -780,10 +779,7 @@ def stream_rocksdb_state_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carry the watermark/window semantics, the exact distinct keeps
     # the oracle deterministic (approx_count_distinct is not
     # cross-engine stable)
-    ev = normalize_event_ts(
-        spark.read.parquet(table_path(sf_dir, "events"))
-    )
-    users = ev.groupBy(
+    users = load(spark, sf_dir, "events").groupBy(
         "event_type", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
     ).agg(F.countDistinct("user_id").alias("n_users"))
     return (
@@ -1485,7 +1481,7 @@ def _ewma_stateful_of(src: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
-        ArrayType,
+        BinaryType,
         DoubleType,
         LongType,
         StructField,
@@ -1499,13 +1495,19 @@ def _ewma_stateful_of(src: DataFrame) -> DataFrame:
             StructField("ewma", DoubleType()),
         ]
     )
-    state_schema = StructType([StructField("hist", ArrayType(LongType()))])
+    # the trailing values packed as int64 bytes, not array<bigint>: the
+    # state serializer of an array is a MapObjects loop whose lambda
+    # variable takes a fresh id at every planning, so each run compiled
+    # one new class that the codegen cache could never hit
+    state_schema = StructType([StructField("hist", BinaryType())])
     frame = EWMA_STATE_FRAME
 
     def update(key, pdfs, state: GroupState):
         import math
 
-        hist = list(state.get[0]) if state.exists else []
+        import numpy as np
+
+        hist = np.frombuffer(state.get[0], np.int64).tolist() if state.exists else []
         rows = pd.concat(list(pdfs), ignore_index=True)
         rows = rows.sort_values(["ts", "event_id"], ignore_index=True)
         out_ids, out_ewma = [], []
@@ -1523,7 +1525,7 @@ def _ewma_stateful_of(src: DataFrame) -> DataFrame:
             den = (1 << frame) - (1 << (frame - L))
             out_ids.append(int(r["event_id"]))
             out_ewma.append(float(num) / float(den) / 1_000_000.0)
-        state.update((hist[-(frame - 1) :],))
+        state.update((np.asarray(hist[-(frame - 1) :], np.int64).tobytes(),))
         yield pd.DataFrame(
             {"user_id": [key[0]] * len(out_ids), "event_id": out_ids, "ewma": out_ewma}
         )

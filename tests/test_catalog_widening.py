@@ -43,6 +43,24 @@ def test_source_bytes_sums_directory_files(spark, tmp_path):
     assert _source_bytes(table) > os.path.getsize(table)
 
 
+def test_source_bytes_walks_partition_directories(tmp_path):
+    # Spark-free: a key=value layout two levels deep, beside the names
+    # Spark's file index skips (markers, checksums, a _temporary dir)
+    table = tmp_path / "events.parquet"
+    files = {
+        "k=1/part-0.parquet": 100,
+        "k=2/part-0.parquet": 250,
+        "k=2/d=x/part-1.parquet": 7,
+        "_SUCCESS": 0,
+        "k=1/.part-0.parquet.crc": 12,
+        "_temporary/0/part-9.parquet": 999,
+    }
+    for rel, size in files.items():
+        os.makedirs(os.path.dirname(table / rel), exist_ok=True)
+        (table / rel).write_bytes(b"\0" * size)
+    assert _source_bytes(str(table)) == 357
+
+
 def test_load_wide_fires_on_underparallelized_directory(spark, tmp_path):
     root = str(tmp_path / "sfdir_big")
     table = os.path.join(root, "documents.parquet")

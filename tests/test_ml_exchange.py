@@ -4,7 +4,8 @@ a relay the driver hosts.
 
 - KMeans (seeds + every Lloyd round) and PCA ``backend="spr"`` (mean,
   then the packed centered Gram) each run one job, and give the bits a
-  numpy replay of the partition-order fold gives.
+  numpy replay of the partition-order fold gives. The KMeans fit of the
+  declared query ``dedup_semantic_clusters`` runs one job too.
 - An input wider than the session's task slots is repartitioned on the
   id and gives the same bits on every fit, whatever its layout.
 - Degenerate input keeps the codec's errors; a failing task leaves no
@@ -29,6 +30,8 @@ from spark_rapids_ml_spark.ml import schema
 from spark_rapids_ml_spark.ml.kmeans import KMeans
 from spark_rapids_ml_spark.ml.pca import compute_covariance_spr
 from spark_rapids_ml_spark.query_run import query_run
+from spark_rapids_ml_spark.registry import all_queries
+from tests.conftest import SF_SMALL as SF
 
 
 def _relay_threads() -> list[threading.Thread]:
@@ -88,6 +91,25 @@ def test_kmeans_fit_is_one_job(spark, four_partitions, max_iter):
     with query_run(spark, f"kmeans-{max_iter}") as run:
         KMeans(k=3, max_iter=max_iter, tol=0.0).fit(df)
     assert len(run.job_ids) == 1  # was: 1 + max_iter
+
+
+def test_semantic_dedup_fit_keeps_its_layout(spark, monkeypatch):
+    # dedup_semantic_clusters' planted corpus is one scan, so the
+    # barrier stage runs the cached frame as is (was: a union of two
+    # scans, hash-repartitioned first, 3 jobs)
+    jobs, fit = [], KMeans.fit
+
+    def counted(self, df):
+        with query_run(spark, "semdedup-fit") as run:
+            model = fit(self, df)
+        jobs.append(len(run.job_ids))
+        return model
+
+    monkeypatch.setattr(KMeans, "fit", counted)
+    spec = all_queries()["dedup_semantic_clusters"]
+    with query_run(spark, spec.name):
+        assert spec.fn(spark, SF).count() == 4
+    assert jobs == [1]
 
 
 @pytest.mark.parametrize("max_iter,tol", [(2, 0.0), (10, 0.0), (50, 1e-6)])
