@@ -30,13 +30,10 @@ from spark_rapids_ml_spark.functions.portable import hash60, sql_hash60
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.functions.text import shingles, sql_shingle_rows
 
-# the cache registry is query_run's; _cache, register_checkpoint and
-# release_caches stay importable here because the benchmark's tracer
-# wraps dedup.release_caches by name
 from spark_rapids_ml_spark.query_run import (
-    _checkpoint_rdd,
     cache as _cache,
-    checkpoint as register_checkpoint,
+    checkpoint,
+    release,
     release_caches,
 )
 from spark_rapids_ml_spark.registry import register
@@ -314,10 +311,10 @@ def _lsh_pairs_of(docs: DataFrame) -> DataFrame:
     return lsh_candidate_pairs(bands)
 
 
-def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lsh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen: the shingle+16-minhash projection is the expensive map
     # side and the single-row-group scan pins it to one core (§2.5)
-    return _lsh_pairs_of(load_wide(spark, sf_dir, "documents", min_bytes=1 << 18))
+    return load_wide(spark, sf_dir, "documents", min_bytes=1 << 18)
 
 
 @register(
@@ -341,7 +338,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets so cost tracks actual collisions; the n^2 space is never
     materialized. Threshold ≈ (1/b)^(1/r) ≈ 0.71 Jaccard.
     """
-    return _lsh_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+    return _lsh_pairs_of(_lsh_docs(spark, sf_dir)).orderBy("doc_a", "doc_b")
 
 
 SKEW_MOD = 7  # degenerate corpus: text of doc (doc_id % SKEW_MOD)
@@ -398,11 +395,6 @@ def dedup_lsh_skew_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------- simhash
-
-def _simhash_bit_sql(bit: int) -> str:
-    h = sql_hash60("token", 7)
-    return f"CASE WHEN ((h >> {bit}) & 1) = 1 THEN cnt ELSE -cnt END"
-
 
 def _sql_simhash_cte() -> str:
     """CTE chain tok→th→bits→sig: (doc_id, simhash) for every doc."""
@@ -616,7 +608,7 @@ def _sql_lsh_edges() -> str:
     """CTE bodies producing the symmetric LSH candidate edge list.
 
     Goes THROUGH the shared oversize-bucket star guard
-    (_sql_bucket_guard_cte), exactly like the impl's _lsh_pairs: a
+    (_sql_bucket_guard_cte), exactly like the impl's _lsh_pairs_of: a
     star around a bucket's min doc connects the same component the
     all-pairs clique would, so connected components are IDENTICAL —
     but per-bucket oracle work drops from O(cnt²) to O(cnt) above the
@@ -739,7 +731,6 @@ def _components_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
         "label", F.col("doc_id")
     )
-    prev_rdd = None
     converged = False
     # the pair graph is orders of magnitude smaller than the corpus;
     # iterate its joins at a narrow shuffle width — the width is a
@@ -773,17 +764,13 @@ def _components_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
                 )
                 .select("doc_id", F.col("new_label").alias("label"))
             )
-            checkpointed = new_labels.localCheckpoint(eager=True)  # cut lineage
-            ck_rdd = _checkpoint_rdd(checkpointed)
-            if prev_rdd is not None:
-                # free the superseded iteration's blocks FOR REAL —
-                # Dataset.unpersist would be a no-op on a checkpoint
-                prev_rdd.unpersist(False)
-            prev_rdd = ck_rdd
-            labels = checkpointed
+            prev = labels
+            labels = checkpoint(new_labels.localCheckpoint(eager=True))  # cut lineage
+            release(prev)
             if not obs.get.get("changed"):
                 converged = True
                 break
+    release(edges)
     if not converged:
         # a graph with diameter > the pass bound would return silently
         # wrong labels (and diverge from the driver union-find path);
@@ -824,7 +811,8 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.types import LongType, StructField, StructType
 
-    pairs = _cache(_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"))
+    bands = _cache(band_projection(_lsh_docs(spark, sf_dir)))
+    pairs = _cache(lsh_candidate_pairs(bands).select("doc_a", "doc_b"))
     # ONE materialization decides the path AND (when small) delivers
     # the edges: CollectLimit ships at most cap+1 rows to the driver,
     # so the probe never risks collecting an unbounded pair set
@@ -838,16 +826,12 @@ def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [StructField("doc_id", LongType()), StructField("label", LongType())]
             ),
         )
-        release_caches()  # labels are driver-materialized; drop the scope's caches
     else:
+        # the final labels' checkpoint stays registered: the scope frees
+        # it after the caller materializes the result
         labels = _components_distributed(spark, pairs)
-        # free this scope's intermediate caches (pairs/bands/edges)
-        # FIRST, then register the final checkpoint so the scope's exit
-        # (or the caller's next release_caches()) frees its blocks after
-        # the result is materialized. One-shot: a released checkpoint
-        # cannot recompute (lineage is cut).
-        release_caches()
-        register_checkpoint(labels)
+    release(pairs)
+    release(bands)
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_rep"),

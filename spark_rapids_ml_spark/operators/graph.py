@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_rapids_ml_spark.query_run import _checkpoint_rdd, cache, checkpoint
+from spark_rapids_ml_spark.query_run import cache, checkpoint, release
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
@@ -293,36 +293,29 @@ def graph_bfs_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cf. dedup.py's label propagation for the run-to-convergence
     variant).
 
-    Lineage discipline (round 11, the HITS plan-growth lesson applied
-    per the round-10 verdict's iterative-operator sweep): each level's
-    visited set is LINEAGE-CUT with an eager localCheckpoint and the
-    NEXT frontier is re-derived from the checkpointed frame
-    (dist == d), so every superstep analyzes a CONSTANT-size plan —
-    a LogicalRDD ∪ one join — instead of a plan that embeds all prior
-    levels (measured 13.7 s build / 0.27 s exec at sf0.01 before the
-    cut, 6.5 s after, hash-identical). The previous level's blocks are
-    freed as soon as the next checkpoint materializes, bounding live
-    storage to ONE level (the round-10 advice on the HITS/k-core
-    convention); like every localCheckpoint, the cut trades fault
-    tolerance for plan bound — executor loss mid-query fails the job
-    rather than recomputing, the documented convention trade-off.
+    Lineage: each level's visited set is cut with an eager
+    localCheckpoint and the NEXT frontier is re-derived from the
+    checkpointed frame (dist == d), so every superstep analyzes a
+    constant-size plan — a LogicalRDD ∪ one join — instead of one that
+    embeds all prior levels (measured 13.7 s build / 0.27 s exec at
+    sf0.01 before the cut, 6.5 s after, hash-identical). Live storage
+    is one level: the README's loop rule (Query scope).
     """
     li = load(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
     sp = li.select(
         (F.lit(_SUPPLIER_BASE) + F.col("l_suppkey")).alias("src"),
         F.col("l_partkey").alias("dst"),
     ).distinct()
-    edges = sp.unionByName(
-        sp.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
+    edges = cache(
+        sp.unionByName(sp.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    )
     seeds = (
         load(spark, sf_dir, "supplier")
         .where(F.col("s_nationkey") == _BFS_SEED_NATION)
         .select((F.lit(_SUPPLIER_BASE) + F.col("s_suppkey")).alias("node"))
         .distinct()
     )
-    visited = seeds.withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
-    prev_rdd = _checkpoint_rdd(visited)
+    visited = checkpoint(seeds.withColumn("dist", F.lit(0)).localCheckpoint(eager=True))
     frontier = visited.select("node")
     for d in range(1, _BFS_HOPS + 1):
         step = (
@@ -333,9 +326,9 @@ def graph_bfs_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         new = step.join(visited.select("node"), "node", "left_anti").withColumn(
             "dist", F.lit(d)
         )
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        prev_rdd.unpersist(False)  # previous level's blocks: free NOW
-        prev_rdd = _checkpoint_rdd(visited)
+        prev = visited
+        visited = checkpoint(visited.unionByName(new).localCheckpoint(eager=True))
+        release(prev)
         # re-derive the frontier FROM the checkpoint (not from `new`)
         # so the next superstep's plan starts at a LogicalRDD
         frontier = visited.where(F.col("dist") == d).select("node")
@@ -343,11 +336,11 @@ def graph_bfs_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").cast("bigint").alias("node"),
         F.col("dist").cast("bigint").alias("dist"),
     ).orderBy("node")
-    # the final checkpoint is registered with the query scope, which
-    # frees its blocks after the caller materializes the result
+    # the scope frees the result's checkpoint after the caller
+    # materializes it
     out = checkpoint(out.localCheckpoint(eager=True))
-    prev_rdd.unpersist(False)
-    edges.unpersist()
+    release(visited)
+    release(edges)
     return out
 
 
@@ -426,14 +419,11 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one partial-aggregable degree count (the
     exchange carries nodes, not edges) + two semi-joins of the edge
     list against the surviving-node set — the Pregel superstep shape;
-    the edge set shrinks monotonically, each round's checkpoint blocks
-    are freed directly (rdd.unpersist — Dataset.unpersist is a no-op
-    on checkpoints) as soon as the NEXT round's checkpoint
-    materializes, so at most two rounds' edge sets are resident; the
-    final round's blocks go through the query_run.checkpoint one-shot
-    release after the caller materializes. k and the per-round stats
-    come from one scalar aggregate per round (bounded driver state,
-    same convention as the kmeans centroid collect).
+    the edge set shrinks monotonically, and a round's edge set and
+    degrees are freed as soon as the NEXT round's materialize (the
+    README's loop rule), so at most two rounds are resident. k and the
+    per-round stats come from one scalar aggregate per round (bounded
+    driver state, same convention as the kmeans centroid collect).
     """
     li = (
         load(spark, sf_dir, "lineitem")
@@ -465,10 +455,9 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
 
-    # Each round's edge set is LINEAGE-CUT with localCheckpoint (the
-    # query_run.checkpoint one-shot release convention): with plain
-    # cache() every round's plan embeds BOTH semi-join branches of the
-    # previous round's plan, so the logical tree — and Spark's
+    # Each round's edge set is LINEAGE-CUT with localCheckpoint: with a
+    # plain cache every round's plan embeds BOTH semi-join branches of
+    # the previous round's plan, so the logical tree — and Spark's
     # explain-string generation for it — doubles per round (2^rounds;
     # materializing the round-8 headline run OOM'd the driver building
     # the plan text once deg was also cached). A checkpointed round is
@@ -488,8 +477,7 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = None
     traj = []
-    prev_deg = None
-    prev_ck = None
+    prev = ()
     from spark_rapids_ml_spark.plans.profiling import span
 
     with scoped_conf(
@@ -498,24 +486,21 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         for r in range(_KCORE_ROUNDS + 1):
             with span(spark, f"kcore_round_{r}"):
-                deg = _deg(e).cache()
+                deg = cache(_deg(e))
                 # the stats collect materializes THIS round's
-                # checkpoint, after which the previous round's blocks
-                # are dead weight
+                # checkpoint, after which the previous round is dead
+                # weight
                 row = deg.agg(
                     F.count(F.lit(1)).alias("v"), F.sum("d").alias("dsum")
                 ).collect()[0]
             vr, er = row.v, (row.dsum or 0) // 2
-            if prev_deg is not None:
-                prev_deg.unpersist()
-            if prev_ck is not None:
-                prev_ck.unpersist(False)
-            prev_ck = _checkpoint_rdd(e)
+            for df in prev:
+                release(df)
+            prev = (deg, e)
             if k is None:
                 k = (2 * er) // vr + 1 if vr else 1
             traj.append((r, k, vr, er))
             if r == _KCORE_ROUNDS:
-                deg.unpersist()
                 break
             keep = deg.where(F.col("d") >= k).select("node")
             e = checkpoint(
@@ -524,7 +509,8 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("a", "b")
                 .localCheckpoint(eager=False)
             )
-            prev_deg = deg
+    for df in prev:
+        release(df)
     return local_df(
         spark, traj, "round bigint, k bigint, n_nodes bigint, n_edges bigint"
     ).orderBy("round")
@@ -716,11 +702,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one (v, lbl) groupBy + one per-node argmax window — all keyed
     shuffles, state is one label per node. Each superstep's label
     table is an eager localCheckpoint read back as a LogicalRDD (the
-    round-11 lineage-cut discipline in _lpa_run: constant-size plans,
-    previous round's blocks freed as the next materializes — the
-    fault-tolerance trade-off documented there).
+    lineage cut in _lpa_run).
     """
-    e, sym, lbl, cleanup = _lpa_run(spark, sf_dir)
+    sym, lbl = _lpa_run(spark, sf_dir)
     out = (
         lbl.groupBy("lbl")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
@@ -729,27 +713,25 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(25)
     )
     rows = out.collect()  # bounded: top-25 communities
-    cleanup()
+    release(lbl)
+    release(sym)
     return local_df(spark, rows, "community bigint, n_members bigint").orderBy(
         F.col("n_members").desc(), "community"
     )
 
 
 def _lpa_run(spark: SparkSession, sf_dir: str):
-    """Shared LPA trajectory: (edges, symmetric edges (cached), final
-    labels (lineage-cut), cleanup) — the label table feeding both the
-    community-size view and the modularity evaluation. Caller MUST
-    call cleanup() after materializing.
+    """Shared LPA trajectory: (symmetric edges, final labels), both
+    registered with the query scope — the label table feeding both the
+    community-size view and the modularity evaluation. The caller
+    releases both once it has materialized its result.
 
-    Lineage discipline (round 11): each round's label table is an
-    eager localCheckpoint and the next round's join reads the
-    checkpointed LogicalRDD, so every superstep analyzes a
-    CONSTANT-size plan instead of one embedding all prior rounds
-    (the HITS plan-growth lesson; cache+count bounds storage but NOT
-    Catalyst re-analysis). The previous round's blocks are freed as
-    soon as the next checkpoint materializes — live label storage is
-    ONE round (the round-10 advice); the fault-tolerance trade-off is
-    the documented localCheckpoint convention."""
+    Lineage: each round's label table is an eager localCheckpoint and
+    the next round's join reads the checkpointed LogicalRDD, so every
+    superstep analyzes a constant-size plan instead of one embedding
+    all prior rounds (the HITS plan-growth lesson; cache+count bounds
+    storage but NOT Catalyst re-analysis). Live label storage is one
+    round: the README's loop rule (Query scope)."""
     from pyspark.sql import Window
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -769,14 +751,13 @@ def _lpa_run(spark: SparkSession, sf_dir: str):
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    sym = sym.repartition("dst").cache()  # join key of every superstep
-    lbl = (
+    sym = cache(sym.repartition("dst"))  # join key of every superstep
+    lbl = checkpoint(
         sym.select(F.col("src").alias("v"))
         .distinct()
         .select("v", F.col("v").alias("lbl"))
         .localCheckpoint(eager=True)
     )
-    lbl_rdd = _checkpoint_rdd(lbl)
     wv = Window.partitionBy("v").orderBy(F.col("c").desc(), "lbl")
     for _ in range(LPA_ROUNDS):
         cnt = (
@@ -785,20 +766,15 @@ def _lpa_run(spark: SparkSession, sf_dir: str):
             .agg(F.count(F.lit(1)).alias("c"))
             .select(F.col("vv").alias("v"), "lbl", "c")
         )
-        nxt = (
+        nxt = checkpoint(
             cnt.withColumn("rk", F.row_number().over(wv))
             .where(F.col("rk") == 1)
             .select("v", "lbl")
             .localCheckpoint(eager=True)  # cut: next round reads a LogicalRDD
         )
-        lbl_rdd.unpersist(False)  # previous round's blocks: free NOW
-        lbl, lbl_rdd = nxt, _checkpoint_rdd(nxt)
-
-    def cleanup() -> None:
-        lbl_rdd.unpersist(False)
-        sym.unpersist()
-
-    return e, sym, lbl, cleanup
+        release(lbl)
+        lbl = nxt
+    return sym, lbl
 
 
 # ---------------------------------------- degree distribution (CCDF)
@@ -992,7 +968,6 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e0.select("src").distinct().select(
         F.col("src").alias("id"), F.lit(_ONE).cast("bigint").alias("s")
     )
-    h_rdd = None  # initial h has no checkpoint blocks
     for it in range(_HITS_ITERS):
         a_raw = (
             e0.join(h.withColumnRenamed("id", "src"), "src")
@@ -1004,14 +979,12 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # normalize crossJoin embeds its input plan ~3x, so without the
         # cut the LOGICAL plan grows ~3^(2*iters) and Catalyst analysis
         # dominates wall (measured 138 s at sf0.01 plan-build vs 0.25 s
-        # execution before this cut). Values are unchanged. Round-11
-        # (the round-10 advice): a half-step's blocks are freed as soon
-        # as the NEXT half-step materializes — only the FINAL a and h
-        # (the ranking inputs) live until the scope closes, so live
-        # checkpoint storage is one half-step, not 2*iters frames.
+        # execution before this cut). Values are unchanged. A half-step
+        # is released once the NEXT one materialized (the README's loop
+        # rule); only the FINAL a and h (the ranking inputs) live until
+        # the scope closes.
         a = checkpoint(_normalize(a_raw).localCheckpoint(eager=True))
-        if h_rdd is not None:  # h_{it-1}: consumed by a_raw, never again
-            h_rdd.unpersist(False)
+        release(h)  # h_{it-1}: consumed by a_raw, never again
         h_raw = (
             e0.join(a.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src")
@@ -1019,9 +992,8 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("src").alias("id"), "s")
         )
         h = checkpoint(_normalize(h_raw).localCheckpoint(eager=True))
-        h_rdd = _checkpoint_rdd(h)
         if it < _HITS_ITERS - 1:  # a_it: consumed by h_raw; keep only the final
-            _checkpoint_rdd(a).unpersist(False)
+            release(a)
     from pyspark.sql import Window
 
     from spark_rapids_ml_spark.functions.scan import ranged_row_number
@@ -1104,7 +1076,7 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-community rollup — all keyed partial-aggregable shuffles; the
     verdict is a one-row reduce.
     """
-    e, sym, lbl, cleanup = _lpa_run(spark, sf_dir)
+    sym, lbl = _lpa_run(spark, sf_dir)
     # every verdict input derives from the CACHED symmetric frame: the
     # uncached e would recompute the lineitem self-join per consuming job
     # (each undirected edge appears exactly twice in sym, so //2 is exact)
@@ -1139,7 +1111,8 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("modularity"),
     )
     rows = out.collect()  # 1-row verdict
-    cleanup()
+    release(lbl)
+    release(sym)
     return local_df(
         spark, rows, "n_communities bigint, n_edges bigint, q_scaled bigint, modularity double"
     )

@@ -21,12 +21,6 @@ def formatted(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def codegen_summary(df: DataFrame) -> str:
-    """WholeStageCodegen subtree summary (run the plan first — AQE only
-    finalizes stages on execution)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
-
-
 def pushed_filters(df: DataFrame) -> str:
     txt = formatted(df)
     if "PushedFilters:" not in txt:

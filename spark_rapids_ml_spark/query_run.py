@@ -11,8 +11,13 @@ stage at RapidsRowMatrix.scala:78,88,111,153,183,193)::
 On entry the scope sets a job group of its own, so every Spark job the
 query runs is tagged with it. On exit, also when the query raised, it
 frees the frames cached (``cache``) and the local checkpoints
-registered (``checkpoint``) inside it, restores the caller's job group
-and fills in the record.
+registered (``checkpoint``) inside it, in reverse registration order,
+restores the caller's job group and fills in the record.
+
+``release(df)`` frees one registered frame before the scope closes.
+An iterative loop registers each round and releases the previous round
+once the next one has materialized, so a loop that raises mid-way
+leaves nothing behind and one that finishes holds one round at a time.
 
 Ownership follows the job group. A registration made on a thread whose
 job group is an open scope's belongs to that scope; pool threads carry
@@ -43,9 +48,9 @@ _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interru
 
 _LOCK = threading.Lock()
 _SERIAL = itertools.count()
-# job group of each open scope -> release calls of what it registered;
-# None is the unscoped registry
-_OWNED: dict[str | None, list[Callable[[], object]]] = {None: []}
+# job group of each open scope -> (frame, release call) of what it
+# registered; None is the unscoped registry
+_OWNED: dict[str | None, list[tuple[DataFrame, Callable[[], object]]]] = {None: []}
 
 
 @dataclass
@@ -67,10 +72,11 @@ def _owner() -> str | None:
     return group if group in _OWNED else None
 
 
-def _register(release: Callable[[], object]) -> None:
+def _register(df: DataFrame, free: Callable[[], object]) -> DataFrame:
     owner = _owner()
     with _LOCK:
-        _OWNED.get(owner, _OWNED[None]).append(release)
+        _OWNED.get(owner, _OWNED[None]).append((df, free))
+    return df
 
 
 def _release(owner: str | None, close: bool = False) -> None:
@@ -78,15 +84,14 @@ def _release(owner: str | None, close: bool = False) -> None:
         todo = _OWNED.pop(owner, [])
         if not close:
             _OWNED[owner] = []
-    for release in reversed(todo):
-        release()
+    for _, free in reversed(todo):
+        free()
 
 
 def cache(df: DataFrame) -> DataFrame:
-    """``df.cache()``, freed when the current scope closes."""
+    """``df.cache()``, freed by ``release`` or when the current scope closes."""
     df = df.cache()
-    _register(df.unpersist)
-    return df
+    return _register(df, df.unpersist)
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -99,12 +104,23 @@ def _checkpoint_rdd(df: DataFrame):
 
 
 def checkpoint(df: DataFrame) -> DataFrame:
-    """Register a localCheckpoint'ed frame so its blocks are freed with
-    the current scope's caches. One-shot: materialize every consumer
-    before the release."""
+    """Register a localCheckpoint'ed frame so its blocks are freed by
+    ``release`` or with the current scope's caches. One-shot:
+    materialize every consumer before the release."""
     rdd = _checkpoint_rdd(df)
-    _register(lambda: rdd.unpersist(False))
-    return df
+    return _register(df, lambda: rdd.unpersist(False))
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``, registered with ``cache`` or ``checkpoint``, now and
+    drop it from whichever registry holds it (any scope, any thread).
+    A frame not registered, or already released, is left as it is."""
+    with _LOCK:
+        todo = [free for reg in _OWNED.values() for f, free in reg if f is df]
+        for reg in _OWNED.values():
+            reg[:] = [(f, free) for f, free in reg if f is not df]
+    for free in todo:
+        free()
 
 
 def release_caches() -> None:

@@ -210,10 +210,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 # ------------------------------------------------ gated scan widening
 
 # Hash-repartition keys for fact tables (unique or near-unique, so the
@@ -293,12 +289,6 @@ def widen_frame(
     if n_parts * 2 >= target or size < min_bytes:
         return df
     return df.repartition(target, df[key_col])
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def warehouse_dir(spark: SparkSession) -> str:

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.operators.sources_io import _sink
+from spark_rapids_ml_spark.query_run import checkpoint, release
 from spark_rapids_ml_spark.registry import register
 from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.sources.catalog import (
@@ -950,37 +951,41 @@ def stream_incremental_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        sig = band_projection(batch).localCheckpoint(eager=True)
-        vs_index = (
-            sig.join(spark.read.parquet(idx_dir), ["band", "band_key"])
-            .groupBy("doc_id")
-            .agg(F.min("min_doc").alias("dup_idx"))
-        )
-        w = Window.partitionBy("band", "band_key")
-        within = (
-            sig.withColumn("first_in_bucket", F.min("doc_id").over(w))
-            .where(F.col("doc_id") > F.col("first_in_bucket"))
-            .groupBy("doc_id")
-            .agg(F.min("first_in_bucket").alias("dup_batch"))
-        )
-        verdicts = (
-            batch.select("doc_id")
-            .join(vs_index, "doc_id", "left")
-            .join(within, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least("dup_idx", "dup_batch").alias("dup_of"),
+        # the batch's lineage cut lives as long as this call
+        sig = checkpoint(band_projection(batch).localCheckpoint(eager=True))
+        try:
+            vs_index = (
+                sig.join(spark.read.parquet(idx_dir), ["band", "band_key"])
+                .groupBy("doc_id")
+                .agg(F.min("min_doc").alias("dup_idx"))
             )
-        )
-        verdicts.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # index maintenance AFTER the probe: this batch's bucket minima
-        # become witnesses for later batches only
-        (
-            sig.groupBy("band", "band_key")
-            .agg(F.min("doc_id").alias("min_doc"))
-            .write.mode("append")
-            .parquet(idx_dir)
-        )
+            w = Window.partitionBy("band", "band_key")
+            within = (
+                sig.withColumn("first_in_bucket", F.min("doc_id").over(w))
+                .where(F.col("doc_id") > F.col("first_in_bucket"))
+                .groupBy("doc_id")
+                .agg(F.min("first_in_bucket").alias("dup_batch"))
+            )
+            verdicts = (
+                batch.select("doc_id")
+                .join(vs_index, "doc_id", "left")
+                .join(within, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.least("dup_idx", "dup_batch").alias("dup_of"),
+                )
+            )
+            verdicts.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+            # index maintenance AFTER the probe: this batch's bucket minima
+            # become witnesses for later batches only
+            (
+                sig.groupBy("band", "band_key")
+                .agg(F.min("doc_id").alias("min_doc"))
+                .write.mode("append")
+                .parquet(idx_dir)
+            )
+        finally:
+            release(sig)
 
     _run_stream(stream.writeStream.foreachBatch(process))
 
@@ -1432,20 +1437,24 @@ def stream_cdf_apply_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest = {"dir": os.path.join(root, "replica_v0"), "version": 0}
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        b = batch.localCheckpoint(eager=True)
-        replica = spark.read.parquet(latest["dir"])
-        touched = (
-            b.where(F.col("change_type").isin("insert", "delete", "update_postimage"))
-            .select("k")
-            .distinct()
-        )
-        upserts = b.where(
-            F.col("change_type").isin("insert", "update_postimage")
-        ).select("k", "prio", "price")
-        new_state = replica.join(touched, "k", "left_anti").unionByName(upserts)
-        nxt = os.path.join(root, f"replica_v{latest['version'] + 1}")
-        new_state.write.mode("overwrite").parquet(nxt)
-        latest["dir"], latest["version"] = nxt, latest["version"] + 1
+        # the batch's lineage cut lives as long as this call
+        b = checkpoint(batch.localCheckpoint(eager=True))
+        try:
+            replica = spark.read.parquet(latest["dir"])
+            touched = (
+                b.where(F.col("change_type").isin("insert", "delete", "update_postimage"))
+                .select("k")
+                .distinct()
+            )
+            upserts = b.where(
+                F.col("change_type").isin("insert", "update_postimage")
+            ).select("k", "prio", "price")
+            new_state = replica.join(touched, "k", "left_anti").unionByName(upserts)
+            nxt = os.path.join(root, f"replica_v{latest['version'] + 1}")
+            new_state.write.mode("overwrite").parquet(nxt)
+            latest["dir"], latest["version"] = nxt, latest["version"] + 1
+        finally:
+            release(b)
 
     _run_stream(stream.writeStream.foreachBatch(apply_batch))
 

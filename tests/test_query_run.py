@@ -6,6 +6,9 @@
   ``release_caches()`` called outside any scope.
 - It frees them also when the query raised, so ``harness.compare`` on a
   query that caches a frame and then fails leaves nothing persisted.
+- ``release(df)`` frees one registered frame (a cached frame or a local
+  checkpoint) at once, whichever thread registered it, and drops it
+  from its registry, so the scope's exit does not free it again.
 - Every job a query starts carries the scope's job group, including the
   commit jobs ``sink_lakehouse_lifecycle`` submits from a thread pool:
   the group's job count equals the job-ID delta across the query.
@@ -19,7 +22,15 @@ import warnings
 import pytest
 
 from spark_rapids_ml_spark.harness import compare
-from spark_rapids_ml_spark.query_run import cache, query_run, release_caches
+from spark_rapids_ml_spark import query_run as qr
+from spark_rapids_ml_spark.query_run import (
+    _checkpoint_rdd,
+    cache,
+    checkpoint,
+    query_run,
+    release,
+    release_caches,
+)
 from spark_rapids_ml_spark.registry import QuerySpec, all_queries
 from tests.conftest import SF_SMALL as SF
 
@@ -125,6 +136,71 @@ def test_compare_frees_the_caches_of_a_failing_query(spark):
         with pytest.raises(RuntimeError, match="after caching"):
             compare(spark, QuerySpec("fails_after_cache", fails, "SELECT 1"), SF, mode=mode)
     assert _persisted(spark) == before
+
+
+def _registered(df) -> bool:
+    with qr._LOCK:
+        return any(f is df for reg in qr._OWNED.values() for f, _ in reg)
+
+
+def test_release_frees_a_cached_frame_now(spark):
+    with query_run(spark, "release-cache"):
+        keep = cache(spark.range(17))
+        keep.count()
+        before = _persisted(spark)
+        df = cache(spark.range(18).selectExpr("id * 5 AS v"))
+        df.count()
+        (rdd,) = _persisted(spark) - before
+        release(df)
+        assert rdd not in _persisted(spark)
+        assert not _registered(df) and _registered(keep)
+        release(df)  # already released: left as it is
+        release(spark.range(3))  # never registered: left as it is
+    assert not _registered(keep)
+
+
+def test_release_frees_a_checkpoint_now(spark):
+    jsc = spark.sparkContext._jsc.sc()
+    with query_run(spark, "release-checkpoint"):
+        ck = checkpoint(spark.range(1000).selectExpr("id * 3 AS y").localCheckpoint(eager=True))
+        rdd_id = _checkpoint_rdd(ck).id()
+        assert rdd_id in {i.id() for i in jsc.getRDDStorageInfo()}, "blocks not materialized"
+        release(ck)
+        assert rdd_id not in {i.id() for i in jsc.getRDDStorageInfo()}, "blocks not freed"
+        assert not _registered(ck)
+
+
+def test_release_frees_a_frame_registered_in_another_thread(spark):
+    cached: dict[str, object] = {}
+    registered, released = threading.Event(), threading.Event()
+    errors: list[BaseException] = []
+
+    def other():
+        try:
+            with query_run(spark, "other-thread"):
+                before = _persisted(spark)
+                cached["df"] = df = cache(spark.range(19).selectExpr("id * 11 AS v"))
+                df.count()
+                (cached["rdd"],) = _persisted(spark) - before
+                registered.set()
+                assert released.wait(60)
+        except BaseException as exc:  # noqa: BLE001 — reported by the main thread
+            errors.append(exc)
+        finally:
+            registered.set()
+
+    t = threading.Thread(target=other)
+    t.start()
+    try:
+        assert registered.wait(60)
+        assert not errors, errors
+        release(cached["df"])
+        assert cached["rdd"] not in _persisted(spark)
+        assert not _registered(cached["df"])
+    finally:
+        released.set()
+        t.join(120)
+    assert not errors, errors
 
 
 def test_lifecycle_commit_jobs_carry_the_query_group(spark):

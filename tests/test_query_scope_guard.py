@@ -1,7 +1,10 @@
 """CI guard (no Spark): one owner for each query's cross-cutting state.
 
 - The cache registry is ``query_run``'s; no module-global cache list
-  comes back.
+  comes back. Frames are cached, checkpoint-registered and freed only
+  through it (``cache``/``checkpoint``/``release``): no bare
+  ``.cache()``/``.persist(``/``.unpersist(`` and no checkpoint-RDD
+  handle elsewhere in the package.
 - Job groups and job descriptions are set only by ``query_run`` (the
   query's tag) and ``plans/profiling.span`` (the phase label).
 - Conf restore lives only in ``session.scoped_conf``, the one place that
@@ -20,6 +23,10 @@ PKG = os.path.join(
 # banned name -> package files (relative) allowed to contain it
 RULES = {
     "_SESSION_CACHES": (),
+    ".cache()": ("query_run.py",),
+    ".persist(": ("query_run.py",),
+    ".unpersist(": ("query_run.py",),
+    "_checkpoint_rdd": ("query_run.py",),
     "setJobGroup": ("query_run.py", os.path.join("plans", "profiling.py")),
     "setJobDescription": ("query_run.py", os.path.join("plans", "profiling.py")),
     "conf.unset(": ("session.py",),
