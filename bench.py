@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+(default /root/testdata/sf0.1) on local[N] (N = $SPARK_GRAFT_CPUS, else
+the core count: ``session.DEFAULT_CPUS``, the rule every tool uses) and
+prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
    "runs": [...], "host": {...}}
 
@@ -15,8 +16,9 @@ DISCARDED ($SPARK_GRAFT_BENCH_WARMUP, default 1) so per-query codegen
 the whole suite is executed $SPARK_GRAFT_BENCH_RUNS times (default 3);
 ``value`` is the MEDIAN of the run totals, per-query timings are
 per-query medians, and the raw run totals plus the host identity
-(hostname / CPU model / core count / memory) are embedded in the JSON — so a host change between rounds is visible in the artifact
-itself instead of requiring ratio archaeology against BASELINE.md.
+(hostname / CPU model / core count / memory) are embedded in the
+JSON — so a host change between runs is visible in the artifact
+itself. Compare only runs taken on the same host.
 
 De-noising (round 7): queries whose median is under
 $SPARK_GRAFT_BENCH_FAST_CUTOFF seconds (default 2.0) get topped up to
@@ -40,7 +42,7 @@ from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.query_run import release_caches
 from spark_rapids_ml_spark.registry import all_queries
-from spark_rapids_ml_spark.session import get_spark
+from spark_rapids_ml_spark.session import DEFAULT_CPUS, get_spark
 
 
 def _cpu_canary() -> float:
@@ -49,7 +51,7 @@ def _cpu_canary() -> float:
     underlying host measurably varies (observed round 13: the same
     canary swung 0.16s -> 0.24s within 20 minutes, and the whole
     31-row headline rose uniformly ~30% with it) — embedding the
-    canary lets a vs_baseline swing be attributed to host state
+    canary lets a swing between runs be attributed to host state
     instead of being read as a code regression."""
     import numpy as np
 
@@ -112,10 +114,9 @@ def _time_query(spark, sf_dir: str, spec) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("bench", cpus=cpus)
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = {n: s for n, s in all_queries().items() if s.bench}
@@ -128,7 +129,7 @@ def main() -> None:
     # DISCARDED warm-up pass (round 11): one full suite execution whose
     # timings are thrown away. The lineitem count above warms the JVM
     # and parquet footers but NOT per-query codegen, broadcast, or
-    # Python-worker pools — BENCH_r10's first measured run was 60.3 s
+    # Python-worker pools — a first measured run once read 60.3 s
     # vs 39.6/43.5 for runs 2-3, which contaminates a 3-run median and
     # false-alarms round-over-round comparisons. Warm-up count via
     # $SPARK_GRAFT_BENCH_WARMUP (default 1; 0 restores the old
@@ -191,46 +192,18 @@ def main() -> None:
 
     timings = {n: round(statistics.median(ts), 3) for n, ts in per_query.items()}
 
-    # the 2x-gate arithmetic, computed HERE so the judge reads one
-    # field instead of reconciling ledger notes: vs_baseline compares
-    # sum-of-medians against BASELINE_headline.json over the rows
-    # present in BOTH sets (new headline rows are listed, not counted,
-    # until they get a baseline entry at the next re-base).
-    vs_baseline = baseline_common_total = None
-    baseline_missing: list[str] = []
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BASELINE_headline.json")) as f:
-            bdoc = json.load(f)
-        # the table is an sf-specific ledger — a ratio against it only
-        # means something at the sf it was measured at
-        if float(sf) == float(bdoc.get("sf", 0.1)):
-            bq = bdoc["baseline_queries"]
-            common = sorted(set(timings) & set(bq))
-            baseline_missing = sorted(set(timings) - set(bq))
-            baseline_common_total = round(sum(bq[n] for n in common), 3)
-            if baseline_common_total:
-                vs_baseline = round(
-                    sum(timings[n] for n in common) / baseline_common_total, 3
-                )
-    except (OSError, KeyError, ValueError, ZeroDivisionError):
-        pass
-
     print(
         json.dumps(
             {
                 "metric": "headline_queries_wall_clock",
                 "value": round(statistics.median(run_totals), 3),
                 "unit": "sec",
-                "vs_baseline": vs_baseline,
-                "baseline_common_total": baseline_common_total,
-                "baseline_missing": baseline_missing,
                 "queries": timings,
                 "queries_iqr": {n: _iqr(ts) for n, ts in per_query.items()},
                 "queries_runs": per_query,
                 "sum_of_medians": round(sum(timings.values()), 3),
                 "sf": float(sf),
-                "cpus": cpus,
+                "cpus": DEFAULT_CPUS,
                 "streaming_rows_per_sec": statistics.median(stream_rates),
                 "runs": run_totals,
                 "streaming_runs": stream_rates,

@@ -26,7 +26,7 @@ Arrow hop (``pyarrow.Array.from_pandas`` converts NaN to null at every
 nesting level, by design), so any frame carrying a NaN falls back to
 the plain ``createDataFrame`` path, which preserves it — NaN and NULL
 have different SQL semantics and must never be conflated silently
-(ADVICE r13; the previous blanket NaN→None scrub did exactly that).
+(the previous blanket NaN→None scrub did exactly that).
 """
 
 from __future__ import annotations
@@ -35,13 +35,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _carries_nan(value) -> bool:
-    """True if a cell (scalar or one-level list/tuple) holds a float
-    NaN — the payload the Arrow hop would silently rewrite to null."""
+    """True if a cell holds a float NaN at any depth of lists,
+    tuples/Rows and dict values — the payload the Arrow hop would
+    silently rewrite to null."""
     if isinstance(value, float):
         return value != value
-    if isinstance(value, (list, tuple)):
-        return any(isinstance(x, float) and x != x for x in value)
-    return False
+    if isinstance(value, dict):
+        value = value.values()
+    elif not isinstance(value, (list, tuple)):
+        return False
+    return any(_carries_nan(x) for x in value)
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

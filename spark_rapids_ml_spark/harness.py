@@ -4,7 +4,7 @@ For each declared query: run the Spark DataFrame and the oracle SQL
 on the same parquet tables, then compare row count, column names, and
 an order-insensitive value comparison (sorted by all columns). Used
 by pytest so every operator is validated the same way the driver
-validates it (CORRECTNESS_r{N}.json).
+validates it.
 
 Two compare modes:
 

@@ -11,7 +11,8 @@ Five dedup families, all first-class queries:
 Every hash is the *portable 60-bit md5 hash* (functions.portable) so
 MinHash/SimHash signatures are bit-identical in the DuckDB oracle —
 the approximate algorithms themselves are checked exactly, and their
-*recall* against brute-force Jaccard is checked in tests/test_dedup.py.
+*recall* against brute-force Jaccard is checked in
+tests/test_quality.py::test_minhash_lsh_finds_true_duplicates.
 
 Scale notes (100 TB): exact dedup and MinHash are single-shuffle
 group-bys on content-derived keys (no pairwise work). LSH candidate
@@ -616,7 +617,8 @@ def _sql_lsh_edges() -> str:
     corpus (star ≡ clique under transitive closure) yet quadratic in
     bucket occupancy: at sf10 a skewed band bucket made DuckDB spill
     80 GB of join intermediates to disk. Same corpus-relative-cost
-    lesson as SCALING.md round 7 — now applied to the ORACLE too."""
+    lesson as the ANN tiers (SCALING.md, "Recall vs corpus size") —
+    now applied to the ORACLE too."""
     return f"""
 {_sql_minhash_cte()},
 bands AS MATERIALIZED (
@@ -647,7 +649,7 @@ edges AS (
 # component size (sum of |C|^2 closure rows): at sf10 the LSH candidate
 # graph's star-fallback components are large enough that DuckDB ground
 # for >45 min single-threaded on the closure join. Same lesson as the
-# round-7 scale cliffs (SCALING.md): an oracle that would not survive
+# round-7 sf10 scale cliffs: an oracle that would not survive
 # scale is part of the operator's scale posture. Replacement: unrolled
 # min-label propagation — each pass joins labels to the edge list and
 # takes the neighborhood MIN, linear in |E| per pass, mirroring the

@@ -954,10 +954,10 @@ def sink_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (proving compaction preserved the MOR live view) plus per-change-
     type aggregates of the feed files (count, exact-decimal price sum,
     key checksum) — so a single hash locks final state AND feed.
-    tests/test_sources_sinks.py additionally replays the feed against
-    v1 and checks it reproduces v3 row-for-row (v1 + feed = v2
-    invariant, the contract a downstream incremental consumer relies
-    on).
+    tests/test_lakehouse_lifecycle.py::test_feed_replay_reproduces_compacted_state
+    additionally replays the feed against v1 and checks it reproduces
+    v3 row-for-row (v1 + feed = v2 invariant, the contract a downstream
+    incremental consumer relies on).
 
     Scale: each stage is the single-stage operator's plan — MERGE one
     equi-join + rewrite, MOR delete O(k) sidecar writes, compaction

@@ -56,7 +56,7 @@ def register(
 # enumerate ``queries()`` in order, so the enumeration order is rotated
 # each round to give every declared operator a driver-visible verdict.
 # Round 4 checked the 42 never-checked-through-r03 queries plus the
-# multimodal oracles and round-4 additions (CORRECTNESS_r04.json).
+# multimodal oracles and round-4 additions.
 # Round 5 front-loads: (a) queries new, fixed, or refactored this
 # round, (b) the late-round-4 additions that have never had a driver
 # row, (c) the queries whose newest driver row is oldest (the r01/r02
@@ -74,9 +74,8 @@ SWEEP_PRIORITY: list[str] = [
     # under versioned manifests; oracle changed in lockstep) and the
     # flat SQ tier (local prune key now half-away-from-zero, ADVICE
     # r12; values unchanged — the fresh driver row proves it). The
-    # tail follows tools/staleness.py least-recently-sampled order
-    # (STALENESS.md is the auditable artifact): the rest of the r05
-    # cohort, then the oldest of r06.
+    # tail follows least-recently-sampled order as of round 13: the
+    # rest of the r05 cohort, then the oldest of r06.
     "retrieval_mmr_diversified",
     "stream_ann_rollback_probe",
     "retrieval_rrf_filtered_fusion",

@@ -2064,10 +2064,10 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identically to the unshifted one — but moves the cloud far from the
 # reference-trained centroids, so the cell HISTOGRAM collapses and PSI
 # trips the retrain gate, exactly the "new corpus from a different
-# domain" event the lifecycle exists for. tests/test_streaming_
-# semantics.py runs the same lifecycle with shift=0.0 (the natural
-# even/odd split, no drift) and pins that the gate does NOT fire and
-# the v1 quantizer is reused byte-for-byte.
+# domain" event the lifecycle exists for.
+# tests/test_streaming_semantics.py runs the same lifecycle with
+# shift=0.0 (the natural even/odd split, no drift) and pins that the
+# gate does NOT fire and the v1 quantizer is reused byte-for-byte.
 ANN_DRIFT_SHIFT = 1.0
 
 

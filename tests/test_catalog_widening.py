@@ -14,6 +14,8 @@ import math
 import os
 import shutil
 
+import pytest
+
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import _source_bytes, load_wide
 
@@ -101,6 +103,21 @@ def test_local_df_nan_in_array_falls_back(spark):
     df = local_df(spark, rows, "id bigint, v array<double>")
     got = {r["id"]: r["v"] for r in df.collect()}
     assert math.isnan(got[0][1]) and got[1] == [2.0, 3.0]
+
+
+@pytest.mark.parametrize(
+    "ddl, cell, nan_of",
+    [
+        ("array<array<double>>", [[1.0, float("nan")]], lambda v: v[0][1]),
+        ("array<struct<a:double,b:double>>", [(1.0, float("nan"))], lambda v: v[0]["b"]),
+        ("map<string,double>", {"x": float("nan")}, lambda v: v["x"]),
+    ],
+)
+def test_local_df_nested_nan_falls_back(spark, ddl, cell, nan_of):
+    # a NaN at any depth must take the plain path: the Arrow hop turns
+    # it into NULL at every nesting level
+    got = local_df(spark, [(1, cell)], f"id bigint, v {ddl}").collect()[0]["v"]
+    assert math.isnan(nan_of(got))
 
 
 def test_local_df_plans_local_table_scan(spark):

@@ -22,8 +22,8 @@ every query family still measures what it measures at sf0.1:
   quality scores) are preserved per copy, but shingle/minhash
   signatures differ across copies, so the 10x corpus does NOT create
   artificial 10-member near-duplicate cohorts that would blow up
-  dedup pair OUTPUT quadratically (the failure mode
-  tools/headroom_probe.py measures deliberately). Seeding by text-hash
+  dedup pair OUTPUT quadratically (the failure mode an unshuffled 10x
+  copy of the corpus provokes). Seeding by text-hash
   (not doc_id) keeps the corpus's own intra-copy duplicate cohorts
   byte-identical within each copy, so exact/near-dup queries still
   find 10x the genuine cohorts.

@@ -1,6 +1,6 @@
-"""Vacuum regenerable run artifacts (round-13 hygiene, VERDICT r12
-watch item 2): `.tmp` had grown to 5.8 GB and kept growing across
-rounds/sfs because per-invocation artifacts outlive their runs.
+"""Vacuum regenerable run artifacts: `.tmp` had grown to 5.8 GB and
+kept growing across rounds/sfs because per-invocation artifacts
+outlive their runs.
 
 What goes (all regenerated on demand by the queries that need them):
   - stream_queries._CHECKPOINT_ROOT (tmpfs when /dev/shm exists,
