@@ -1,5 +1,5 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[N] (N = $SPARK_GRAFT_CPUS, else
+(default: the sf0.1 data set) on local[N] (N = $SPARK_GRAFT_CPUS, else
 the core count: ``session.DEFAULT_CPUS``, the rule every tool uses) and
 prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,

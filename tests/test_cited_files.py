@@ -11,8 +11,9 @@ file's directory and the package root (``plans/...`` means
 ``spark_rapids_ml_spark/plans/...``). A name ``.gitignore`` covers is a
 generated output and counts as present.
 
-``CHANGES.md``, ``ROADMAP.md`` and ``ISSUE.md`` are history and task
-statements: they name deleted files on purpose and are not scanned.
+``CHANGES.md``, ``ROADMAP.md`` and a root-level task statement (a ``.md``
+file titled ``# NAME <number> ...``) are history and plans: they name
+deleted files on purpose and are not scanned.
 """
 
 from __future__ import annotations
@@ -24,7 +25,8 @@ import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "spark_rapids_ml_spark")
-EXEMPT = {"CHANGES.md", "ROADMAP.md", "ISSUE.md"}
+EXEMPT = {"CHANGES.md", "ROADMAP.md"}
+TASK_TITLE = re.compile(r"# [A-Z]+ \d+\b")
 SCANNED = (".md", ".py", ".sh")
 
 _NAME = r"[\w.*{}-]"
@@ -55,6 +57,15 @@ def _ignored(rel: str, patterns: list[str]) -> bool:
     return False
 
 
+def _exempt(rel: str) -> bool:
+    if rel in EXEMPT:
+        return True
+    if "/" in rel or not rel.endswith(".md"):
+        return False
+    with open(os.path.join(ROOT, rel), encoding="utf-8", errors="replace") as f:
+        return bool(TASK_TITLE.match(f.readline()))
+
+
 def _scanned_files(patterns: list[str]):
     for dirpath, dirnames, filenames in os.walk(ROOT):
         rel_dir = os.path.relpath(dirpath, ROOT).replace(os.sep, "/")
@@ -64,7 +75,7 @@ def _scanned_files(patterns: list[str]):
         ]
         for name in filenames:
             rel = rel_dir + name
-            if name.endswith(SCANNED) and rel not in EXEMPT and not _ignored(rel, patterns):
+            if name.endswith(SCANNED) and not _ignored(rel, patterns) and not _exempt(rel):
                 yield rel
 
 
