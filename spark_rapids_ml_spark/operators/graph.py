@@ -14,12 +14,12 @@ same five iterations as SQL CTEs.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_rapids_ml_spark.query_run import cache, checkpoint, release
 from spark_rapids_ml_spark.registry import register
-from spark_rapids_ml_spark.session import scoped_conf
 from spark_rapids_ml_spark.functions.localframe import local_df
 from spark_rapids_ml_spark.sources.catalog import load
 
@@ -403,6 +403,28 @@ FROM ({union}) ORDER BY round
 """
 
 
+def _kcore_peel(a: np.ndarray, b: np.ndarray, rounds: int) -> list[tuple[int, int, int, int]]:
+    """The k-core peel trajectory of the distinct undirected edges
+    ``(a[i], b[i])``: one ``(round, k, n_nodes, n_edges)`` row per round
+    0..``rounds``. k = mean degree + 1 is fixed at round 0 with the
+    oracle's exact integer arithmetic (k = 1 for an empty slice); an
+    edge survives a round when both its endpoints have degree >= k."""
+    k = None
+    traj = []
+    for r in range(rounds + 1):
+        nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+        vr, er = len(nodes), len(a)
+        if k is None:
+            k = (2 * er) // vr + 1 if vr else 1
+        traj.append((r, k, vr, er))
+        if r == rounds:
+            break
+        ok = np.bincount(inv, minlength=vr) >= k
+        keep = ok[inv[:er]] & ok[inv[er:]]
+        a, b = a[keep], b[keep]
+    return traj
+
+
 @register("graph_kcore_peeling", bench=True, tags=("graph", "scale"), oracle=_kcore_oracle())
 def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive k-core peeling profile: starting from the part
@@ -416,14 +438,15 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     under peeling is the informative, scale-stable statistic, where a
     surviving-node list degenerates to all-or-empty.
 
-    Scale: each round is one partial-aggregable degree count (the
-    exchange carries nodes, not edges) + two semi-joins of the edge
-    list against the surviving-node set — the Pregel superstep shape;
-    the edge set shrinks monotonically, and a round's edge set and
-    degrees are freed as soon as the NEXT round's materialize (the
-    README's loop rule), so at most two rounds are resident. k and the
-    per-round stats come from one scalar aggregate per round (bounded
-    driver state, same convention as the kmeans centroid collect).
+    Scale: the co-purchase graph is built from the orders with key
+    <= ``_KCORE_KEY_CAP`` only, so its edge slice is bounded by a
+    constant of the query at every SF: at most 30000 orders x C(7,2)
+    pairs = 630k distinct (a, b) pairs, two int64 columns, ~10 MB
+    (242k pairs at sf0.1). Spark builds the distinct slice (one
+    self-join + distinct) and it crosses to the driver in ONE
+    ``toArrow`` hop; the peel rounds run in numpy (``_kcore_peel``).
+    No Spark loop remains, and none is needed: on a slice this size a
+    Spark job per round is scheduling overhead, not data work.
     """
     li = (
         load(spark, sf_dir, "lineitem")
@@ -431,7 +454,7 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
     )
     a, b = li.alias("a"), li.alias("b")
-    e = checkpoint(
+    edges = (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -439,78 +462,11 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_partkey").alias("a"), F.col("b.l_partkey").alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .toArrow()  # bounded: the key-capped edge slice, <= 630k pairs at any SF
     )
-
-    # One degree aggregation per round serves BOTH the trajectory stats
-    # (nodes = degree rows, edges = sum(d)/2) and the peel predicate —
-    # a single Spark job per round instead of separate node-count /
-    # edge-count actions (halves the job-latency floor this
-    # fixed-overhead-dominated query pays).
-    def _deg(edges: DataFrame) -> DataFrame:
-        return (
-            edges.select(F.col("a").alias("node"))
-            .unionAll(edges.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-
-    # Each round's edge set is LINEAGE-CUT with localCheckpoint: with a
-    # plain cache every round's plan embeds BOTH semi-join branches of
-    # the previous round's plan, so the logical tree — and Spark's
-    # explain-string generation for it — doubles per round (2^rounds;
-    # materializing the round-8 headline run OOM'd the driver building
-    # the plan text once deg was also cached). A checkpointed round is
-    # a LogicalRDD leaf: constant plan size, shallow per-round DAGs,
-    # and deg caching becomes safe. deg is consumed three times per
-    # round (stats job + both peel branches).
-    # The key-capped edge set is tiny (~100k rows) regardless of SF, so
-    # the per-round shuffles are pure scheduler overhead at the session
-    # default width; 8 partitions is plenty and cuts the round latency
-    # (cached plans don't get AQE partition coalescing by default).
-    # AQE is also switched OFF for the peel loop: with the width
-    # already pinned to 8 it has nothing to re-optimize, and its
-    # per-exchange re-planning turns each round's one logical action
-    # into 3-4 separate Spark jobs (measured r14: 33 jobs / 1.2 s of
-    # inter-job driver gap for 5 rounds; the fixed plan runs the same
-    # rows). Scoped + restored by session.scoped_conf.
-
-    k = None
-    traj = []
-    prev = ()
-    from spark_rapids_ml_spark.plans.profiling import span
-
-    with scoped_conf(
-        spark,
-        {"spark.sql.shuffle.partitions": "8", "spark.sql.adaptive.enabled": "false"},
-    ):
-        for r in range(_KCORE_ROUNDS + 1):
-            with span(spark, f"kcore_round_{r}"):
-                deg = cache(_deg(e))
-                # the stats collect materializes THIS round's
-                # checkpoint, after which the previous round is dead
-                # weight
-                row = deg.agg(
-                    F.count(F.lit(1)).alias("v"), F.sum("d").alias("dsum")
-                ).collect()[0]
-            vr, er = row.v, (row.dsum or 0) // 2
-            for df in prev:
-                release(df)
-            prev = (deg, e)
-            if k is None:
-                k = (2 * er) // vr + 1 if vr else 1
-            traj.append((r, k, vr, er))
-            if r == _KCORE_ROUNDS:
-                break
-            keep = deg.where(F.col("d") >= k).select("node")
-            e = checkpoint(
-                e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-                .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-                .select("a", "b")
-                .localCheckpoint(eager=False)
-            )
-    for df in prev:
-        release(df)
+    traj = _kcore_peel(
+        edges.column("a").to_numpy(), edges.column("b").to_numpy(), _KCORE_ROUNDS
+    )
     return local_df(
         spark, traj, "round bigint, k bigint, n_nodes bigint, n_edges bigint"
     ).orderBy("round")

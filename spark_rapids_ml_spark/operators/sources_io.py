@@ -1055,8 +1055,9 @@ def sink_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in commits:
             c.result()
 
-    v3 = spark.read.parquet(os.path.join(root, "v3"))
-    feed = spark.read.parquet(os.path.join(root, "feed"))
+    # read back with the committed frames' schemas: no inference job
+    v3 = spark.read.schema(livef.schema).parquet(os.path.join(root, "v3"))
+    feed = spark.read.schema(feedf.schema).parquet(os.path.join(root, "feed"))
 
     state_agg = v3.groupBy(F.col("prio").alias("key")).agg(
         F.count(F.lit(1)).alias("n"),

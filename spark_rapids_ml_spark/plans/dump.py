@@ -2,12 +2,15 @@
 
 Usage: ``python -m spark_rapids_ml_spark.plans.dump [out.md]``
 Writes PLANS.md (default) with the post-AQE executed plan of every
-bench-flagged query at sf0.001, so plan regressions are reviewable in
-diffs — the `.explain("formatted")` discipline, captured.
+bench-flagged query at ``$SPARK_GRAFT_SF_DIR`` (default sf0.001), so
+plan regressions are reviewable in diffs — the `.explain("formatted")`
+discipline, captured. The session is ``get_spark``'s default width
+(``session.DEFAULT_CPUS``), as in ``bench.py``.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 from spark_rapids_ml_spark.plans.explain import plan_of, pushed_filters, read_schema
@@ -42,13 +45,14 @@ EXTRA_PLANS = (
 
 def main() -> None:
     out = sys.argv[1] if len(sys.argv) > 1 else "PLANS.md"
-    spark = get_spark("plan-dump", cpus=8, shuffle_partitions=8)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF)
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     sections = []
     for name, spec in sorted(all_queries().items()):
         if not (spec.bench or name in EXTRA_PLANS):
             continue
-        df = spec.fn(spark, SF)
+        df = spec.fn(spark, sf_dir)
         df.collect()  # finalize AQE
         body = plan_of(df)
         pf, rs = pushed_filters(df), read_schema(df)
@@ -61,7 +65,7 @@ def main() -> None:
     with open(out, "w") as f:
         f.write(
             "# PLANS — executed physical plans of the bench headline set\n\n"
-            f"Generated by `python -m spark_rapids_ml_spark.plans.dump` at sf0.001.\n\n"
+            f"Generated by `python -m spark_rapids_ml_spark.plans.dump` at `{sf_dir}`.\n\n"
             + "\n".join(sections)
         )
     print(f"wrote {out} ({len(sections)} plans)")

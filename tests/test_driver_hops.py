@@ -47,7 +47,7 @@ ALLOWED = {
         ".limit(CLUSTER_LOCAL_EDGE_CAP + 1).collect()",  # explicit cap
     },
     "operators/graph.py": {
-        'F.count(F.lit(1)).alias("v"), F.sum("d").alias("dsum")',  # k-core round stats: ONE row per round
+        "toArrow()  # bounded: the key-capped edge slice",  # k-core edge slice: orders with key <= 30000, <= 30000 x C(7,2) = 630k int64 pairs (~10 MB) at any SF
         "rows = out.collect()  # bounded: top-25 communities",  # LPA result after limit(25); lets the caches release before return
         "rows = out.collect()  # 1-row verdict",  # modularity Q: ONE aggregate row; lets the shared LPA caches release before return
     },
